@@ -119,7 +119,7 @@ def run_bench(sf_dir: str, cpus: int, pages_n: int | None = None) -> dict:
         t2 = time.time()
         pairs = dedup_pairs(nodes, candidates=cands)
         actions = dedup_actions(pairs, nodes, edges)
-        cnodes, cedges = canonicalize(nodes, edges, actions)
+        cnodes, cedges, _ = canonicalize(nodes, edges, actions)
         n_cedges = cedges.count()
         t_canon = time.time() - t2
 

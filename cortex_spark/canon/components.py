@@ -117,9 +117,9 @@ def _driver_components(rows) -> list[tuple]:
     for every node on an edge, component = min member id — the exact output
     contract of the distributed kernel (self-loops already filtered).
 
-    Reference implementation: the hot path is _driver_components_np below
-    (vectorized, same output — tests pin the equivalence); this stays as the
-    obviously-correct oracle and the fallback for exotic id types."""
+    Reference implementation only: nothing in the package dispatches here.
+    The hot path is _driver_components_np below (vectorized, same output);
+    this stays as the obviously-correct oracle tests pin it against."""
     parent: dict = {}
 
     def find(x):

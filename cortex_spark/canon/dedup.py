@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cortex_spark.linker.lsh import brute_force_pairs, candidate_topk
+from cortex_spark.linker.pipeline import linkable
 
 SUPERSEDE_SIM = 0.98
 IMPORTANCE_GAP = 0.3
@@ -50,7 +51,7 @@ def dedup_pairs(
     Pass `candidates` (linker.pipeline.ann_candidates output) to reuse the
     linker's candidate structure instead of recomputing the similarity join.
     """
-    live = nodes.filter(~F.coalesce(F.col("deleted"), F.lit(False))).filter(F.col("embedding").isNotNull())
+    live = linkable(nodes)
     if candidates is not None or use_lsh:
         # threshold search via top-k candidates (dedup-grade pairs are always
         # within a node's top neighbors), canonicalized to a_id < b_id

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 
 from cortex_spark.canon.components import connected_components
 from cortex_spark.canon.dedup import degree
+from cortex_spark.linker.pipeline import edge_id
 
 
 def _ts_lit(run_ts: datetime):
@@ -251,7 +252,7 @@ def dedup_edges_for_actions(actions: DataFrame, cmap: DataFrame, run_ts: datetim
         .drop("_rn")
     )
     return out.select(
-        F.sha2(F.concat_ws("\x00", "src", "dst", "relation"), 256).substr(1, 32).alias("edge_id"),
+        edge_id().alias("edge_id"),
         "src",
         "dst",
         "relation",
@@ -271,8 +272,9 @@ def canonicalize(
     edges: DataFrame,
     actions: DataFrame,
     run_ts: datetime | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Apply all dedup actions; returns (nodes', edges')."""
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Apply all dedup actions; returns (nodes', edges', cmap), where cmap is
+    the (node_id, canonical) map of every retired node (`canonical_map`)."""
     run_ts = run_ts or datetime(2026, 1, 1, tzinfo=timezone.utc)
     # actions is tiny (one row per dedup action) but its lineage is the full
     # dedup_actions plan; it is referenced by canonical_map (merge filter)
@@ -313,4 +315,4 @@ def canonicalize(
         *[F.col(c) if c in keys else F.col(f"p.{c}").alias(c) for c in out_cols]
     )
     new_nodes = merge_node_attrs(nodes, cmap, run_ts)
-    return new_nodes, all_edges
+    return new_nodes, all_edges, cmap

@@ -9,13 +9,14 @@ Spark-native equivalent is random-hyperplane LSH:
 
 Recall/precision is tunable via (n_planes, bands): bands·rows = n_planes;
 P(pair shares ≥1 band) = 1-(1-s^rows)^bands where s = 1-θ/π for cosine
-angle θ. Defaults (16 planes, 8 bands × 2 rows) keep recall ≥ ~0.98 at
-cos ≥ 0.75 for 384-d hashed-token embeddings.
+angle θ. Defaults: 60 planes, 20 bands × 3 rows (DEFAULT_PLANES /
+DEFAULT_BANDS); `candidate_topk` adapts (rows, bands) to the corpus size
+unless n_planes is given (`choose_lsh_params`).
 
-Scale notes (100 TB): the join key (band, sig) is explicitly salted-capped —
-buckets larger than `max_bucket` are dropped with a metric (hot-bucket
-guard; AQE skew-join splits the rest). Signature computation is one numpy
-matmul per Arrow batch.
+Scale notes (100 TB): hot buckets are truncated to their first
+`max_bucket` rows in id order (`candidate_pairs`) or surrogate-id order
+(`candidate_topk`); no counter records the truncation. AQE skew-join
+splits the rest. Signature computation is one numpy matmul per Arrow batch.
 """
 
 from __future__ import annotations
@@ -390,7 +391,6 @@ def candidate_topk(
     design_sim: float = 0.75,
     center=None,
     _hash_fn=None,
-    _stage: str = "full",
 ) -> DataFrame:
     """Per-node top-k neighbors via bucketed GEMM — the scale path for the
     ANN candidate join (J1) and the distributed analogue of per-node HNSW
@@ -587,8 +587,6 @@ def candidate_topk(
         sigs.repartition(n_parts0, "sig")
         .mapInArrow(bucket_topk_partition, schema="a_id long, bs binary, ss binary")
     )
-    if _stage == "gemm":  # measurement seam: stop after the GEMM stage
-        return per_bucket
 
     def merge_topk(batches) -> "Iterator[pa.RecordBatch]":
         """Per-node merge: max score per neighbor, then per-node top-k by
@@ -672,8 +670,6 @@ def candidate_topk(
     merged = per_bucket.repartition(n_parts_merge, "a_id").mapInArrow(
         merge_topk, schema="a_id long, b_id long, score double"
     )
-    if _stage == "merge":  # measurement seam: surrogate ids, no map-back
-        return merged
     a_map = id_map.select(F.col("nid").alias("a_id"), F.col("sid").alias("a_sid"))
     b_map = id_map.select(F.col("nid").alias("b_id"), F.col("sid").alias("b_sid"))
     # map-back joins: broadcast only while the id map actually fits the

@@ -6,9 +6,10 @@ Distributed re-expression of AutoLinker::run_cycle (auto_linker.rs:185-364):
   epoch reset, :137-182) → nodes with created_at/updated_at > cursor (W6,
   graph/temporal.rs:38-53), take ≤ max_nodes_per_cycle oldest-first →
   LSH-probe top-k against the FULL live node table (new nodes are queries,
-  not a self-join — the incremental candidate join) → rule pass →
-  anti-join existing edges (J11) → per-node + per-cycle caps (W7) →
-  append edges + advance cursor + persist metrics (A7).
+  not a self-join — the incremental candidate join) → rule pass → the link
+  tail batch linking uses too (`linker.pipeline.link_tail`: anti-join
+  existing edges (J11), first-rule-wins, per-node cap, plus the per-cycle
+  cap) → append edges + advance cursor + persist metrics (A7).
 
 Cursor + cycle count + config hash live in a JSON meta file (the analogue of
 the reference's meta table / an Iceberg snapshot pointer).
@@ -20,10 +21,10 @@ import json
 import os
 from datetime import datetime, timedelta, timezone
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cortex_spark.linker.pipeline import _attach_attrs
+from cortex_spark.linker.pipeline import _attach_attrs, link_tail, linkable
 from cortex_spark.linker.rules import LinkerConfig, apply_link_rules
 
 MAX_NODES_PER_CYCLE = 500  # linker/config.rs:56-74
@@ -97,7 +98,7 @@ def run_cycle(
         cycle = meta.get("cycle", 0)
 
     cursor_lit = F.to_timestamp(F.lit(cursor.strftime("%Y-%m-%d %H:%M:%S")))
-    live = nodes.filter(~F.coalesce(F.col("deleted"), F.lit(False))).filter(F.col("embedding").isNotNull())
+    live = linkable(nodes)
     fresh = select_fresh(live, cursor_lit, max_nodes_per_cycle).localCheckpoint(eager=True)
     n_fresh = fresh.count()
     if n_fresh == 0:
@@ -126,35 +127,9 @@ def run_cycle(
             k=cfg.ann_k,
         ).select(F.col("query_id").alias("a_id"), F.col("neighbor_id").alias("b_id"), "score")
 
-    with_attrs = _attach_attrs(pairs, live)
-    proposed = apply_link_rules(with_attrs, cfg)
-    proposed = proposed.join(
-        existing_edges.select("src", "dst", "relation"), ["src", "dst", "relation"], "left_anti"
-    )
-    from cortex_spark.linker.pipeline import first_rule_wins
-
-    w_cap = Window.partitionBy("src").orderBy(F.desc("score"), F.asc("dst"), F.asc("priority"))
-    capped = (
-        first_rule_wins(proposed)
-        .withColumn("cap_rn", F.row_number().over(w_cap))
-        .filter(F.col("cap_rn") <= cfg.max_edges_per_node)
-        .drop("cap_rn")
-        # per-cycle global cap, deterministic order (auto_linker.rs:283-287)
-        .orderBy(F.asc("src"), F.desc("score"), F.asc("dst"))
-        .limit(max_edges_per_cycle)
-    )
-    ts = F.to_timestamp(F.lit(now.strftime("%Y-%m-%d %H:%M:%S")))
-    new_edges = capped.select(
-        F.sha2(F.concat_ws("\x00", "src", "dst", "relation"), 256).substr(1, 32).alias("edge_id"),
-        "src",
-        "dst",
-        "relation",
-        F.col("weight").cast("float").alias("weight"),
-        F.struct(
-            F.col("ptype").alias("ptype"), F.col("detail").alias("detail"), F.col("pscore").alias("score")
-        ).alias("provenance"),
-        ts.alias("created_at"),
-        ts.alias("updated_at"),
+    proposed = apply_link_rules(_attach_attrs(pairs, live, cfg), cfg)
+    new_edges = link_tail(
+        proposed, cfg, now, existing_edges, max_edges=max_edges_per_cycle
     ).localCheckpoint(eager=True)
 
     n_edges = new_edges.count()

@@ -14,7 +14,9 @@ Run:  spark-submit --py-files cortex_spark.zip -m cortex_spark.pipeline.run
 from __future__ import annotations
 
 import argparse
+import functools
 import json
+import os
 import time
 from dataclasses import asdict, dataclass, field
 from datetime import datetime, timezone
@@ -25,7 +27,6 @@ from pyspark.sql import functions as F
 from cortex_spark.canon.dedup import dedup_actions, dedup_pairs
 from cortex_spark.canon.merge import canonicalize
 from cortex_spark.extract.fused import pages_to_nodes_fused
-from cortex_spark.extract.pipeline import pages_to_nodes
 from cortex_spark.linker.pipeline import link_nodes
 from cortex_spark.linker.rules import LinkerConfig
 from cortex_spark.pipeline.checkpoint import CheckpointStore, config_hash
@@ -40,9 +41,6 @@ class PipelineConfig:
     lsh_planes: int = 16
     lsh_bands: int = 8
     run_dedup: bool = True
-    # single-Python-pass extraction kernel (extract/fused.py) — bit-identical
-    # to the 3-UDF path (pytest-asserted) but one Arrow boundary instead of 3
-    fused_extract: bool = True
     linker: LinkerConfig = field(default_factory=LinkerConfig)
     run_ts: str = "2026-01-01 00:00:00"
 
@@ -68,11 +66,10 @@ def run_pipeline(
     t0 = time.time()
     summary: dict = {"config_hash": h, "stages": {}}
 
-    extract_fn = pages_to_nodes_fused if cfg.fused_extract else pages_to_nodes
     nodes, r1 = store.load_or_run(
         "nodes",
         h,
-        lambda: extract_fn(
+        lambda: pages_to_nodes_fused(
             pages, langs=cfg.langs, embed_dim=cfg.embed_dim, embed_seed=cfg.embed_seed
         ),
         partition_by=["kind"],
@@ -80,18 +77,19 @@ def run_pipeline(
     summary["stages"]["nodes"] = asdict(r1)
 
     lsh_kwargs = {"n_planes": cfg.lsh_planes, "bands": cfg.lsh_bands}
-    cand_cache: dict = {}
 
+    # The candidate and canon results below are built lazily, at most once
+    # per build: only when a stage that needs them is not resumed.
+    @functools.cache
     def _cands() -> DataFrame:
         # the similarity join is the expensive kernel — compute once, share
-        # between the linker and the dedup scanner
-        if "c" not in cand_cache:
-            from cortex_spark.linker.pipeline import ann_candidates
+        # between the linker and the dedup scanner. Looked up at call time, so
+        # a wrapper installed on linker.pipeline (perfbench --trace) sees it.
+        from cortex_spark.linker.pipeline import ann_candidates
 
-            cand_cache["c"] = ann_candidates(
-                nodes, cfg.linker, use_lsh=cfg.use_lsh, lsh_kwargs=lsh_kwargs
-            ).localCheckpoint()
-        return cand_cache["c"]
+        return ann_candidates(
+            nodes, cfg.linker, use_lsh=cfg.use_lsh, lsh_kwargs=lsh_kwargs
+        ).localCheckpoint()
 
     edges, r2 = store.load_or_run(
         "edges",
@@ -101,38 +99,28 @@ def run_pipeline(
     )
     summary["stages"]["edges"] = asdict(r2)
 
+    @functools.cache
+    def _canon() -> tuple[DataFrame, DataFrame, DataFrame]:
+        # (nodes', edges', canonical map): both canonical stages and the
+        # audit log share one canonicalize
+        pairs = dedup_pairs(nodes, cfg.linker.dedup_threshold, candidates=_cands())
+        actions = dedup_actions(pairs, nodes, edges)
+        return canonicalize(nodes, edges, actions, run_ts=cfg.run_dt)
+
     if cfg.run_dedup:
-        def _canon_nodes() -> DataFrame:
-            from cortex_spark.canon.merge import canonical_map
-
-            pairs = dedup_pairs(nodes, cfg.linker.dedup_threshold, candidates=_cands())
-            actions = dedup_actions(pairs, nodes, edges)
-            n2, e2 = canonicalize(nodes, edges, actions, run_ts=cfg.run_dt)
-            # stash edges + canonical map (for the audit log) via closure
-            _canon_nodes.edges = e2  # type: ignore[attr-defined]
-            _canon_nodes.cmap = canonical_map(actions, nodes, edges)  # type: ignore[attr-defined]
-            return n2
-
-        cnodes, r3 = store.load_or_run("canonical_nodes", h, _canon_nodes, partition_by=["kind"])
+        cnodes, r3 = store.load_or_run(
+            "canonical_nodes", h, lambda: _canon()[0], partition_by=["kind"]
+        )
         summary["stages"]["canonical_nodes"] = asdict(r3)
-
-        def _canon_edges() -> DataFrame:
-            if hasattr(_canon_nodes, "edges"):
-                return _canon_nodes.edges  # computed this run
-            pairs = dedup_pairs(nodes, cfg.linker.dedup_threshold, candidates=_cands())
-            actions = dedup_actions(pairs, nodes, edges)
-            _, e2 = canonicalize(nodes, edges, actions, run_ts=cfg.run_dt)
-            return e2
-
-        cedges, r4 = store.load_or_run("canonical_edges", h, _canon_edges, partition_by=["relation"])
+        cedges, r4 = store.load_or_run(
+            "canonical_edges", h, lambda: _canon()[1], partition_by=["relation"]
+        )
         summary["stages"]["canonical_edges"] = asdict(r4)
     else:
         cnodes, cedges = nodes, edges
 
     # append-only audit log (policies/audit.rs analogue): one row per
     # mutation, derived from stage outputs; only for stages that ran fresh
-    import os
-
     from cortex_spark.audit import AuditLog, audit_entries, canonicalization_audit
 
     alog = AuditLog(os.path.join(out_dir, "audit"), spark)
@@ -140,9 +128,9 @@ def run_pipeline(
         alog.append(audit_entries(nodes, "node.created", cfg.run_dt, actor="ingest"))
     if not r2.resumed:
         alog.append(audit_entries(edges, "edge.created", cfg.run_dt, actor="auto_linker", id_col="edge_id"))
-    if cfg.run_dedup and not r3.resumed and hasattr(_canon_nodes, "cmap"):
+    if cfg.run_dedup and not r3.resumed:
         dedup_e = cedges.filter(F.col("provenance.ptype") == "auto_dedup")
-        alog.append(canonicalization_audit(nodes, _canon_nodes.cmap, dedup_e, cfg.run_dt))
+        alog.append(canonicalization_audit(nodes, _canon()[2], dedup_e, cfg.run_dt))
     summary["audit_rows"] = alog.read().count()
 
     summary["wall_secs"] = time.time() - t0

@@ -67,7 +67,7 @@ t_link = time.time() - t1
 t2 = time.time()
 pairs = dedup_pairs(nodes, candidates=cands)
 actions = dedup_actions(pairs, nodes, edges)
-cnodes, cedges = canonicalize(nodes, edges, actions)
+cnodes, cedges, _ = canonicalize(nodes, edges, actions)
 cedges = cedges.localCheckpoint()
 n_cedges = cedges.count()
 t_canon = time.time() - t2

@@ -155,7 +155,7 @@ edges = spark.read.parquet({work!r} + "/edges")
 cands = spark.read.parquet({work!r} + "/cands")
 pairs = dedup_pairs(nodes, candidates=cands)
 actions = dedup_actions(pairs, nodes, edges)
-cnodes, cedges = canonicalize(nodes, edges, actions)
+cnodes, cedges, _ = canonicalize(nodes, edges, actions)
 cedges.write.mode("overwrite").parquet({work!r} + "/cedges")
 cedges = spark.read.parquet({work!r} + "/cedges")
 n_cedges = cedges.count()

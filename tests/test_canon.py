@@ -81,7 +81,7 @@ def test_canonicalize_merge_semantics(spark, nodes_df_factory, edges_df_factory)
     )
     pairs = _pairs(spark, [("A", "B", 0.93)])
     actions = dedup_actions(pairs, nodes, edges)
-    n2, e2 = canonicalize(nodes, edges, actions, run_ts=datetime(2026, 2, 1))
+    n2, e2, _ = canonicalize(nodes, edges, actions, run_ts=datetime(2026, 2, 1))
 
     a = n2.filter("node_id = 'A'").first()
     assert a["tags"] == ["t1", "t2", "t3"]  # order-preserving union (A8)
@@ -107,7 +107,7 @@ def test_merge_chain_collapses_to_single_canonical(spark, nodes_df_factory, edge
         [("A", "B", 0.93, "merge", "A", "B"), ("B", "C", 0.93, "merge", "B", "C")],
         "a_id string, b_id string, score double, action string, keep string, retire string",
     )
-    n2, e2 = canonicalize(nodes, edges, actions, run_ts=datetime(2026, 2, 1))
+    n2, e2, _ = canonicalize(nodes, edges, actions, run_ts=datetime(2026, 2, 1))
     tomb = {r["node_id"] for r in n2.filter("deleted").collect()}
     assert tomb == {"B", "C"}  # A is the rep (highest degree)
 

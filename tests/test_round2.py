@@ -177,7 +177,7 @@ def test_pipeline_writes_audit_rows(spark, tmp_path):
 def test_canonicalization_audit_merge_and_tombstone(spark, nodes_df_factory, edges_df_factory):
     """merge → node.merged + node.deleted (tombstone) + edge.created rows."""
     from cortex_spark.audit import canonicalization_audit
-    from cortex_spark.canon.merge import canonical_map, canonicalize
+    from cortex_spark.canon.merge import canonicalize
 
     # rep rule is (degree desc, importance desc, node_id asc): a carries the
     # edge so it wins the component representative election
@@ -187,8 +187,7 @@ def test_canonicalization_audit_merge_and_tombstone(spark, nodes_df_factory, edg
         [("merge", "a", "b", 0.99, "a", "b")],
         "action string, keep string, retire string, score double, a_id string, b_id string",
     )
-    cmap = canonical_map(actions, nodes, edges)
-    n2, e2 = canonicalize(nodes, edges, actions, run_ts=datetime(2026, 1, 1))
+    n2, e2, cmap = canonicalize(nodes, edges, actions, run_ts=datetime(2026, 1, 1))
     dedup_e = e2.filter(F.col("provenance.ptype") == "auto_dedup")
     audit = canonicalization_audit(nodes, cmap, dedup_e, datetime(2026, 1, 1))
     rows = {(r["action"], r["target_id"]) for r in audit.collect()}
