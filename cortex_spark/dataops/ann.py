@@ -23,20 +23,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from cortex_spark.functions.similarity import dot_col, l2_norm_col
+from cortex_spark.functions.similarity import cosine_from_norms, l2_norm_col
 from cortex_spark.linker.lsh import add_lsh_bands
-
-
-def _cosine_from_norms(q_vec, c_vec, q_norm, c_norm):
-    """cosine(q, c) with the per-row L2 norms factored out of the pair join.
-
-    cosine_col would re-evaluate both interpreted norm aggregates once per
-    PAIR (|corpus|x|queries| times); computing each row's norm once before
-    the join cuts the per-pair work to the dot product alone. Bit-identical
-    to cosine_col: same fold order, same doubles, and IEEE multiplication is
-    commutative so q_norm*c_norm == l2(q)*l2(c) exactly."""
-    denom = q_norm * c_norm
-    return F.when(denom == 0.0, F.lit(0.0)).otherwise(dot_col(q_vec, c_vec) / denom)
 
 
 def ann_topk_bruteforce(
@@ -65,7 +53,7 @@ def ann_topk_bruteforce(
         .select(
             "query_id",
             "neighbor_id",
-            _cosine_from_norms(
+            cosine_from_norms(
                 F.col("q_vec"), F.col("c_vec"), F.col("q_norm"), F.col("c_norm")
             ).alias("score"),
         )
@@ -108,7 +96,7 @@ def ann_topk_lsh(
         .dropDuplicates(["query_id", "neighbor_id"])
         .select(
             "query_id", "neighbor_id",
-            _cosine_from_norms(
+            cosine_from_norms(
                 F.col("q_vec"), F.col("c_vec"), F.col("q_norm"), F.col("c_norm")
             ).alias("score"),
         )
@@ -234,7 +222,7 @@ def ann_topk_ivf(
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select(
             "query_id", "neighbor_id",
-            _cosine_from_norms(
+            cosine_from_norms(
                 F.col("q_vec"), F.col("c_vec"), F.col("q_norm"), F.col("c_norm")
             ).alias("score"),
         )
@@ -305,7 +293,7 @@ class IvfIndexStore:
             .filter(F.col("query_id") != F.col("neighbor_id"))
             .select(
                 "query_id", "neighbor_id",
-                _cosine_from_norms(
+                cosine_from_norms(
                     F.col("q_vec"), F.col("c_vec"), F.col("q_norm"), F.col("c_norm")
                 ).alias("score"),
             )

@@ -28,7 +28,15 @@ def l2_norm_col(a: Column) -> Column:
 
 def cosine_col(a: Column, b: Column) -> Column:
     """cosine(a,b); 0.0 when either norm is 0 (index.rs:174-176)."""
-    denom = l2_norm_col(a) * l2_norm_col(b)
+    return cosine_from_norms(a, b, l2_norm_col(a), l2_norm_col(b))
+
+
+def cosine_from_norms(a: Column, b: Column, a_norm: Column, b_norm: Column) -> Column:
+    """cosine_col with each vector's `l2_norm_col` computed once per row
+    before a pair join, not once per pair. Bit-identical to cosine_col: the
+    same double expressions (IEEE multiplication is commutative, so the
+    operand order of the norms does not matter)."""
+    denom = a_norm * b_norm
     return F.when(denom == 0.0, F.lit(0.0)).otherwise(dot_col(a, b) / denom)
 
 

@@ -5,9 +5,15 @@
   types.rs:268-269).
 - export_graph: full node+edge dump for visualization
   (GET /graph/export, cortex-server/src/http/viz.rs).
+- write_json_atomic: crash-safe JSON file writes (stage manifests, the
+  incremental cursor, the LSH index meta).
 """
 
 from __future__ import annotations
+
+import contextlib
+import json
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -80,3 +86,21 @@ def export_graph(nodes: DataFrame, edges: DataFrame, out_dir: str) -> None:
     """Write the live graph as JSON (nodes/ + edges/ subdirs)."""
     nodes.filter(~F.coalesce(F.col("deleted"), F.lit(False))).drop("embedding").write.mode("overwrite").json(f"{out_dir}/nodes")
     edges.write.mode("overwrite").json(f"{out_dir}/edges")
+
+
+def write_json_atomic(path: str, obj, **dump_kw) -> None:
+    """json.dump `obj` to `path` through a sibling temp file and os.replace:
+    a reader, or a resume after a kill mid-write, sees the previous file or
+    the new one, never a torn one."""
+    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
+    tmp = f"{path}.{os.getpid()}.tmp"
+    try:
+        with open(tmp, "w") as f:
+            json.dump(obj, f, **dump_kw)
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(tmp, path)
+    except BaseException:
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(tmp)
+        raise

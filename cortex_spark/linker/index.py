@@ -11,9 +11,11 @@ distributed analogue:
 - the index is a parquet/Iceberg table of exploded (sig, node_id, embedding)
   rows, partitioned by the hash of `sig` (bucketed join key),
 - `append(fresh)` computes signatures for the FRESH nodes only and appends,
-- `probe(fresh, k)` computes the fresh side's signatures (same cost) and
-  joins them against the stored index — a shuffle proportional to the
-  probed buckets, never a corpus re-bucketing.
+- `probe(fresh, k)` computes and materializes the fresh side's signatures
+  once, then makes one pass over the stored index: one partition-pruned
+  scan, one per-sig cap, one per-stored-node aggregate and one exact
+  rescore — a shuffle proportional to the probed buckets, never a corpus
+  re-bucketing.
 
 Index staleness semantics match the reference: deleted nodes are filtered
 at probe time via the caller's live-node set (HNSW likewise keeps stale
@@ -33,7 +35,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from cortex_spark.functions.similarity import cosine_col
+from cortex_spark.functions.similarity import cosine_from_norms, l2_norm_col
+from cortex_spark.io import write_json_atomic
 from cortex_spark.linker.lsh import add_lsh_bands
 
 # Signature rows are written partitionBy("bucket") with
@@ -96,9 +99,7 @@ class LshIndexStore:
         return {"rows_indexed": 0, "appends": []}
 
     def _write_meta(self, meta: dict) -> None:
-        os.makedirs(self.path, exist_ok=True)
-        with open(self.meta_path, "w") as f:
-            json.dump(meta, f, indent=1)
+        write_json_atomic(self.meta_path, meta, indent=1)
 
     def exists(self) -> bool:
         return os.path.exists(self.data_dir)
@@ -151,22 +152,36 @@ class LshIndexStore:
     ) -> DataFrame:
         """(a_id, b_id, score): top-k stored neighbors per query node.
 
-        One shuffle join on `sig` against the stored index scan — the stored
-        side is never re-bucketed or re-embedded; only the PROBED buckets
-        (broadcast semi-join on the fresh side's sigs) are read, hot buckets
-        are capped at `max_bucket` newest-first (the same quadratic-blowup
-        guard as candidate_pairs/candidate_topk), and duplicate (a, b)
-        candidates resolve to the stored node's NEWEST appended vector
-        (max append_seq). Callers semi-join b_id against their live set to
+        One pass, each piece of work once per call: the query side's
+        signatures and norms are computed once into a materialized frame
+        (one cycle's fresh nodes or one search query; ids unique), which
+        yields both the pruned bucket values and the broadcast probe sigs.
+        The index is scanned once, in the PROBED bucket partitions only, and
+        never re-bucketed or re-embedded; each sig's hot bucket is capped at
+        `max_bucket` newest-first (the quadratic-blowup guard of
+        candidate_pairs/candidate_topk); one aggregate per stored node
+        resolves its NEWEST appended vector (max append_seq), its norm and
+        the queries it met. Callers semi-join b_id against their live set to
         drop tombstoned entries (HNSW-stale semantics)."""
         from cortex_spark.linker.lsh import DEFAULT_MAX_BUCKET
 
         idx = self.spark.read.parquet(self.data_dir)
         if "append_seq" not in idx.columns:  # pre-versioning index layout
             idx = idx.withColumn("append_seq", F.lit(0))
-        q = self._sigs(queries, id_col, vec_col).select(
-            F.col("node_id").alias("a_id"), F.col("vec").alias("a_vec"), "sig"
+        # the query side, materialized once: one row per query node with its
+        # vector, norm and band signatures (the only Arrow UDF run)
+        qn = (
+            add_lsh_bands(
+                queries, vec_col, self.dim, self.n_planes, self.bands, self.seed,
+                center=self.center,
+            )
+            .select(
+                F.col(id_col).alias("a_id"), F.col(vec_col).alias("a_vec"),
+                l2_norm_col(F.col(vec_col)).alias("a_norm"), "lsh_sigs",
+            )
+            .localCheckpoint(eager=True)
         )
+        q = qn.select("a_id", F.explode("lsh_sigs").alias("sig")).filter(F.col("sig").isNotNull())
         if "bucket" in idx.columns:
             # partition pruning: collect the probe's ≤ N_BUCKET_PARTS distinct
             # bucket values (a tiny query-side job) and filter the scan — the
@@ -200,12 +215,20 @@ class LshIndexStore:
         # a candidate surfaced via a stale version's signature still scores
         # against the newest vector those buckets know (run compact() to
         # drop superseded versions entirely)
-        latest_b = cands.groupBy("b_id").agg(
-            F.max_by(F.col("b_vec"), F.col("b_seq")).alias("b_latest")
+        latest_b = (
+            cands.groupBy("b_id")
+            .agg(
+                F.max_by(F.col("b_vec"), F.col("b_seq")).alias("b_vec"),
+                F.collect_set("a_id").alias("a_ids"),
+            )
+            .withColumn("b_norm", l2_norm_col(F.col("b_vec")))
         )
-        pairs = cands.select("a_id", "b_id", "a_vec").dropDuplicates(["a_id", "b_id"])
-        scored = pairs.join(latest_b, "b_id").select(
-            "a_id", "b_id", cosine_col(F.col("a_vec"), F.col("b_latest")).alias("score")
+        pairs = latest_b.select("b_id", "b_vec", "b_norm", F.explode("a_ids").alias("a_id"))
+        scored = pairs.join(qn, "a_id").select(
+            "a_id", "b_id",
+            cosine_from_norms(
+                F.col("a_vec"), F.col("b_vec"), F.col("a_norm"), F.col("b_norm")
+            ).alias("score"),
         )
         w = Window.partitionBy("a_id").orderBy(F.desc("score"), F.asc("b_id"))
         return scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k).drop("rn")

@@ -28,6 +28,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cortex_spark.io import write_json_atomic
+
 
 def config_hash(obj) -> str:
     import hashlib
@@ -121,8 +123,7 @@ class CheckpointStore:
             "lineage": lineage,
             "metrics": metrics,
         }
-        with open(self.manifest_path(stage), "w") as f:
-            json.dump(man, f, indent=1, sort_keys=True)
+        write_json_atomic(self.manifest_path(stage), man, indent=1, sort_keys=True)
         return out, StageResult(stage, data_dir, rows, False, metrics)
 
     def refresh_manifest(self, stage: str) -> dict | None:
@@ -138,6 +139,5 @@ class CheckpointStore:
         man["rows"] = rows
         man["metrics"]["rows"] = rows
         man["lineage"] = _lineage_entries(out, data_dir)
-        with open(self.manifest_path(stage), "w") as f:
-            json.dump(man, f, indent=1, sort_keys=True)
+        write_json_atomic(self.manifest_path(stage), man, indent=1, sort_keys=True)
         return man

@@ -24,6 +24,7 @@ from datetime import datetime, timedelta, timezone
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cortex_spark.io import write_json_atomic
 from cortex_spark.linker.pipeline import _attach_attrs, link_tail, linkable
 from cortex_spark.linker.rules import LinkerConfig, apply_link_rules
 
@@ -150,10 +151,8 @@ def run_cycle(
 
 
 def _write_meta(meta_path: str, cursor: datetime, cycle: int, chash: str, metrics: dict) -> None:
-    os.makedirs(os.path.dirname(meta_path) or ".", exist_ok=True)
-    with open(meta_path, "w") as f:
-        json.dump(
-            {"cursor": cursor.replace(tzinfo=None).isoformat(), "cycle": cycle, "config_hash": chash, "last_metrics": metrics},
-            f,
-            indent=1,
-        )
+    write_json_atomic(
+        meta_path,
+        {"cursor": cursor.replace(tzinfo=None).isoformat(), "cycle": cycle, "config_hash": chash, "last_metrics": metrics},
+        indent=1,
+    )

@@ -12,6 +12,26 @@ import os
 
 from pyspark.sql import SparkSession
 
+# the former fixed spark.driver.memory default, kept as the ceiling
+MAX_DRIVER_MEM_GB = 32
+
+
+def default_resources(cpus: int, phys_bytes: int) -> tuple[int, str]:
+    """(local cores, spark.driver.memory) for a machine with `cpus` usable
+    CPUs and `phys_bytes` of physical memory: every usable CPU, and half the
+    memory in whole GiB (at least 1g, at most 32g) — in local mode the
+    Python workers and the OS live outside that heap."""
+    mem_gb = min(MAX_DRIVER_MEM_GB, max(1, phys_bytes // 2 // 2**30))
+    return max(1, cpus), f"{mem_gb}g"
+
+
+def _machine_resources() -> tuple[int, str]:
+    try:
+        cpus = len(os.sched_getaffinity(0))
+    except AttributeError:  # no affinity API (macOS)
+        cpus = os.cpu_count() or 1
+    return default_resources(cpus, os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE"))
+
 
 def get_spark(
     app_name: str = "cortex-spark",
@@ -24,7 +44,10 @@ def get_spark(
     # (and silently lets a local[8] run use every core during GEMMs)
     for var in ("OPENBLAS_NUM_THREADS", "OMP_NUM_THREADS", "MKL_NUM_THREADS"):
         os.environ.setdefault(var, "1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    # sized from the machine unless SPARK_GRAFT_CPUS / SPARK_DRIVER_MEM say
+    # otherwise
+    machine_cpus, machine_mem = _machine_resources()
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", machine_cpus))
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
     if shuffle_partitions is None:
         # local[N] → N; a real cluster would size this 2-3× total cores.
@@ -47,7 +70,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", machine_mem))
         .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")
         .config("spark.executorEnv.OMP_NUM_THREADS", "1")
         # shuffle/spill stays on disk /tmp: measured 2× FASTER than tmpfs on

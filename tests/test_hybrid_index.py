@@ -11,10 +11,13 @@ analogue is the persisted LSH signature index. These tests pin:
   is present (same pattern as gate.LSH_ABOVE_INCOMING),
 - partition pruning: the probe's index scan carries a PartitionFilter on
   the bucket column — only probed buckets are read,
+- one pass: the probe's plan scans the index once and runs no Arrow UDF,
 - hybrid_search end-to-end through the index path (schema + blend intact).
 """
 
 from __future__ import annotations
+
+import os
 
 import numpy as np
 import pytest
@@ -149,6 +152,25 @@ def test_probe_scan_prunes_bucket_partitions(spark, corpus):
     m = _re.search(r"bucket#\d+L? IN \(([^)]*)\)", plan)
     assert m, plan
     assert 0 < len(m.group(1).split(",")) < N_BUCKET_PARTS
+
+
+def test_probe_plan_is_one_pass(spark, corpus):
+    """The frame probe returns reads the query side from its materialized
+    signatures (no Arrow UDF re-run) and scans the index exactly once."""
+    import re as _re
+
+    nodes, store = corpus
+    qdf = nodes.limit(1).select("node_id", "embedding")
+    plan = store.probe(qdf, k=5)._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    )
+    assert "ArrowEvalPython" not in plan, plan
+    index_data = os.path.join(os.path.basename(store.path), "data")
+    scans = [
+        loc for loc in _re.findall(r"Location: \S+ \[([^\]]*)\]", plan)
+        if loc.rstrip("/").endswith(index_data)
+    ]
+    assert len(scans) == 1, plan
 
 
 def test_hybrid_search_through_index(spark, corpus, edges_df_factory):

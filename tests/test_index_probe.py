@@ -1,0 +1,172 @@
+"""LshIndexStore.probe: the one-pass plan returns exactly what the earlier
+plan did.
+
+`_probe_oracle` is the earlier probe body, kept verbatim as the oracle: it
+re-derives the query signatures per use, scans and caps the index twice and
+computes both norms per pair. Every case compares the `(a_id, b_id, score)`
+rows with `==` — scores must be bit-identical, not close:
+
+- a re-appended (updated) node whose STALE signature surfaces it scores
+  against its newest vector;
+- `exclude_self` both ways;
+- hot buckets past the cap (`DEFAULT_MAX_BUCKET` patched small);
+- an all-zero embedding scores 0.0;
+- a `k` that cuts inside a score tie keeps the lowest ids.
+"""
+
+from __future__ import annotations
+
+import numpy as np
+import pytest
+from pyspark.sql import DataFrame, Window
+from pyspark.sql import functions as F
+
+from cortex_spark.functions.similarity import cosine_col
+from cortex_spark.linker import lsh
+from cortex_spark.linker.index import N_BUCKET_PARTS, LshIndexStore
+
+DIM = 8
+SCHEMA = "node_id string, embedding array<float>"
+
+
+def _probe_oracle(
+    store: LshIndexStore,
+    queries: DataFrame,
+    k: int = 10,
+    id_col: str = "node_id",
+    vec_col: str = "embedding",
+    exclude_self: bool = True,
+) -> DataFrame:
+    from cortex_spark.linker.lsh import DEFAULT_MAX_BUCKET
+
+    idx = store.spark.read.parquet(store.data_dir)
+    if "append_seq" not in idx.columns:
+        idx = idx.withColumn("append_seq", F.lit(0))
+    q = store._sigs(queries, id_col, vec_col).select(
+        F.col("node_id").alias("a_id"), F.col("vec").alias("a_vec"), "sig"
+    )
+    if "bucket" in idx.columns:
+        bvals = [
+            r["b"]
+            for r in q.select(
+                F.pmod(F.xxhash64("sig"), F.lit(N_BUCKET_PARTS)).alias("b")
+            ).distinct().collect()
+        ]
+        idx = idx.filter(F.col("bucket").isin(bvals))
+    idx = idx.select(
+        F.col("node_id").alias("b_id"), F.col("vec").alias("b_vec"), "sig",
+        F.col("append_seq").alias("b_seq"),
+    )
+    probe_sigs = q.select("sig").distinct()
+    idx_hit = idx.join(F.broadcast(probe_sigs), "sig")
+    w_cap = Window.partitionBy("sig").orderBy(F.desc("b_seq"), F.asc("b_id"))
+    idx_hit = (
+        idx_hit.withColumn("rn", F.row_number().over(w_cap))
+        .filter(F.col("rn") <= DEFAULT_MAX_BUCKET)
+        .drop("rn")
+    )
+    cands = idx_hit.join(q, "sig")
+    if exclude_self:
+        cands = cands.filter(F.col("a_id") != F.col("b_id"))
+    latest_b = cands.groupBy("b_id").agg(
+        F.max_by(F.col("b_vec"), F.col("b_seq")).alias("b_latest")
+    )
+    pairs = cands.select("a_id", "b_id", "a_vec").dropDuplicates(["a_id", "b_id"])
+    scored = pairs.join(latest_b, "b_id").select(
+        "a_id", "b_id", cosine_col(F.col("a_vec"), F.col("b_latest")).alias("score")
+    )
+    w = Window.partitionBy("a_id").orderBy(F.desc("score"), F.asc("b_id"))
+    return scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k).drop("rn")
+
+
+def _rows(df: DataFrame) -> set[tuple]:
+    return {(r["a_id"], r["b_id"], r["score"]) for r in df.collect()}
+
+
+def _vec(v) -> list[float]:
+    return [float(x) for x in np.asarray(v, dtype=np.float32)]
+
+
+@pytest.fixture(scope="module")
+def index(spark, tmp_path_factory):
+    """A coarse index (4 planes in 2 bands ⇒ ≤ 4 buckets per band, so buckets
+    are hot) holding 40 random nodes, three identical copies of `w`, a zero
+    vector, and node `u` appended twice: first at `q`, then at `-q`, whose
+    signature shares no band with `q`'s."""
+    rng = np.random.default_rng(3)
+    q = rng.standard_normal(DIM)
+    w = rng.standard_normal(DIM)
+    base = [(f"r{i:02d}", _vec(rng.standard_normal(DIM))) for i in range(40)]
+    base += [(f"t{i}", _vec(w)) for i in range(3)]
+    base += [("z_store", [0.0] * DIM), ("u", _vec(q))]
+    store = LshIndexStore(
+        str(tmp_path_factory.mktemp("probe") / "lsh"), spark, dim=DIM, n_planes=4, bands=2
+    )
+    store.append(spark.createDataFrame(base, SCHEMA))
+    store.append(spark.createDataFrame([("u", _vec(-q))], SCHEMA))
+    queries = spark.createDataFrame(
+        [("q_u", _vec(q)), ("q_neg", _vec(-q)), ("q_t", _vec(w)), ("z_query", [0.0] * DIM),
+         ("r00", base[0][1])]
+        + [(f"q{i}", _vec(rng.standard_normal(DIM))) for i in range(5)],
+        SCHEMA,
+    ).localCheckpoint(eager=True)
+    return store, queries, q
+
+
+@pytest.mark.parametrize("exclude_self", [True, False])
+def test_probe_matches_oracle(index, exclude_self):
+    store, queries, _ = index
+    for k in (2, 50):  # k=2 cuts inside q_t's three-way tie
+        want = _rows(_probe_oracle(store, queries, k=k, exclude_self=exclude_self))
+        got = _rows(store.probe(queries, k=k, exclude_self=exclude_self))
+        assert got == want, (k, got ^ want)
+    # r00 is both a query and a stored node: it meets itself only when
+    # exclude_self is off
+    assert (("r00", "r00") in {(a, b) for a, b, _ in got}) is not exclude_self
+
+
+def test_stale_signature_scores_newest_vector(index):
+    """`u` is reachable from q_u only through its first version's
+    signature; q_neg probes the second version's buckets, so that version
+    is visible and q_u must score against it (-q), i.e. -1."""
+    store, queries, _ = index
+    got = {(a, b): s for a, b, s in _rows(store.probe(queries, k=50))}
+    assert got[("q_u", "u")] == pytest.approx(-1.0)
+
+
+def test_newest_version_resolved_after_exclude_self(spark, index):
+    """`u` probes with its current vector (-q), as a re-appended fresh node
+    does in a cycle. Its self-match is the only row that sees its second
+    version, so with exclude_self that version stays invisible and q_u
+    scores against the first (+1); without it, against the second (-1)."""
+    store, _, q = index
+    queries = spark.createDataFrame([("u", _vec(-q)), ("q_u", _vec(q))], SCHEMA)
+    for exclude_self, want_score in ((True, 1.0), (False, -1.0)):
+        got = _rows(store.probe(queries, k=50, exclude_self=exclude_self))
+        assert got == _rows(_probe_oracle(store, queries, k=50, exclude_self=exclude_self))
+        assert {(a, b): s for a, b, s in got}[("q_u", "u")] == pytest.approx(want_score)
+
+
+def test_zero_embedding_scores_zero(index):
+    store, queries, _ = index
+    got = {(a, b): s for a, b, s in _rows(store.probe(queries, k=50))}
+    assert got[("z_query", "z_store")] == 0.0
+    assert all(s == 0.0 for (a, _), s in got.items() if a == "z_query")
+
+
+def test_k_cuts_inside_a_tie(index):
+    """t0, t1, t2 are identical vectors, so q_t ties on all three; k=2
+    keeps the lowest ids."""
+    store, queries, _ = index
+    got = sorted((b, s) for a, b, s in _rows(store.probe(queries, k=2)) if a == "q_t")
+    assert [b for b, _ in got] == ["t0", "t1"]
+    assert got[0][1] == got[1][1]
+
+
+def test_hot_bucket_cap_matches_oracle(index, monkeypatch):
+    store, queries, _ = index
+    uncapped = _rows(store.probe(queries, k=50))
+    monkeypatch.setattr(lsh, "DEFAULT_MAX_BUCKET", 3)
+    got = _rows(store.probe(queries, k=50))
+    assert got != uncapped  # the cap bites
+    assert got == _rows(_probe_oracle(store, queries, k=50))

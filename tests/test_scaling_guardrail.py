@@ -17,6 +17,7 @@ than reporting noise.
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 
@@ -30,7 +31,7 @@ HEALTHY_GEMMS_8 = 1800.0  # bench.py host_probe reference for 8 procs
 def test_kg_job_scales_2_to_8():
     import sys
 
-    sys.path.insert(0, "/root/repo/scripts")
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts"))
     from bench import host_probe
     from bench_scaling import one_run
 
