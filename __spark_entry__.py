@@ -1305,8 +1305,7 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-pairs over documents via the native md5 bit-majority
     kernel (dataops/dedup.py:simhash_pairs_native) — candidate = any 16-bit
     chunk equal, exact Hamming rescore ≤ 16. Fully SQL-expressible, so this
-    is oracle-checked end to end (the blake2b pandas-UDF variant stays as
-    the §2.12 kernel demo, pytest-verified)."""
+    is oracle-checked end to end."""
     from cortex_spark.dataops.dedup import simhash_pairs_native
 
     return simhash_pairs_native(_docs(spark, sf_dir), max_hamming=16)

@@ -7,7 +7,8 @@ Prints ONE JSON line:
 The KG job runs on a synthetic page corpus scaled off the sf dir (pages =
 40 × |documents|, i.e. sf0.1 → 20k pages) and reports nodes/sec and
 triples/sec alongside the per-query latencies. Set SPARK_GRAFT_BENCH_PAGES
-to override the corpus size, SPARK_GRAFT_CPUS for parallelism.
+to override the corpus size, SPARK_GRAFT_CPUS for parallelism (default:
+the CPUs this process may run on, as cortex_spark.session sizes a session).
 """
 
 from __future__ import annotations
@@ -274,7 +275,9 @@ def run_scaling(n_pages: int, pair: tuple[int, int] = (2, 8)) -> dict:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    from cortex_spark.session import _machine_resources
+
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", _machine_resources()[0]))
     out = run_bench(sf_dir, cpus)
     if os.environ.get("SPARK_GRAFT_BENCH_SCALING", "1") != "0":
         try:

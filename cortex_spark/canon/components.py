@@ -46,7 +46,7 @@ DRIVER_CC_MAX_EDGES = int(os.environ.get("CORTEX_CC_DRIVER_MAX_EDGES", "4000000"
 # already returns — round 1 always runs adaptive, and past the threshold
 # AQE stays on so skew-splitting and partition coalescing protect the
 # 100 TB regime. Session setting is restored on exit.
-CC_AQE_OFF_MAX_ROWS = int(os.environ.get("CORTEX_CC_AQE_OFF_MAX_ROWS", "20000000"))
+CC_AQE_OFF_MAX_ROWS = 20_000_000
 
 
 def _neighborhoods(edges: DataFrame) -> DataFrame:
@@ -112,37 +112,6 @@ def _signature(edges: DataFrame) -> int:
     return (int(row["sig"]), int(row["n"]))
 
 
-def _driver_components(rows) -> list[tuple]:
-    """Union-find over collected (src, dst) rows; emits (node, component)
-    for every node on an edge, component = min member id — the exact output
-    contract of the distributed kernel (self-loops already filtered).
-
-    Reference implementation only: nothing in the package dispatches here.
-    The hot path is _driver_components_np below (vectorized, same output);
-    this stays as the obviously-correct oracle tests pin it against."""
-    parent: dict = {}
-
-    def find(x):
-        root = x
-        while parent[root] != root:
-            root = parent[root]
-        while parent[x] != root:
-            parent[x], x = root, parent[x]
-        return root
-
-    for r in rows:
-        a, b = r[0], r[1]
-        parent.setdefault(a, a)
-        parent.setdefault(b, b)
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            # union by id order keeps the running root = min of the pair,
-            # so the final root IS the component min
-            lo, hi = (ra, rb) if ra < rb else (rb, ra)
-            parent[hi] = lo
-    return [(n, find(n)) for n in parent]
-
-
 def _driver_components_np(src, dst):
     """Vectorized driver-side components over two equal-length pandas/numpy
     id sequences: factorize ids to dense codes, then min-label propagation
@@ -150,7 +119,7 @@ def _driver_components_np(src, dst):
     in two vectorized scatters, then compresses labels twice) — O(E) numpy
     work per round, O(log n) rounds with the jumping. Returns a pandas
     DataFrame (node_id, component), component = min member id by the ids'
-    own ordering — identical rows to _driver_components (pinned by
+    own ordering — identical rows to a dict union-find (pinned by
     tests/test_components.py). ~2.4 s for 1.65M string edges where the
     dict union-find takes ~3.9 s, and no per-row Python loop."""
     import numpy as np
@@ -183,7 +152,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iterations: int = 20,
-    checkpoint_every: int = 1,
     stats: dict | None = None,
 ) -> DataFrame:
     """Return (node_id, component) where component = min node id reachable.
@@ -237,9 +205,7 @@ def connected_components(
     aqe_was = conf.get("spark.sql.adaptive.enabled", "true")
     try:
         for i in range(max_iterations):
-            cur = _small_star(_large_star(cur))
-            if checkpoint_every and (i + 1) % checkpoint_every == 0:
-                cur = cur.localCheckpoint(eager=True)
+            cur = _small_star(_large_star(cur)).localCheckpoint(eager=True)
             rounds = i + 1
             sig = _signature(cur)
             if sig == prev_sig:

@@ -39,6 +39,37 @@ def degree(edges: DataFrame) -> DataFrame:
     )
 
 
+def near_dup_pairs(
+    nodes: DataFrame,
+    threshold: float,
+    use_lsh: bool = True,
+    lsh_kwargs: dict | None = None,
+    candidates: DataFrame | None = None,
+) -> DataFrame:
+    """Canonical (a_id < b_id) pairs of a (node_id, embedding) frame with
+    cosine ≥ threshold: (a_id, b_id, score).
+
+    Candidate arm (use_lsh, or `candidates` given): threshold search over a
+    per-node top-k candidate frame — `candidates` (linker.pipeline.
+    ann_candidates output) or a fresh candidate_topk — since threshold-grade
+    pairs are always within a node's top neighbors; each unordered pair
+    keeps its max score. Exact arm: brute_force_pairs.
+    """
+    if candidates is None and not use_lsh:
+        return brute_force_pairs(nodes).filter(F.col("score") >= threshold)
+    topk = candidates if candidates is not None else candidate_topk(nodes, **(lsh_kwargs or {}))
+    return (
+        topk.filter(F.col("score") >= threshold)
+        .select(
+            F.least("a_id", "b_id").alias("a_id"),
+            F.greatest("a_id", "b_id").alias("b_id"),
+            "score",
+        )
+        .groupBy("a_id", "b_id")
+        .agg(F.max("score").alias("score"))
+    )
+
+
 def dedup_pairs(
     nodes: DataFrame,
     dedup_threshold: float = 0.92,
@@ -46,29 +77,13 @@ def dedup_pairs(
     lsh_kwargs: dict | None = None,
     candidates: DataFrame | None = None,
 ) -> DataFrame:
-    """Canonical (a_id < b_id) near-duplicate pairs with cosine ≥ threshold.
+    """Canonical (a_id < b_id) near-duplicate pairs among the linkable
+    nodes with cosine ≥ threshold (near_dup_pairs).
 
     Pass `candidates` (linker.pipeline.ann_candidates output) to reuse the
     linker's candidate structure instead of recomputing the similarity join.
     """
-    live = linkable(nodes)
-    if candidates is not None or use_lsh:
-        # threshold search via top-k candidates (dedup-grade pairs are always
-        # within a node's top neighbors), canonicalized to a_id < b_id
-        topk = candidates if candidates is not None else candidate_topk(live, **(lsh_kwargs or {}))
-        pairs = (
-            topk.filter(F.col("score") >= dedup_threshold)
-            .select(
-                F.least("a_id", "b_id").alias("a_id"),
-                F.greatest("a_id", "b_id").alias("b_id"),
-                "score",
-            )
-            .groupBy("a_id", "b_id")
-            .agg(F.max("score").alias("score"))
-        )
-        return pairs
-    pairs = brute_force_pairs(live)
-    return pairs.filter(F.col("score") >= dedup_threshold)
+    return near_dup_pairs(linkable(nodes), dedup_threshold, use_lsh, lsh_kwargs, candidates)
 
 
 def dedup_actions(pairs: DataFrame, nodes: DataFrame, edges: DataFrame) -> DataFrame:

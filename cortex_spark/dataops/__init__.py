@@ -2,8 +2,6 @@ from cortex_spark.dataops.dedup import (
     exact_dedup,
     minhash_signatures,
     minhash_lsh_pairs,
-    simhash_udf,
-    simhash_pairs,
     ngram_jaccard_pairs,
     embedding_neardup_pairs,
 )
@@ -14,8 +12,6 @@ __all__ = [
     "exact_dedup",
     "minhash_signatures",
     "minhash_lsh_pairs",
-    "simhash_udf",
-    "simhash_pairs",
     "ngram_jaccard_pairs",
     "embedding_neardup_pairs",
     "ann_topk_bruteforce",

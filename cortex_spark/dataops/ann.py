@@ -20,11 +20,26 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cortex_spark.functions.similarity import cosine_from_norms, l2_norm_col
-from cortex_spark.linker.lsh import add_lsh_bands
+from cortex_spark.functions.similarity import cosine_from_norms, l2_norm_col, top_k_by_score
+from cortex_spark.linker.lsh import add_lsh_bands, infer_dim
+
+
+def _rescore_topk(cands: DataFrame, k: int) -> DataFrame:
+    """The tail every ANN path shares: drop self matches, exact cosine from
+    the per-row norms, per-query top-k. `cands` carries (query_id,
+    neighbor_id, q_vec, c_vec, q_norm, c_norm); the output is (query_id,
+    neighbor_id, score, rank ≤ k)."""
+    scored = cands.filter(F.col("query_id") != F.col("neighbor_id")).select(
+        "query_id",
+        "neighbor_id",
+        cosine_from_norms(
+            F.col("q_vec"), F.col("c_vec"), F.col("q_norm"), F.col("c_norm")
+        ).alias("score"),
+    )
+    return top_k_by_score(scored, "query_id", "neighbor_id", k, rank_col="rank")
 
 
 def ann_topk_bruteforce(
@@ -47,19 +62,7 @@ def ann_topk_bruteforce(
         F.col(vec_col).alias("q_vec"),
         l2_norm_col(F.col(vec_col)).alias("q_norm"),
     )
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_from_norms(
-                F.col("q_vec"), F.col("c_vec"), F.col("q_norm"), F.col("c_norm")
-            ).alias("score"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _rescore_topk(c.crossJoin(F.broadcast(q)), k)
 
 
 def ann_topk_lsh(
@@ -74,8 +77,7 @@ def ann_topk_lsh(
     seed: int = 7,
 ) -> DataFrame:
     """LSH-bucketed top-k: only candidates sharing ≥1 band are scored."""
-    dim_row = corpus.select(F.size(vec_col).alias("d")).filter("d is not null").first()
-    dim = int(dim_row["d"]) if dim_row else 384
+    dim = infer_dim(corpus, vec_col)
     c = add_lsh_bands(
         corpus.select(F.col(corpus_id).alias("neighbor_id"), F.col(vec_col).alias("c_vec")),
         "c_vec", dim, n_planes, bands, seed,
@@ -90,19 +92,7 @@ def ann_topk_lsh(
         "query_id", "q_vec", l2_norm_col(F.col("q_vec")).alias("q_norm"),
         F.explode("lsh_sigs").alias("sig"),
     )
-    cands = (
-        c.join(q, "sig")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .dropDuplicates(["query_id", "neighbor_id"])
-        .select(
-            "query_id", "neighbor_id",
-            cosine_from_norms(
-                F.col("q_vec"), F.col("c_vec"), F.col("q_norm"), F.col("c_norm")
-            ).alias("score"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return cands.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _rescore_topk(c.join(q, "sig").dropDuplicates(["query_id", "neighbor_id"]), k)
 
 
 def _ivf_sample(corpus, vec_col: str, corpus_id: str, sample_cap: int, seed: int, n: int):
@@ -217,18 +207,7 @@ def ann_topk_ivf(
         .withColumn("cell", F.explode(_cell_udf(C, nprobe)(F.col("q_vec"))))
         .withColumn("q_norm", l2_norm_col(F.col("q_vec")))
     )
-    cands = (
-        c.join(F.broadcast(q), "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id", "neighbor_id",
-            cosine_from_norms(
-                F.col("q_vec"), F.col("c_vec"), F.col("q_norm"), F.col("c_norm")
-            ).alias("score"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return cands.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _rescore_topk(c.join(F.broadcast(q), "cell"), k)
 
 
 class IvfIndexStore:
@@ -287,16 +266,7 @@ class IvfIndexStore:
         )
         cells = [r["cell"] for r in q.select("cell").distinct().collect()]
         lists = self.spark.read.parquet(self.lists_path).filter(F.col("cell").isin(cells))
-        cands = (
-            lists.withColumn("c_norm", l2_norm_col(F.col("c_vec")))
-            .join(F.broadcast(q.withColumn("q_norm", l2_norm_col(F.col("q_vec")))), "cell")
-            .filter(F.col("query_id") != F.col("neighbor_id"))
-            .select(
-                "query_id", "neighbor_id",
-                cosine_from_norms(
-                    F.col("q_vec"), F.col("c_vec"), F.col("q_norm"), F.col("c_norm")
-                ).alias("score"),
-            )
+        cands = lists.withColumn("c_norm", l2_norm_col(F.col("c_vec"))).join(
+            F.broadcast(q.withColumn("q_norm", l2_norm_col(F.col("q_vec")))), "cell"
         )
-        w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-        return cands.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+        return _rescore_topk(cands, k)

@@ -9,27 +9,21 @@ Five families, each sized for 10^12-document corpora:
   min over strings = min-hash. Native exprs, no Python.
 - SimHash: 64-bit bit-majority fingerprint; near-dups = pairs within
   Hamming distance d via band-exact match on 4×16-bit chunks (any chunk
-  equal ⇒ candidate, exact Hamming rescored). Two kernels: a blake2b
-  Arrow pandas UDF (reference-style), and a pure native-expression md5
-  variant (whole-stage codegen, SQL-oracle-able — the scale path).
+  equal ⇒ candidate, exact Hamming rescored). One kernel, pure native md5
+  expressions (whole-stage codegen, SQL-oracle-able).
 - n-gram Jaccard: exact Jaccard over token 3-gram sets, evaluated on
   LSH-candidate pairs only (never all-pairs).
-- embedding cosine near-dup: candidate pairs from random-hyperplane LSH,
-  exact cosine rescoring.
+- embedding cosine near-dup: the KG dedup scan (canon.dedup.near_dup_pairs)
+  over any id/vector table — per-node top-k candidates from the LSH
+  bucket GEMM, or exact all-pairs.
 """
 
 from __future__ import annotations
 
-import hashlib
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
 
-from cortex_spark.functions.similarity import cosine_col
-from cortex_spark.linker.lsh import candidate_pairs
+from cortex_spark.canon.dedup import near_dup_pairs
 
 
 def normalized_text_col(text) -> F.Column:
@@ -109,32 +103,6 @@ def minhash_lsh_pairs(
     )
 
 
-def simhash_udf(seed: int = 11):
-    """Arrow pandas UDF: text → 64-bit SimHash (bit-majority of token hashes)."""
-
-    @F.pandas_udf(LongType())
-    def _simhash(text: pd.Series) -> pd.Series:
-        out = np.zeros(len(text), dtype=np.int64)
-        for i, t in enumerate(text):
-            toks = (t or "").lower().split()
-            if not toks:
-                continue
-            acc = np.zeros(64, dtype=np.int64)
-            for tok in toks:
-                h = hashlib.blake2b(tok.encode(), digest_size=8, salt=str(seed).encode()).digest()
-                v = int.from_bytes(h, "big")
-                bits = np.array([(v >> b) & 1 for b in range(64)], dtype=np.int64)
-                acc += 2 * bits - 1
-            sig = 0
-            for b in range(64):
-                if acc[b] > 0:
-                    sig |= 1 << b
-            out[i] = np.int64(sig - (1 << 64) if sig >= (1 << 63) else sig)
-        return pd.Series(out)
-
-    return _simhash
-
-
 def _cap_buckets(chunks: DataFrame, max_bucket: int) -> DataFrame:
     """Hot-bucket guard for the simhash chunk index, mirroring the minhash
     path: 16-bit chunk values mean bucket population grows linearly with
@@ -143,38 +111,6 @@ def _cap_buckets(chunks: DataFrame, max_bucket: int) -> DataFrame:
     in doc_id order."""
     w = Window.partitionBy("chunk_idx", "chunk").orderBy("doc_id")
     return chunks.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= max_bucket).drop("rn")
-
-
-def simhash_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-    seed: int = 11,
-    max_bucket: int = 2000,
-) -> DataFrame:
-    """Near-dup pairs by SimHash: 4×16-bit chunk index (pigeonhole: Hamming
-    ≤ 3 ⇒ at least one of 4 chunks equal), exact Hamming rescoring."""
-    sh = df.select(F.col(id_col).alias("doc_id"), simhash_udf(seed)(F.col(text_col)).alias("sh"))
-    chunks = sh.select(
-        "doc_id",
-        "sh",
-        F.posexplode(
-            F.array(*[F.shiftrightunsigned(F.col("sh"), 16 * c).bitwiseAND(F.lit(0xFFFF)) for c in range(4)])
-        ).alias("chunk_idx", "chunk"),
-    )
-    chunks = _cap_buckets(chunks, max_bucket)
-    a = chunks.select(F.col("doc_id").alias("a_id"), F.col("sh").alias("a_sh"), "chunk_idx", "chunk")
-    b = chunks.select(F.col("doc_id").alias("b_id"), F.col("sh").alias("b_sh"), "chunk_idx", "chunk")
-    hamming = F.bit_count(F.col("a_sh").bitwiseXOR(F.col("b_sh")))
-    return (
-        a.join(b, ["chunk_idx", "chunk"])
-        .filter(F.col("a_id") < F.col("b_id"))
-        .dropDuplicates(["a_id", "b_id"])
-        .withColumn("hamming", hamming)
-        .filter(F.col("hamming") <= max_hamming)
-        .select("a_id", "b_id", "hamming")
-    )
 
 
 def simhash_chunks_native(
@@ -294,17 +230,9 @@ def embedding_neardup_pairs(
     use_lsh: bool = True,
     lsh_kwargs: dict | None = None,
 ) -> DataFrame:
-    """Embedding-cosine near-duplicates ≥ threshold (LSH candidates + exact
-    rescore; the embedding analogue of minhash_lsh_pairs)."""
+    """Embedding-cosine near-duplicates ≥ threshold as canonical (a_id <
+    b_id, score) pairs with string ids — near_dup_pairs over the renamed
+    columns (`lsh_kwargs` go to candidate_topk; the LSH arm's scores are
+    its float32 GEMM scores). The embedding analogue of minhash_lsh_pairs."""
     d = df.select(F.col(id_col).cast("string").alias("node_id"), F.col(vec_col).alias("embedding"))
-    if use_lsh:
-        pairs = candidate_pairs(d, **(lsh_kwargs or {}))
-    else:
-        a = d.select(F.col("node_id").alias("a_id"), F.col("embedding").alias("a_vec"))
-        b = d.select(F.col("node_id").alias("b_id"), F.col("embedding").alias("b_vec"))
-        pairs = (
-            a.crossJoin(b)
-            .filter(F.col("a_id") < F.col("b_id"))
-            .select("a_id", "b_id", cosine_col(F.col("a_vec"), F.col("b_vec")).alias("score"))
-        )
-    return pairs.filter(F.col("score") >= threshold)
+    return near_dup_pairs(d, threshold, use_lsh, lsh_kwargs)

@@ -3,12 +3,13 @@
 cosine: reference vector/index.rs:169-179; Jaccard-on-words: reference
 linker/rules.rs:271-289 (incl. its empty-set conventions: both empty → 1.0,
 one empty → 0.0). No Python UDFs — `aggregate`/`zip_with` keep the hot
-similarity-join path inside whole-stage codegen.
+similarity-join path inside whole-stage codegen. `top_k_by_score` is the
+one per-query top-k rank every scored-pair path ends in.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -38,6 +39,19 @@ def cosine_from_norms(a: Column, b: Column, a_norm: Column, b_norm: Column) -> C
     operand order of the norms does not matter)."""
     denom = a_norm * b_norm
     return F.when(denom == 0.0, F.lit(0.0)).otherwise(dot_col(a, b) / denom)
+
+
+def top_k_by_score(
+    scored: DataFrame, query_col: str, neighbor_col: str, k: int, rank_col: str | None = None
+) -> DataFrame:
+    """The k best rows of `scored` per `query_col` value, ranked by
+    (−score, neighbor id): ties on score break to the lower neighbor id, so
+    the cut is deterministic. `rank_col` keeps the 1-based rank under that
+    name; None drops it."""
+    name = rank_col or "rn"
+    w = Window.partitionBy(query_col).orderBy(F.desc("score"), F.asc(neighbor_col))
+    ranked = scored.withColumn(name, F.row_number().over(w)).filter(F.col(name) <= k)
+    return ranked if rank_col else ranked.drop(name)
 
 
 def _word_set(s: Column) -> Column:

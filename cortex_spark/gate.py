@@ -26,6 +26,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from cortex_spark.functions.similarity import top_k_by_score
+
 CONFLICT_THRESHOLD = 0.85
 DUPLICATE_THRESHOLD = 0.92
 MIN_TITLE = 10
@@ -215,13 +217,8 @@ def conflict_verdicts(
     )
     out = joined.withColumn("gate_reason", verdict).filter(F.col("gate_reason").isNotNull())
     # first (highest-score) verdict per incoming node
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("in_id").orderBy(F.desc("score"), F.asc("ex_id"))
-    return (
-        out.withColumn("rn", F.row_number().over(w))
-        .filter("rn = 1")
-        .select(F.col("in_id").alias("node_id"), "gate_reason", F.col("ex_id").alias("existing_node"))
+    return top_k_by_score(out, "in_id", "ex_id", 1).select(
+        F.col("in_id").alias("node_id"), "gate_reason", F.col("ex_id").alias("existing_node")
     )
 
 

@@ -35,7 +35,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from cortex_spark.functions.similarity import cosine_from_norms, l2_norm_col
+from cortex_spark.functions.similarity import cosine_from_norms, l2_norm_col, top_k_by_score
 from cortex_spark.io import write_json_atomic
 from cortex_spark.linker.lsh import add_lsh_bands
 
@@ -158,8 +158,8 @@ class LshIndexStore:
         yields both the pruned bucket values and the broadcast probe sigs.
         The index is scanned once, in the PROBED bucket partitions only, and
         never re-bucketed or re-embedded; each sig's hot bucket is capped at
-        `max_bucket` newest-first (the quadratic-blowup guard of
-        candidate_pairs/candidate_topk); one aggregate per stored node
+        `max_bucket` newest-first (the quadratic-blowup guard candidate_topk
+        also applies); one aggregate per stored node
         resolves its NEWEST appended vector (max append_seq), its norm and
         the queries it met. Callers semi-join b_id against their live set to
         drop tombstoned entries (HNSW-stale semantics)."""
@@ -230,8 +230,7 @@ class LshIndexStore:
                 F.col("a_vec"), F.col("b_vec"), F.col("a_norm"), F.col("b_norm")
             ).alias("score"),
         )
-        w = Window.partitionBy("a_id").orderBy(F.desc("score"), F.asc("b_id"))
-        return scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k).drop("rn")
+        return top_k_by_score(scored, "a_id", "b_id", k)
 
     def compact(self) -> int:
         """Drop all superseded node versions (keep each node_id's rows at

@@ -14,19 +14,18 @@ DEFAULT_BANDS); `candidate_topk` adapts (rows, bands) to the corpus size
 unless n_planes is given (`choose_lsh_params`).
 
 Scale notes (100 TB): hot buckets are truncated to their first
-`max_bucket` rows in id order (`candidate_pairs`) or surrogate-id order
-(`candidate_topk`); no counter records the truncation. AQE skew-join
-splits the rest. Signature computation is one numpy matmul per Arrow batch.
+`max_bucket` rows in surrogate-id order (`candidate_topk`); no counter
+records the truncation. AQE skew-join splits the rest. Signature
+computation is one numpy matmul per Arrow batch (`band_signer`).
 """
 
 from __future__ import annotations
 
 import hashlib
-import os
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
@@ -106,7 +105,7 @@ def choose_lsh_params(
     recall_base = 1.0 - (1.0 - p**rows_cap) ** base_bands
     rows, bands = rows_cap, base_bands
     # 30-row ceiling keeps the packed signature's bits clear of the band id
-    # at bit 32 (band_sig_udf packing)
+    # at bit 32 (band_signer packing)
     for r in range(rows_cap + 1, min(rows_raw, 30) + 1):
         b = int(np.ceil(np.log(1.0 - recall_base) / np.log(1.0 - p**r)))
         if b > max_bands:
@@ -125,9 +124,7 @@ def choose_lsh_params(
 # ESTIMATED OUTPUT BYTES caps task memory at any corpus size; results are
 # partition-count-independent (cross-parallelism bit-identical signature,
 # BENCH_r04_scale.json), re-checked by tests/test_lsh_partition_sizing.py.
-TARGET_PARTITION_BYTES = int(
-    os.environ.get("CORTEX_LSH_PARTITION_BYTES", str(256 << 20))
-)
+TARGET_PARTITION_BYTES = 256 << 20
 
 
 def sized_partitions(
@@ -151,20 +148,21 @@ def _hyperplanes(dim: int, n_planes: int, seed: int) -> np.ndarray:
     return rng.standard_normal((n_planes, dim)).astype(np.float64)
 
 
-def band_sig_udf(
+def band_signer(
     dim: int,
     n_planes: int = DEFAULT_PLANES,
     bands: int = DEFAULT_BANDS,
     seed: int = DEFAULT_SEED,
     center=None,
 ):
-    """pandas UDF: embedding array<float> → array<long> of per-band signatures.
+    """The one LSH band signer: returns a numpy function mapping an (n, dim)
+    float64 batch to its (n, bands) int64 packed band signatures — one GEMM
+    against the seeded hyperplanes, then each band's `n_planes // bands`
+    sign bits packed most-significant-first, with the band index at bit 32
+    so a single `(sig)` join key suffices after explode.
 
-    Each signature packs the band's sign bits plus the band index in the high
-    bits, so a single `(sig)` join key suffices after explode.
-
-    `center` (optional array<double>, length dim): subtracted before the
-    sign computation, i.e. the hyperplanes pass through the data centroid
+    `center` (optional, length dim): subtracted before the sign
+    computation, i.e. the hyperplanes pass through the data centroid
     instead of the origin. Real transformer encoders are ANISOTROPIC (mean
     pairwise cosine ≈ 0.7 measured on the in-repo mini-transformer — the
     same shell concentration bge/MiniLM-class models show): origin-anchored
@@ -181,26 +179,45 @@ def band_sig_udf(
     rows = n_planes // bands
     planes = _hyperplanes(dim, n_planes, seed)
     mu = None if center is None else np.asarray(center, dtype=np.float64)
+    weights = (1 << np.arange(rows - 1, -1, -1)).astype(np.int64)
+    band_ids = np.arange(bands, dtype=np.int64) << 32
+
+    def sign(X: np.ndarray) -> np.ndarray:
+        Xc = X - mu if mu is not None else X
+        bits = (Xc @ planes.T) > 0  # (n, n_planes)
+        return (bits.reshape(len(X), bands, rows).astype(np.int64) @ weights) | band_ids
+
+    return sign
+
+
+def _present_rows(emb: pd.Series) -> tuple[np.ndarray, np.ndarray | None]:
+    """(positions of the non-null rows, their vectors stacked float64) of
+    one Arrow batch; (empty, None) when every row is null."""
+    vals = emb.to_numpy()
+    idx = np.flatnonzero(np.array([v is not None for v in vals], dtype=bool))
+    if not len(idx):
+        return idx, None
+    return idx, np.stack([np.asarray(vals[i], dtype=np.float64) for i in idx])
+
+
+def band_sig_udf(
+    dim: int,
+    n_planes: int = DEFAULT_PLANES,
+    bands: int = DEFAULT_BANDS,
+    seed: int = DEFAULT_SEED,
+    center=None,
+):
+    """pandas UDF: embedding array<float> → array<long> of `band_signer`
+    signatures (null for a null embedding)."""
+    sign = band_signer(dim, n_planes, bands, seed, center)
 
     @F.pandas_udf(ArrayType(LongType()))
     def _sig(emb: pd.Series) -> pd.Series:
-        # one GEMM + vectorized bit-packing per Arrow batch (the per-row
-        # Python loop was a measurable non-scaling cost at bench size)
-        mask = np.array([v is not None for v in emb])
-        out = np.empty(len(emb), dtype=object)
-        out[~mask] = None
-        if mask.any():
-            X = np.stack([np.asarray(v, dtype=np.float64) for v in emb[mask]])
-            if mu is not None:
-                X = X - mu
-            bits = (X @ planes.T) > 0  # (n, n_planes)
-            weights = (1 << np.arange(rows - 1, -1, -1)).astype(np.int64)
-            sigs = bits.reshape(len(X), bands, rows).astype(np.int64) @ weights
-            sigs |= np.arange(bands, dtype=np.int64) << 32
-            rows_obj = np.empty(len(sigs), dtype=object)  # keep rows ragged-typed
-            for i in range(len(sigs)):
-                rows_obj[i] = sigs[i]
-            out[mask] = rows_obj
+        out = np.full(len(emb), None, dtype=object)  # rows stay ragged-typed
+        idx, X = _present_rows(emb)
+        if X is not None:
+            for i, s in zip(idx, sign(X)):
+                out[i] = s
         return pd.Series(out)
 
     return _sig
@@ -222,9 +239,7 @@ def _sig_vec_udf(
     per-element conversion (not BLAS) dominated the stage's task time.
     float64→float32 happens HERE with the same astype the GEMM kernel used
     on its Arrow input, so scores are bit-identical."""
-    rows = n_planes // bands
-    planes = _hyperplanes(dim, n_planes, seed)
-    mu = None if center is None else np.asarray(center, dtype=np.float64)
+    sign = band_signer(dim, n_planes, bands, seed, center)
 
     from pyspark.sql.types import BinaryType, StructField, StructType
 
@@ -237,22 +252,13 @@ def _sig_vec_udf(
 
     @F.pandas_udf(out_type)
     def _sig(emb: pd.Series) -> pd.DataFrame:
-        mask = np.array([v is not None for v in emb])
-        sig_out = np.empty(len(emb), dtype=object)
-        vb_out = np.empty(len(emb), dtype=object)
-        sig_out[~mask] = None
-        vb_out[~mask] = None
-        if mask.any():
-            X = np.stack([np.asarray(v, dtype=np.float64) for v in emb[mask]])
-            Xc = X - mu if mu is not None else X
-            bits = (Xc @ planes.T) > 0
-            weights = (1 << np.arange(rows - 1, -1, -1)).astype(np.int64)
-            sigs = bits.reshape(len(X), bands, rows).astype(np.int64) @ weights
-            sigs |= np.arange(bands, dtype=np.int64) << 32
+        sig_out = np.full(len(emb), None, dtype=object)
+        vb_out = np.full(len(emb), None, dtype=object)
+        idx, X = _present_rows(emb)
+        if X is not None:
             X32 = np.ascontiguousarray(X.astype(np.float32))
-            idxs = np.flatnonzero(mask)
-            for j, i in enumerate(idxs):
-                sig_out[i] = sigs[j]
+            for j, (i, s) in enumerate(zip(idx, sign(X))):
+                sig_out[i] = s
                 vb_out[i] = X32[j].tobytes()
         return pd.DataFrame({"sigs": sig_out, "vb": vb_out})
 
@@ -294,6 +300,13 @@ def _segmented_arange(lens: np.ndarray) -> np.ndarray:
     return np.arange(total) - np.repeat(starts, lens)
 
 
+def infer_dim(nodes: DataFrame, vec_col: str = "embedding") -> int:
+    """Embedding length of the first non-null vector (one small job); 384
+    when the column holds no vector."""
+    first = nodes.select(F.size(vec_col).alias("d")).filter("d is not null").first()
+    return int(first["d"]) if first else 384
+
+
 def add_lsh_bands(
     nodes: DataFrame,
     vec_col: str = "embedding",
@@ -304,15 +317,14 @@ def add_lsh_bands(
     center=None,
 ) -> DataFrame:
     if dim is None:
-        first = nodes.select(F.size(vec_col).alias("d")).filter("d is not null").first()
-        dim = int(first["d"]) if first else 384
+        dim = infer_dim(nodes, vec_col)
     sig = band_sig_udf(dim, n_planes, bands, seed, center=center)
     return nodes.withColumn("lsh_sigs", sig(F.col(vec_col)))
 
 
 def corpus_centroid(nodes: DataFrame, vec_col: str = "embedding") -> list[float]:
     """Exact per-dimension mean of the embedding column — the centroid for
-    centered LSH signatures (see band_sig_udf). One narrow posexplode+avg
+    centered LSH signatures (see band_signer). One narrow posexplode+avg
     job over (vec) only; at 10⁹+ rows substitute a fixed-seed sample. The
     float sum is shuffle-order dependent in the last ulp, which moves a
     sign bit only for a vector lying within ~1e-12 of a hyperplane — and
@@ -325,53 +337,6 @@ def corpus_centroid(nodes: DataFrame, vec_col: str = "embedding") -> list[float]
         .collect()
     )
     return [float(r["c"]) for r in rows]
-
-
-def candidate_pairs(
-    nodes: DataFrame,
-    id_col: str = "node_id",
-    vec_col: str = "embedding",
-    n_planes: int = DEFAULT_PLANES,
-    bands: int = DEFAULT_BANDS,
-    seed: int = DEFAULT_SEED,
-    max_bucket: int = DEFAULT_MAX_BUCKET,
-    dim: int | None = None,
-    center=None,
-) -> DataFrame:
-    """Canonical candidate pairs (a_id < b_id) with exact cosine score.
-
-    Output: (a_id, b_id, score). The caller joins node attributes back —
-    keeping this frame narrow minimizes the shuffle (ids + score only).
-    """
-    if isinstance(center, str) and center == "auto":
-        center = corpus_centroid(nodes, vec_col)
-    with_sigs = add_lsh_bands(nodes, vec_col, dim, n_planes, bands, seed, center=center)
-    # shuffle ids only — vectors are re-attached after pair dedup, so the
-    # bucket self-join and dropDuplicates move 2 strings, not 2×dim floats
-    sigs = (
-        with_sigs.select(F.col(id_col).alias("nid"), F.explode("lsh_sigs").alias("sig"))
-        .filter(F.col("sig").isNotNull())
-    )
-    # hot-bucket guard: cap bucket size (quadratic blowup bound); dropped
-    # buckets are near-stopword signatures with no discriminative power.
-    w = Window.partitionBy("sig").orderBy("nid")
-    sigs = sigs.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= max_bucket).drop("rn")
-
-    a = sigs.select(F.col("nid").alias("a_id"), "sig")
-    b = sigs.select(F.col("nid").alias("b_id"), "sig")
-    id_pairs = (
-        a.join(b, "sig")
-        .filter(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id")
-        .dropDuplicates(["a_id", "b_id"])
-    )
-    vecs = nodes.select(F.col(id_col), F.col(vec_col))
-    pairs = (
-        id_pairs.join(vecs.select(F.col(id_col).alias("a_id"), F.col(vec_col).alias("a_vec")), "a_id")
-        .join(vecs.select(F.col(id_col).alias("b_id"), F.col(vec_col).alias("b_vec")), "b_id")
-        .select("a_id", "b_id", cosine_col(F.col("a_vec"), F.col("b_vec")).alias("score"))
-    )
-    return pairs
 
 
 def candidate_topk(
@@ -407,17 +372,14 @@ def candidate_topk(
 
     `center="auto"` computes the corpus centroid (one narrow job) and
     anchors the signature hyperplanes there — required for anisotropic
-    real-encoder embeddings (see band_sig_udf); pass a precomputed centroid
+    real-encoder embeddings (see band_signer); pass a precomputed centroid
     to skip the job, or None (default) for the origin-anchored scheme every
     committed oracle pins.
     """
-    import pandas as pd
-
     if isinstance(center, str) and center == "auto":
         center = corpus_centroid(nodes, vec_col)
     if dim is None:
-        first = nodes.select(F.size(vec_col).alias("d")).filter("d is not null").first()
-        dim = int(first["d"]) if first else 384
+        dim = infer_dim(nodes, vec_col)
     n = n_rows
     if n_planes is None:
         # adaptive (rows, bands): mean bucket stays ~target_bucket rows

@@ -27,6 +27,7 @@ from datetime import datetime, timezone
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from cortex_spark.functions.similarity import top_k_by_score
 from cortex_spark.linker.lsh import brute_force_pairs, candidate_topk
 from cortex_spark.linker.rules import LinkerConfig, apply_link_rules
 
@@ -173,13 +174,7 @@ def ann_candidates(
     live = linkable(nodes)
     if use_lsh:
         return candidate_topk(live, k=cfg.ann_k, **(lsh_kwargs or {}))
-    ordered = symmetrize(brute_force_pairs(live))
-    w_ann = Window.partitionBy("a_id").orderBy(F.desc("score"), F.asc("b_id"))
-    return (
-        ordered.withColumn("ann_rn", F.row_number().over(w_ann))
-        .filter(F.col("ann_rn") <= cfg.ann_k)
-        .drop("ann_rn")
-    )
+    return top_k_by_score(symmetrize(brute_force_pairs(live)), "a_id", "b_id", cfg.ann_k)
 
 
 def link_nodes(

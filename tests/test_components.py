@@ -117,26 +117,26 @@ def test_distributed_kernel_matches_driver_path(spark, seed, monkeypatch):
 )
 def test_driver_np_kernel_matches_reference(name, edges):
     """_driver_components_np (factorize + min-label propagation, the hot
-    driver path) must emit exactly _driver_components' rows on shapes that
-    stress it: deep chains (max propagation rounds), duplicate and
+    driver path) must emit exactly the union-find oracle's rows on shapes
+    that stress it: deep chains (max propagation rounds), duplicate and
     reversed edges, and ids whose factorize appearance order inverts their
     sort order (min code != min id)."""
-    from cortex_spark.canon.components import _driver_components, _driver_components_np
+    from cortex_spark.canon.components import _driver_components_np
 
     src = [e[0] for e in edges]
     dst = [e[1] for e in edges]
-    ref = set(_driver_components(list(zip(src, dst))))
+    ref = set(union_find(edges, {x for e in edges for x in e}).items())
     got = _driver_components_np(src, dst)
     assert set(zip(got["node_id"], got["component"])) == ref
 
 
 def test_driver_np_kernel_int_ids():
-    from cortex_spark.canon.components import _driver_components, _driver_components_np
+    from cortex_spark.canon.components import _driver_components_np
 
     edges = [(5, 3), (3, 9), (100, 42), (7, 7 + 1)]
     src = [e[0] for e in edges]
     dst = [e[1] for e in edges]
-    ref = set(_driver_components(list(zip(src, dst))))
+    ref = set(union_find(edges, {x for e in edges for x in e}).items())
     got = _driver_components_np(src, dst)
     assert set(zip(got["node_id"], got["component"])) == ref
 
