@@ -274,19 +274,10 @@ def q_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3 degree over the part-supplier co-occurrence graph (lineitem)."""
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    from cortex_spark.graph.degree import degree
+
     e = li.select(F.col("l_partkey").alias("src"), F.col("l_suppkey").alias("dst"))
-    # one aggregation instead of three (guide §2.3-2.4): explode each edge
-    # into its two endpoints and count — map-side partial aggregation sees
-    # every occurrence, so one small shuffle replaces groupBy(src) +
-    # groupBy(dst) + the union re-aggregation. degree = total occurrences on
-    # either side, identical to the summed two-sided counts.
-    return (
-        e.select(F.explode(F.array("src", "dst")).alias("node_id"))
-        .groupBy("node_id")
-        .agg(F.count(F.lit(1)).alias("degree"))
-        .orderBy(F.desc("degree"), F.asc("node_id"))
-        .limit(100)
-    )
+    return degree(e).orderBy(F.desc("degree"), F.asc("node_id")).limit(100)
 
 
 def q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:

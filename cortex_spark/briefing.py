@@ -1,22 +1,25 @@
 """Briefing report (SURVEY §3.4): ordered ranked sections with seen-set
-exclusion, re-expressed as a DAG of filtered/ranked DataFrames with ordered
-anti-joins (reference briefing/engine.rs:139-289).
+exclusion (reference briefing/engine.rs:139-289). Spark ranks every
+section down to its head of at most 10 rows; the heads are collected once
+and the seen-set walk runs on the driver over those few rows.
 
 Ranking per section (A5, engine.rs:77-91,329-338): importance ≥ 0.3,
 sort (importance desc, access_count desc), top 10 per section, global 50.
 Sections (in exclusion order): identity (agent's own nodes), goals,
 patterns (2-hop applies_to/instance_of neighborhood), unresolved
 contradictions (contradicts-edge endpoints), recent events (48 h window),
-then auto-discovered sections — one per non-default kind, ordered by
-Σ importance (A6, engine.rs:725-768).
+active context (the agent's newest nodes), then auto-discovered sections —
+one per non-default kind, ordered by Σ importance (A6, engine.rs:725-768).
 """
 
 from __future__ import annotations
 
+import functools
 from datetime import datetime, timedelta
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 from cortex_spark.graph.traverse import bfs
 from cortex_spark.schemas import DEFAULT_KINDS
@@ -27,15 +30,35 @@ GLOBAL_CAP = 50
 RECENT_HOURS = 48
 
 
-RANK_ORDER = (F.desc("importance"), F.desc("access_count"), F.asc("node_id"))
+# (column, descending) sort keys: the section rank, and active_context's
+# recency order
+RANK_ORDER = (("importance", True), ("access_count", True), ("node_id", False))
+RECENT_ORDER = (("created_at", True), ("node_id", False))
 
 
-def _rank(df: DataFrame, limit: int = PER_SECTION) -> DataFrame:
+def _rank(df: DataFrame, order) -> DataFrame:
     return (
         df.filter(F.col("importance") >= MIN_IMPORTANCE)
-        .orderBy(*RANK_ORDER)
-        .limit(limit)
+        .orderBy(*[F.desc(c) if desc else F.asc(c) for c, desc in order])
+        .limit(PER_SECTION)
     )
+
+
+def _spark_key(v):
+    # Spark orders NaN above every other float
+    return (v != v, v if v == v else 0.0)
+
+
+def _sorted(rows: list, order) -> list:
+    """Collected rows in Spark's orderBy(order): nulls last under DESC and
+    first under ASC."""
+    for col, desc in reversed(order):  # stable sorts, least significant key first
+        present = sorted(
+            (r for r in rows if r[col] is not None), key=lambda r: _spark_key(r[col]), reverse=desc
+        )
+        absent = [r for r in rows if r[col] is None]
+        rows = present + absent if desc else absent + present
+    return rows
 
 
 def generate_briefing(
@@ -44,49 +67,49 @@ def generate_briefing(
     agent: str,
     now: datetime,
 ) -> DataFrame:
-    """Returns (section, section_rank, node_id, kind, title, importance)."""
+    """Returns (section, section_idx, section_rank, node_id, kind, title,
+    body, importance), ordered by (section, section_rank); the node columns
+    keep the input's types."""
     spark = nodes.sparkSession
     live = nodes.filter(~F.coalesce(F.col("deleted"), F.lit(False)))
-    # created_at rides along so the active_context allocation cut can re-sort
-    base_cols = ["node_id", "kind", "title", "body", "importance", "access_count", "created_at"]
+    # access_count and created_at ride along as sort keys; created_at as
+    # epoch micros, so the driver-side sort is exact in any local time zone
+    base_cols = [
+        "node_id", "kind", "title", "body", "importance", "access_count",
+        F.unix_micros("created_at").alias("created_at"),
+    ]
 
-    sections: list[tuple[str, DataFrame]] = []
+    # (name, order, ranked head); a section's walk cut uses its own order
+    heads: list[tuple[str, tuple, DataFrame]] = []
+
+    def head(name: str, df: DataFrame, order=RANK_ORDER) -> None:
+        heads.append((name, order, _rank(df.select(*base_cols), order)))
+
     agent_nodes = live.filter(F.col("source_agent") == agent)
-    sections.append(("identity", _rank(agent_nodes.filter(F.col("kind").isin("agent", "preference")).select(*base_cols))))
-    sections.append(("goals", _rank(agent_nodes.filter(F.col("kind") == "goal").select(*base_cols))))
+    head("identity", agent_nodes.filter(F.col("kind").isin("agent", "preference")))
+    head("goals", agent_nodes.filter(F.col("kind") == "goal"))
 
     # patterns: pattern nodes + their 2-hop applies_to/instance_of neighborhood
     pattern_ids = agent_nodes.filter(F.col("kind") == "pattern").select("node_id")
     if not pattern_ids.isEmpty():
         hood = bfs(edges, pattern_ids, max_depth=2, relation=["applies_to", "instance_of"])
-        patt = live.join(hood.select("node_id"), "node_id").select(*base_cols)
+        head("patterns", live.join(hood.select("node_id"), "node_id"))
     else:
-        patt = agent_nodes.filter(F.col("kind") == "pattern").select(*base_cols)
-    sections.append(("patterns", _rank(patt)))
+        head("patterns", agent_nodes.filter(F.col("kind") == "pattern"))
 
     contra_ids = (
         edges.filter(F.col("relation") == "contradicts")
         .select(F.explode(F.array("src", "dst")).alias("node_id"))
         .distinct()
     )
-    sections.append(("contradictions", _rank(live.join(contra_ids, "node_id").select(*base_cols))))
+    head("contradictions", live.join(contra_ids, "node_id"))
 
     cutoff = F.lit((now - timedelta(hours=RECENT_HOURS)).strftime("%Y-%m-%d %H:%M:%S"))
-    sections.append(
-        ("recent_events", _rank(agent_nodes.filter((F.col("kind") == "event") & (F.col("created_at") >= F.to_timestamp(cutoff))).select(*base_cols)))
-    )
+    head("recent_events", agent_nodes.filter((F.col("kind") == "event") & (F.col("created_at") >= F.to_timestamp(cutoff))))
 
     # active context (engine.rs:446-549): most recent activity for the agent,
     # any kind — anchored on the newest nodes rather than a 48 h wall
-    sections.append(
-        (
-            "active_context",
-            agent_nodes.filter(F.col("importance") >= MIN_IMPORTANCE)
-            .orderBy(F.desc("created_at"), F.asc("node_id"))
-            .limit(PER_SECTION)
-            .select(*base_cols),
-        )
-    )
+    head("active_context", agent_nodes, RECENT_ORDER)
 
     # auto-discovered: novel kinds ordered by Σ importance (A6)
     novel = (
@@ -97,39 +120,40 @@ def generate_briefing(
         .collect()
     )
     for row in novel:
-        sections.append((f"more_{row['kind']}", _rank(live.filter(F.col("kind") == row["kind"]).select(*base_cols))))
+        head(f"more_{row['kind']}", live.filter(F.col("kind") == row["kind"]))
 
-    # ordered seen-set exclusion (U2, engine.rs:154-250) + global cap
-    seen = spark.createDataFrame([], "node_id string")
-    out = None
+    # every section head is ≤ PER_SECTION rows: one collect, then the ordered
+    # seen-set exclusion (U2, engine.rs:154-250) + global cap on the driver
+    labeled = [df.withColumn("section_idx", F.lit(i)) for i, (_, _, df) in enumerate(heads)]
+    rows = functools.reduce(DataFrame.unionByName, labeled).collect()
+
+    out: list[tuple] = []
+    seen: set = set()
     remaining = GLOBAL_CAP
-    for idx, (name, sec) in enumerate(sections):
+    for idx, (name, order, _) in enumerate(heads):
         if remaining <= 0:
             break
-        # the global-cap cut is taken in the section's own rank order —
-        # a bare limit() after the anti-join would be non-deterministic
-        order = (F.desc("created_at"), F.asc("node_id")) if name == "active_context" else RANK_ORDER
-        picked = sec.join(seen, "node_id", "left_anti").orderBy(*order).limit(remaining)
-        picked = picked.localCheckpoint(eager=True)
-        n = picked.count()
-        if n == 0:
-            continue
-        remaining -= n
-        seen = seen.unionByName(picked.select("node_id")).localCheckpoint(eager=True)
-        labeled = picked.withColumn("section", F.lit(name)).withColumn("section_idx", F.lit(idx))
-        out = labeled if out is None else out.unionByName(labeled)
-    if out is None:
-        return spark.createDataFrame(
-            [],
-            "node_id string, kind string, title string, body string, importance float, "
-            "access_count bigint, section string, section_idx int, section_rank int",
-        )
-    from pyspark.sql import Window
+        fresh = [r for r in rows if r["section_idx"] == idx and r["node_id"] not in seen]
+        # the global-cap cut is taken in the section's own order
+        picked = _sorted(fresh, order)[:remaining]
+        remaining -= len(picked)
+        seen.update(r["node_id"] for r in picked)
+        out += [
+            (name, idx, rank, r["node_id"], r["kind"], r["title"], r["body"], r["importance"])
+            for rank, r in enumerate(_sorted(picked, RANK_ORDER), 1)
+        ]
+    out.sort(key=lambda t: (t[0], t[2]))
 
-    w = Window.partitionBy("section").orderBy(F.desc("importance"), F.desc("access_count"), F.asc("node_id"))
-    return out.withColumn("section_rank", F.row_number().over(w)).select(
-        "section", "section_idx", "section_rank", "node_id", "kind", "title", "body", "importance"
+    node_fields = {f.name: f for f in nodes.schema.fields}
+    schema = StructType(
+        [
+            StructField("section", StringType(), False),
+            StructField("section_idx", IntegerType(), False),
+            StructField("section_rank", IntegerType(), False),
+            *(node_fields[c] for c in ("node_id", "kind", "title", "body", "importance")),
+        ]
     )
+    return spark.createDataFrame(out, schema)
 
 
 class BriefingCache:
@@ -183,8 +207,7 @@ def _section_title(section: str) -> str:
 
 
 def _collect_sections(report) -> list[tuple[str, list]]:
-    order_cols = ["section_idx", "section_rank"] if "section_idx" in report.columns else ["section", "section_rank"]
-    rows = report.orderBy(*order_cols).collect()
+    rows = report.orderBy("section_idx", "section_rank").collect()
     sections: list[tuple[str, list]] = []
     for r in rows:
         if not sections or sections[-1][0] != r["section"]:

@@ -185,18 +185,9 @@ def connected_components(
             )
             if len(head) == 0:
                 return spark.createDataFrame([], schema)
-            out = _driver_components_np(head.iloc[:, 0], head.iloc[:, 1])
-            # upload in bulk batches: the session's 10k-row Arrow batch size
-            # is tuned for UDF streams, not a one-shot driver upload —
-            # 200k-row batches shave ~10% off the reify (measured at 1.65M
-            # rows); restored immediately so UDF stages are unaffected
-            batch_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-            batch_was = spark.conf.get(batch_key, "10000")
-            try:
-                spark.conf.set(batch_key, "200000")
-                return spark.createDataFrame(out, schema)
-            finally:
-                spark.conf.set(batch_key, batch_was)
+            return spark.createDataFrame(
+                _driver_components_np(head.iloc[:, 0], head.iloc[:, 1]), schema
+            )
     cur = _neighborhoods(e0)
     cur = cur.localCheckpoint(eager=True)
     prev_sig = None

@@ -9,8 +9,8 @@
     3. similarity ≥ 0.98 → Supersede newer→older
     4. else Link (related_to edge, AutoDedup provenance)
 
-Connection counts come from a degree aggregate over the current edge table
-(two-phase: groupBy each side then sum — skew-safe for hot entities).
+Connection counts come from the degree aggregate (graph.degree) over the
+current edge table.
 """
 
 from __future__ import annotations
@@ -18,25 +18,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cortex_spark.graph.degree import degree
 from cortex_spark.linker.lsh import brute_force_pairs, candidate_topk
 from cortex_spark.linker.pipeline import linkable
 
 SUPERSEDE_SIM = 0.98
 IMPORTANCE_GAP = 0.3
-
-
-def degree(edges: DataFrame) -> DataFrame:
-    """|out| + |in| per node (engine.rs:51; dedup.rs:180-183).
-
-    One aggregation instead of three (guide §2.3): explode each edge into
-    its two endpoints and count — map-side partial aggregation reduces
-    before the single shuffle; identical totals to the two-sided
-    groupBy+union+sum formulation this replaces."""
-    return (
-        edges.select(F.explode(F.array("src", "dst")).alias("node_id"))
-        .groupBy("node_id")
-        .agg(F.count(F.lit(1)).alias("degree"))
-    )
 
 
 def near_dup_pairs(

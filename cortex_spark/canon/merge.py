@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from cortex_spark.canon.components import connected_components
-from cortex_spark.canon.dedup import degree
+from cortex_spark.graph.degree import degree
 from cortex_spark.linker.pipeline import edge_id
 
 
@@ -81,7 +81,8 @@ def canonical_map(actions: DataFrame, nodes: DataFrame, edges: DataFrame) -> Dat
 
 
 def _redirect(edges: DataFrame, cmap: DataFrame) -> DataFrame:
-    """Redirect src/dst through the canonical map, drop self-edges (no dedup)."""
+    """Redirect src/dst through the canonical map (J14), drop self-edges
+    (no dedup)."""
     src_map = cmap.select(F.col("node_id").alias("src"), F.col("canonical").alias("src_c"))
     dst_map = cmap.select(F.col("node_id").alias("dst"), F.col("canonical").alias("dst_c"))
     return (
@@ -91,26 +92,6 @@ def _redirect(edges: DataFrame, cmap: DataFrame) -> DataFrame:
         .withColumn("dst", F.coalesce(F.col("dst_c"), F.col("dst")))
         .drop("src_c", "dst_c")
         .filter(F.col("src") != F.col("dst"))
-    )
-
-
-def rewrite_edges(edges: DataFrame, cmap: DataFrame) -> DataFrame:
-    """Redirect edges through the canonical map (J14, dedup.rs:233-278)."""
-    redirected = _redirect(edges, cmap)
-    # survivor per (src,dst,relation) = min (created_at, edge_id), via a
-    # min_by hash-aggregate instead of a row_number window: map-side partial
-    # aggregation plus no per-group sort over the full edge table (guide
-    # §2.3). edge_id is unique in the input, so (created_at, edge_id) is a
-    # total order and the surviving row is identical to the window's rn=1.
-    keys = ("src", "dst", "relation")
-    val_cols = [c for c in redirected.columns if c not in keys]
-    picked = redirected.groupBy(*keys).agg(
-        F.min_by(
-            F.struct(*val_cols), F.struct(F.col("created_at"), F.col("edge_id"))
-        ).alias("p")
-    )
-    return picked.select(
-        *[F.col(c) if c in keys else F.col(f"p.{c}").alias(c) for c in redirected.columns]
     )
 
 
@@ -221,16 +202,8 @@ def dedup_edges_for_actions(actions: DataFrame, cmap: DataFrame, run_ts: datetim
     )
     # link edges connect live nodes → redirect through the canonical map so
     # they never dangle on a tombstone
-    link_edges = _mk(links, F.col("a_id"), F.col("b_id"), "related_to", F.col("score"), F.col("score"))
-    src_map = cmap.select(F.col("node_id").alias("src"), F.col("canonical").alias("src_c"))
-    dst_map = cmap.select(F.col("node_id").alias("dst"), F.col("canonical").alias("dst_c"))
-    link_edges = (
-        link_edges.join(F.broadcast(src_map), "src", "left")
-        .join(F.broadcast(dst_map), "dst", "left")
-        .withColumn("src", F.coalesce("src_c", "src"))
-        .withColumn("dst", F.coalesce("dst_c", "dst"))
-        .drop("src_c", "dst_c")
-        .filter(F.col("src") != F.col("dst"))
+    link_edges = _redirect(
+        _mk(links, F.col("a_id"), F.col("b_id"), "related_to", F.col("score"), F.col("score")), cmap
     )
     # deterministic survivor per (src,dst,relation): dropDuplicates keeps an
     # arrival-order row, so when a merge and a supersede emit the same pair
@@ -282,23 +255,21 @@ def canonicalize(
     # Spark re-executes the shared subtree per reference. One eager
     # materialization truncates all of them (same rationale as cmap below).
     actions = actions.localCheckpoint(eager=True)
-    # cmap fans out into SIX plan references downstream (src/dst maps in
-    # rewrite_edges and dedup_edges_for_actions, fold + tombstone in
+    # cmap fans out into SIX plan references downstream (src/dst maps of
+    # both _redirect calls — the edge table's and the dedup link edges' —
+    # fold + tombstone in
     # merge_node_attrs) and Spark re-executes a referenced subtree per
     # reference — without the checkpoint the whole canonical_map lineage
     # (components + degree + rep window) ran up to 6x per action. The map is
     # small (retired nodes only; it is broadcast two lines down), so the
     # eager materialization is one cheap job that truncates all six.
     cmap = canonical_map(actions, nodes, edges).localCheckpoint(eager=True)
-    # ONE aggregation replaces {rewrite survivor dedup} + {anti-join of the
-    # dedup edges against the rewritten table} + {union}: tag redirected
-    # rows pri=0 and dedup-emitted rows pri=1 and take min_by
-    # (pri, created_at, edge_id) per (src,dst,relation). A group holding any
-    # redirected row keeps its earliest redirected row (exactly
-    # rewrite_edges' survivor) and discards the dedup row (exactly the old
-    # anti-join); a dedup-only group keeps its single row. The old plan also
-    # evaluated the full rewrite TWICE (the union referenced it on both
-    # sides of the anti-join).
+    # J14 edge rewrite (dedup.rs:233-278) and the dedup edges in ONE
+    # aggregation: tag redirected rows pri=0 and dedup-emitted rows pri=1
+    # and take min_by (pri, created_at, edge_id) per (src,dst,relation). A
+    # group holding any redirected row keeps its earliest redirected row
+    # (edge_id is unique, so that order is total) and discards the dedup
+    # row; a dedup-only group keeps its single row.
     redirected = _redirect(edges, cmap).withColumn("_pri", F.lit(0))
     dedup_e = dedup_edges_for_actions(actions, cmap, run_ts).withColumn("_pri", F.lit(1))
     unioned = redirected.unionByName(dedup_e)

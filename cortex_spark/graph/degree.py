@@ -1,9 +1,10 @@
-"""Degree aggregates (SURVEY §2.5 A3): two-phase, skew-safe.
+"""Degree aggregates (SURVEY §2.5 A3), skew-safe.
 
-degree = |out| + |in| (engine.rs:51); most_connected = top-N by degree
-(engine.rs:303-326). Each side aggregates independently before the union —
-partial (map-side) aggregation handles hot entities; the final top-N is a
-TakeOrdered, no full sort.
+degree = |out| + |in| (engine.rs:51; dedup.rs:180-183); most_connected =
+top-N by degree (engine.rs:303-326). Each edge explodes into its two
+endpoints and one count aggregates them — partial (map-side) aggregation
+handles hot entities before the single shuffle (a self-loop counts 2);
+the final top-N is a TakeOrdered, no full sort.
 """
 
 from __future__ import annotations
@@ -13,9 +14,11 @@ from pyspark.sql import functions as F
 
 
 def degree(edges: DataFrame) -> DataFrame:
-    out_d = edges.groupBy(F.col("src").alias("node_id")).agg(F.count(F.lit(1)).alias("d"))
-    in_d = edges.groupBy(F.col("dst").alias("node_id")).agg(F.count(F.lit(1)).alias("d"))
-    return out_d.unionByName(in_d).groupBy("node_id").agg(F.sum("d").alias("degree"))
+    return (
+        edges.select(F.explode(F.array("src", "dst")).alias("node_id"))
+        .groupBy("node_id")
+        .agg(F.count(F.lit(1)).alias("degree"))
+    )
 
 
 def most_connected(nodes: DataFrame, edges: DataFrame, n: int = 10) -> DataFrame:

@@ -71,9 +71,8 @@ class ConfigRule:
     weight: float = 0.8
     weight_is_score: bool = False
     bidirectional: bool = False
-    _neg_precomputed: bool = False  # set by apply_link_rules per pair frame
 
-    def predicate(self, score: Column) -> Column:
+    def predicate(self, score: Column, neg_precomputed: bool) -> Column:
         a, b = F.col, F.col
         cond = F.lit(True)
         if self.from_kind:
@@ -118,7 +117,7 @@ class ConfigRule:
                 F.col("a_tags"), lambda t: t == F.concat(F.lit(pfx), F.lower(F.col("b_title")))
             )
         elif c == "negation_detected":
-            cond = cond & (_neg_col("a", self._neg_precomputed) != _neg_col("b", self._neg_precomputed))
+            cond = cond & (_neg_col("a", neg_precomputed) != _neg_col("b", neg_precomputed))
         else:
             raise ValueError(f"unknown config-rule condition: {c}")
         return cond
@@ -180,8 +179,6 @@ def apply_link_rules(pairs: DataFrame, config: LinkerConfig | None = None) -> Da
     neg_pre = "a_neg" in pairs.columns
     a_neg = _neg_col("a", neg_pre)
     b_neg = _neg_col("b", neg_pre)
-    for r in cfg.config_rules:
-        r._neg_precomputed = neg_pre
 
     slots: list[Column] = [
         _edge_slot(
@@ -232,7 +229,7 @@ def apply_link_rules(pairs: DataFrame, config: LinkerConfig | None = None) -> Da
     for i, rule in enumerate(cfg.config_rules):
         w = score if rule.weight_is_score else F.lit(rule.weight)
         slots.append(
-            _edge_slot(rule.predicate(score), rule.relation, w, "auto_structural", F.lit(rule.name), F.lit(None).cast("float"), 10 + i)
+            _edge_slot(rule.predicate(score, neg_pre), rule.relation, w, "auto_structural", F.lit(rule.name), F.lit(None).cast("float"), 10 + i)
         )
     slots.append(
         _edge_slot(

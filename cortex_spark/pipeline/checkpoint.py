@@ -113,8 +113,8 @@ class CheckpointStore:
         os.rename(tmp, data_dir)
 
         out = self.spark.read.parquet(data_dir)
-        rows = out.count()
         lineage = _lineage_entries(out, data_dir)
+        rows = sum(e["rows"] for e in lineage)
         metrics = {"rows": rows, **(extra_metrics or {})}
         man = {
             "stage": stage,
@@ -134,10 +134,7 @@ class CheckpointStore:
         if man is None:
             return None
         data_dir = os.path.join(self._dir(stage), "data")
-        out = self.spark.read.parquet(data_dir)
-        rows = out.count()
-        man["rows"] = rows
-        man["metrics"]["rows"] = rows
-        man["lineage"] = _lineage_entries(out, data_dir)
+        man["lineage"] = _lineage_entries(self.spark.read.parquet(data_dir), data_dir)
+        man["rows"] = man["metrics"]["rows"] = sum(e["rows"] for e in man["lineage"])
         write_json_atomic(self.manifest_path(stage), man, indent=1, sort_keys=True)
         return man

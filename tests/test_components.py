@@ -161,3 +161,23 @@ def test_aqe_toggle_rounds_identical_and_restored(spark, thr, monkeypatch):
     assert spark.conf.get("spark.sql.adaptive.enabled", "true") == before
     ns = sorted({x for e in edges for x in e})
     assert got == set(union_find(edges, ns).items())
+
+
+def test_driver_path_leaves_session_conf_alone(spark, monkeypatch):
+    """The driver path sets no session conf: in a shared session a set
+    would race every concurrent query."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    calls = []
+    real_set = RuntimeConfig.set
+
+    def recording_set(self, key, value):
+        calls.append(key)
+        real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", recording_set)
+    edges = [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(10)]
+    stats: dict = {}
+    got = connected_components(spark.createDataFrame(edges, "src string, dst string"), stats=stats)
+    assert {r["node_id"]: r["component"] for r in got.collect()} == union_find(edges, sorted({x for e in edges for x in e}))
+    assert stats["driver_path"] and calls == []

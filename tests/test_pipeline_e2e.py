@@ -148,3 +148,19 @@ def test_checkpoint_resume(spark, tmp_path):
     cfg2 = PipelineConfig(embed_dim=64, lsh_bands=4)
     s3 = run_pipeline(spark, pages, str(tmp_path / "kg"), cfg2)
     assert not s3["stages"]["edges"]["resumed"]
+
+
+def test_config_rules_keep_the_config_hash(spark, tmp_path):
+    """Linking with a config rule leaves the config (and so its hash) as it
+    was: a second run of the same config object resumes every stage."""
+    from cortex_spark.linker.rules import ConfigRule, LinkerConfig
+    from cortex_spark.pipeline.run import PipelineConfig, run_pipeline
+
+    rule = ConfigRule(name="mentions", relation="mentions", condition="body_field_contains", field="refs")
+    cfg = PipelineConfig(embed_dim=64, linker=LinkerConfig(config_rules=[rule]))
+    h = cfg.hash()
+    pages = synth_pages(spark, 40, seed=9)
+    s1 = run_pipeline(spark, pages, str(tmp_path / "kg"), cfg)
+    assert cfg.hash() == h == s1["config_hash"]
+    s2 = run_pipeline(spark, pages, str(tmp_path / "kg"), cfg)
+    assert all(v["resumed"] for v in s2["stages"].values())
