@@ -21,29 +21,43 @@ import time
 from pyspark.sql import functions as F
 
 
-def host_probe(procs: int, secs: float = 2.0) -> float:
-    """512×512 float32 GEMMs/sec across `procs` processes — a host-health
-    fingerprint recorded alongside every bench run. This VM's Spark times
-    swing 2-5× with host state (see BASELINE.md methodology); a healthy box
-    measures ≈1800 at 8 procs / ≈6500 at 32; a degraded one reads 10-20% of
-    that, and wall-clock numbers taken then undersell the engine."""
-    import multiprocessing as mp
+# the host probe's GEMM processes run one BLAS thread each, whatever the
+# caller's environment: a multi-threaded BLAS per process measures
+# oversubscription, not host health
+_ONE_BLAS_THREAD = dict.fromkeys(("OPENBLAS_NUM_THREADS", "OMP_NUM_THREADS", "MKL_NUM_THREADS"), "1")
 
+
+def _burn(secs: float, start, q) -> None:
     import numpy as np
 
-    def burn(q):
-        a = np.random.RandomState(0).rand(512, 512).astype(np.float32)
-        t0 = time.time()
-        n = 0
-        while time.time() - t0 < secs:
-            a @ a
-            n += 1
-        q.put(n)
+    a = np.random.RandomState(0).rand(512, 512).astype(np.float32)
+    start.wait()  # every process is up before any starts counting
+    t0 = time.time()
+    n = 0
+    while time.time() - t0 < secs:
+        a @ a
+        n += 1
+    q.put(n)
 
-    q = mp.Queue()
-    ps = [mp.Process(target=burn, args=(q,)) for _ in range(procs)]
-    for p in ps:
-        p.start()
+
+def host_probe(procs: int, secs: float = 2.0) -> float:
+    """512×512 float32 GEMMs/sec across `procs` processes, one BLAS thread
+    each — a host-health fingerprint recorded alongside every bench run.
+    This VM's Spark times swing 2-5× with host state (see BASELINE.md
+    methodology); a degraded host reads 10-20% of its healthy figure, and
+    wall-clock numbers taken then undersell the engine. The processes are
+    spawned, not forked, so each loads its BLAS under the pinned thread
+    count."""
+    import multiprocessing as mp
+    from unittest import mock
+
+    ctx = mp.get_context("spawn")
+    q = ctx.Queue()
+    start = ctx.Barrier(procs)
+    ps = [ctx.Process(target=_burn, args=(secs, start, q)) for _ in range(procs)]
+    with mock.patch.dict(os.environ, _ONE_BLAS_THREAD):  # children inherit it at start
+        for p in ps:
+            p.start()
     total = sum(q.get() for _ in ps)
     for p in ps:
         p.join()

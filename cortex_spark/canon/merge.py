@@ -45,20 +45,9 @@ def _ts_lit(run_ts: datetime):
 
 
 def canonical_map(actions: DataFrame, nodes: DataFrame, edges: DataFrame) -> DataFrame:
-    """merge actions → (node_id, canonical) for every retired node."""
-    # eager checkpoint: this frame is tiny (dedup actions only), but its
-    # lineage is the full dedup_actions plan (degree over the whole edge
-    # table + joins + windows) and the consumers below re-execute referenced
-    # subtrees per reference — isEmpty is one execution and the fast path's
-    # bounded limit scan inside connected_components is several MORE jobs
-    # (CollectLimit grows its partition batch per attempt). Measured at the
-    # 100k-page bench point: those limit jobs alone were ~5.3 s of canon's
-    # 10.5 s warm wall.
-    merges = (
-        actions.filter(F.col("action") == "merge")
-        .select("keep", "retire")
-        .localCheckpoint(eager=True)
-    )
+    """merge actions → (node_id, canonical) for every retired node.
+    `actions` comes materialized (canonicalize checkpoints it)."""
+    merges = actions.filter(F.col("action") == "merge").select("keep", "retire")
     if merges.isEmpty():
         return merges.sparkSession.createDataFrame([], "node_id string, canonical string")
     comp = connected_components(merges, src="keep", dst="retire")

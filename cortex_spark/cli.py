@@ -69,9 +69,13 @@ def parse_duration(s: str) -> timedelta:
 
 
 def _store_tables(spark, store: str):
-    nodes = spark.read.parquet(f"{store}/canonical_nodes/data")
-    edges = spark.read.parquet(f"{store}/canonical_edges/data")
-    return nodes, edges
+    from cortex_spark.io import recover_parquet
+
+    # a rewrite killed between its renames leaves the previous table aside
+    paths = [f"{store}/canonical_nodes/data", f"{store}/canonical_edges/data"]
+    for p in paths:
+        recover_parquet(p)
+    return tuple(spark.read.parquet(p) for p in paths)
 
 
 def _node_row_json(r) -> dict:
@@ -90,17 +94,6 @@ def _audit_append(spark, store: str, action: str, target_id: str, actor: str = "
     now = datetime.utcnow().replace(microsecond=0)
     row = spark.createDataFrame([(now, action, target_id, actor, details)], AUDIT)
     AuditLog(f"{store}/audit", spark).append(row)
-
-
-def _overwrite_nodes(spark, store: str, nodes_df) -> None:
-    """Safe in-place rewrite of the node table (tmp write + republish)."""
-    import shutil
-
-    path = f"{store}/canonical_nodes/data"
-    tmp = path + "_tmp"
-    nodes_df.write.mode("overwrite").partitionBy("kind").parquet(tmp)
-    spark.read.parquet(tmp).write.mode("overwrite").partitionBy("kind").parquet(path)
-    shutil.rmtree(tmp, ignore_errors=True)  # don't leave a stale table copy in the store
 
 
 def _refresh(spark, store: str, stage: str) -> None:
@@ -781,6 +774,7 @@ def _cmd_prompt(spark, args, nodes, edges) -> int:
 def _cmd_node(spark, args, nodes) -> int:
     from pyspark.sql import functions as F
 
+    from cortex_spark.io import publish_parquet
     from cortex_spark.schemas import NODES
 
     if args.node_cmd == "create":
@@ -818,13 +812,13 @@ def _cmd_node(spark, args, nodes) -> int:
         if nodes.filter(F.col("node_id") == args.id).isEmpty():
             return _die(f"node {args.id} not found")
         now = datetime.utcnow().replace(microsecond=0)
-        _overwrite_nodes(spark, args.store, nodes.withColumn(
+        publish_parquet(nodes.withColumn(
             "deleted",
             F.when(F.col("node_id") == args.id, F.lit(True)).otherwise(F.col("deleted")),
         ).withColumn(
             "updated_at",
             F.when(F.col("node_id") == args.id, F.lit(now)).otherwise(F.col("updated_at")),
-        ))
+        ), f"{args.store}/canonical_nodes/data", ["kind"])
         _refresh(spark, args.store, "canonical_nodes")
         _audit_append(spark, args.store, "node.deleted", args.id)
         print(json.dumps({"deleted": args.id}))
@@ -999,18 +993,10 @@ def _cmd_export(args, nodes, edges) -> int:
     return 0
 
 
-def _overwrite_edges(spark, store: str, edges_df) -> None:
-    import shutil
-
-    path = f"{store}/canonical_edges/data"
-    tmp = path + "_tmp"
-    edges_df.write.mode("overwrite").partitionBy("relation").parquet(tmp)
-    spark.read.parquet(tmp).write.mode("overwrite").partitionBy("relation").parquet(path)
-    shutil.rmtree(tmp, ignore_errors=True)  # don't leave a stale table copy in the store
-
-
 def _cmd_agent(spark, args, nodes, edges) -> int:
     from pyspark.sql import functions as F
+
+    from cortex_spark.io import publish_parquet
 
     agents = nodes.filter((F.col("kind") == "agent") & ~F.coalesce(F.col("deleted"), F.lit(False)))
     if args.agent_cmd == "list":
@@ -1041,8 +1027,8 @@ def _cmd_agent(spark, args, nodes, edges) -> int:
         if args.agent_cmd == "unbind":
             if eid_existing is None:
                 return _die(f"{args.name!r} has no binding to {args.slug!r}")
-            _overwrite_edges(spark, args.store,
-                             edges.filter(F.col("edge_id") != eid_existing[0]))
+            publish_parquet(edges.filter(F.col("edge_id") != eid_existing[0]),
+                            f"{args.store}/canonical_edges/data", ["relation"])
             _refresh(spark, args.store, "canonical_edges")
             _audit_append(spark, args.store, "edge.pruned", eid_existing[0], actor="agent-unbind")
             print(json.dumps({"unbound": args.slug, "agent": args.name}))
@@ -1054,7 +1040,7 @@ def _cmd_agent(spark, args, nodes, edges) -> int:
                 F.when(F.col("edge_id") == eid_existing[0],
                        F.lit(float(args.weight)).cast("float")).otherwise(F.col("weight")),
             )
-            _overwrite_edges(spark, args.store, updated)
+            publish_parquet(updated, f"{args.store}/canonical_edges/data", ["relation"])
             eid = eid_existing[0]
         else:
             eid = f"{a['node_id']}-{head['node_id']}-uses"
@@ -1171,6 +1157,7 @@ def _cmd_agent_observe(spark, args, nodes, edges, a) -> int:
 
     from pyspark.sql import types as T
 
+    from cortex_spark.io import publish_parquet
     from cortex_spark.prompt import observation_score_col, update_edge_weight_col
 
     target = edges.filter(
@@ -1207,7 +1194,7 @@ def _cmd_agent_observe(spark, args, nodes, edges, a) -> int:
                                    F.lit(obs["obs_score"])).cast("float"),
         ).otherwise(F.col("weight")),
     )
-    _overwrite_edges(spark, args.store, updated)
+    publish_parquet(updated, f"{args.store}/canonical_edges/data", ["relation"])
     _refresh(spark, args.store, "canonical_edges")
     _audit_append(spark, args.store, "node.updated", args.variant_id, actor="agent-observe",
                   details=f"obs_score={obs['obs_score']:.4f}")

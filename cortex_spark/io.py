@@ -7,6 +7,11 @@
   (GET /graph/export, cortex-server/src/http/viz.rs).
 - write_json_atomic: crash-safe JSON file writes (stage manifests, the
   incremental cursor, the LSH index meta).
+- publish_parquet: its table-level counterpart — every table rewrite
+  (stage checkpoints, CLI mutations, index compaction, streaming state);
+  recover_parquet undoes a publish killed between its renames.
+- parquet_file_rows: per-file row counts from parquet footers (stage
+  manifest lineage).
 """
 
 from __future__ import annotations
@@ -14,6 +19,7 @@ from __future__ import annotations
 import contextlib
 import json
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -104,3 +110,52 @@ def write_json_atomic(path: str, obj, **dump_kw) -> None:
         with contextlib.suppress(FileNotFoundError):
             os.remove(tmp)
         raise
+
+
+def recover_parquet(path: str) -> None:
+    """Put the previous table back at `path` when a publish died between
+    its two renames (`<path>` gone, `<path>_old` still there)."""
+    old = f"{path}_old"
+    if not os.path.isdir(path) and os.path.isdir(old):
+        os.rename(old, path)
+
+
+def publish_parquet(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
+    """Replace the parquet table at `path` with `df`, written once.
+
+    `df` is written to `<path>_tmp`; then `<path>` is renamed to
+    `<path>_old`, `<path>_tmp` to `<path>`, and `<path>_old` removed. A
+    kill leaves either the previous table at `<path>`, or none there and
+    the previous one at `<path>_old`, which the next publish restores
+    first (`recover_parquet`) — so `df` may read the table it replaces. The
+    live path is never half-written."""
+    recover_parquet(path)
+    tmp, old = f"{path}_tmp", f"{path}_old"
+    writer = df.write.mode("overwrite")
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.parquet(tmp)
+    shutil.rmtree(old, ignore_errors=True)
+    if os.path.isdir(path):
+        os.rename(path, old)
+    os.rename(tmp, path)
+    shutil.rmtree(old, ignore_errors=True)
+
+
+def parquet_file_rows(path: str) -> list[dict]:
+    """Sorted {"file", "rows"} entries, one per data file of the parquet
+    table at `path` that holds rows: `file` relative to `path`, `rows` read
+    from the file's footer on the driver (no Spark job). Names starting
+    with `_` or `.` are skipped, as Spark's file listing skips them."""
+    import pyarrow.parquet as pq
+
+    entries = []
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        for name in files:
+            if name.endswith(".parquet") and not name.startswith(("_", ".")):
+                full = os.path.join(root, name)
+                rows = pq.read_metadata(full).num_rows
+                if rows:
+                    entries.append({"file": os.path.relpath(full, path), "rows": rows})
+    return sorted(entries, key=lambda e: e["file"])

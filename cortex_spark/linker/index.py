@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cortex_spark.functions.similarity import cosine_from_norms, l2_norm_col, top_k_by_score
-from cortex_spark.io import write_json_atomic
+from cortex_spark.io import parquet_file_rows, publish_parquet, write_json_atomic
 from cortex_spark.linker.lsh import add_lsh_bands
 
 # Signature rows are written partitionBy("bucket") with
@@ -148,7 +148,6 @@ class LshIndexStore:
         k: int = 10,
         id_col: str = "node_id",
         vec_col: str = "embedding",
-        exclude_self: bool = True,
     ) -> DataFrame:
         """(a_id, b_id, score): top-k stored neighbors per query node.
 
@@ -159,15 +158,13 @@ class LshIndexStore:
         The index is scanned once, in the PROBED bucket partitions only, and
         never re-bucketed or re-embedded; each sig's hot bucket is capped at
         `max_bucket` newest-first (the quadratic-blowup guard candidate_topk
-        also applies); one aggregate per stored node
-        resolves its NEWEST appended vector (max append_seq), its norm and
-        the queries it met. Callers semi-join b_id against their live set to
-        drop tombstoned entries (HNSW-stale semantics)."""
+        also applies); a query never meets its own id; one aggregate per
+        stored node resolves its NEWEST appended vector (max append_seq), its
+        norm and the queries it met. Callers semi-join b_id against their
+        live set to drop tombstoned entries (HNSW-stale semantics)."""
         from cortex_spark.linker.lsh import DEFAULT_MAX_BUCKET
 
         idx = self.spark.read.parquet(self.data_dir)
-        if "append_seq" not in idx.columns:  # pre-versioning index layout
-            idx = idx.withColumn("append_seq", F.lit(0))
         # the query side, materialized once: one row per query node with its
         # vector, norm and band signatures (the only Arrow UDF run)
         qn = (
@@ -182,17 +179,16 @@ class LshIndexStore:
             .localCheckpoint(eager=True)
         )
         q = qn.select("a_id", F.explode("lsh_sigs").alias("sig")).filter(F.col("sig").isNotNull())
-        if "bucket" in idx.columns:
-            # partition pruning: collect the probe's ≤ N_BUCKET_PARTS distinct
-            # bucket values (a tiny query-side job) and filter the scan — the
-            # index read touches only the probed bucket partitions
-            bvals = [
-                r["b"]
-                for r in q.select(
-                    F.pmod(F.xxhash64("sig"), F.lit(N_BUCKET_PARTS)).alias("b")
-                ).distinct().collect()
-            ]
-            idx = idx.filter(F.col("bucket").isin(bvals))
+        # partition pruning: collect the probe's ≤ N_BUCKET_PARTS distinct
+        # bucket values (a tiny query-side job) and filter the scan — the
+        # index read touches only the probed bucket partitions
+        bvals = [
+            r["b"]
+            for r in q.select(
+                F.pmod(F.xxhash64("sig"), F.lit(N_BUCKET_PARTS)).alias("b")
+            ).distinct().collect()
+        ]
+        idx = idx.filter(F.col("bucket").isin(bvals))
         idx = idx.select(
             F.col("node_id").alias("b_id"), F.col("vec").alias("b_vec"), "sig",
             F.col("append_seq").alias("b_seq"),
@@ -207,9 +203,7 @@ class LshIndexStore:
             .filter(F.col("rn") <= DEFAULT_MAX_BUCKET)
             .drop("rn")
         )
-        cands = idx_hit.join(q, "sig")
-        if exclude_self:
-            cands = cands.filter(F.col("a_id") != F.col("b_id"))
+        cands = idx_hit.join(q, "sig").filter(F.col("a_id") != F.col("b_id"))
         # newest VISIBLE version of each stored node wins for re-appended
         # (updated) nodes — resolved per b_id across all probed buckets, so
         # a candidate surfaced via a stale version's signature still scores
@@ -237,21 +231,10 @@ class LshIndexStore:
         its max append_seq) — the maintenance analogue of an HNSW rebuild.
         Returns the number of surviving signature rows."""
         idx = self.spark.read.parquet(self.data_dir)
-        if "append_seq" not in idx.columns:
-            return idx.count()
         latest = idx.groupBy("node_id").agg(F.max("append_seq").alias("append_seq"))
-        kept = idx.join(latest, ["node_id", "append_seq"])
-        if "bucket" not in kept.columns:  # migrate pre-bucketing layouts
-            kept = kept.withColumn("bucket", F.pmod(F.xxhash64("sig"), F.lit(N_BUCKET_PARTS)))
-        tmp = self.data_dir + "_compact"
-        kept.write.mode("overwrite").partitionBy("bucket").parquet(tmp)
-        out = self.spark.read.parquet(tmp)
-        n = out.count()
-        n_nodes = out.select("node_id").distinct().count()
-        out.write.mode("overwrite").partitionBy("bucket").parquet(self.data_dir)
-        import shutil
-
-        shutil.rmtree(tmp, ignore_errors=True)
+        publish_parquet(idx.join(latest, ["node_id", "append_seq"]), self.data_dir, ["bucket"])
+        n = sum(e["rows"] for e in parquet_file_rows(self.data_dir))
+        n_nodes = self.spark.read.parquet(self.data_dir).select("node_id").distinct().count()
         # refresh the corpus-size hint: after compaction rows_indexed counts
         # surviving distinct nodes, not the append history (hybrid.vector_search
         # reads this driver-side to pick brute-vs-index without a count job)

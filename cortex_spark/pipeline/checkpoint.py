@@ -4,11 +4,12 @@ The reference persists an auto-linker cursor + cycle count in a meta table
 (auto_linker.rs:95-132, 277-280, 343-361) and resets it when config changed
 (auto_linker.rs:137-182). Here each pipeline *stage* writes:
 
-- its output as a parquet table under `<root>/<stage>/` (atomic via
-  write-to-tmp + rename; with an Iceberg catalog this becomes
+- its output as a parquet table under `<root>/<stage>/data` (published
+  by `io.publish_parquet`: written once beside the live path, swapped in
+  by rename; with an Iceberg catalog this becomes
   `writeTo(...).overwritePartitions()` and the manifest is the snapshot),
-- a `_manifest.json` with the stage name, config hash, input signature,
-  row count and per-partition lineage (files + rows) + metrics.
+- a `_manifest.json` with the stage name, config hash, row count and
+  per-file lineage (files + rows, from the parquet footers) + metrics.
 
 `load_or_run` makes any stage resumable: if a manifest exists with a
 matching config hash the stage is skipped and its table is read back —
@@ -19,16 +20,16 @@ like the reference's cursor reset on config change.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
-import shutil
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from cortex_spark.io import write_json_atomic
+from cortex_spark.io import parquet_file_rows, publish_parquet, write_json_atomic
 
 
 def config_hash(obj) -> str:
@@ -44,29 +45,6 @@ class StageResult:
     rows: int
     resumed: bool
     metrics: dict
-
-
-def _lineage_entries(out: DataFrame, data_dir: str) -> list[dict]:
-    """Per-file lineage: parquet file → row count (shared by load_or_run
-    and refresh_manifest so the two can never drift)."""
-
-    def _local_path(uri: str) -> str:
-        # input_file_name() yields file:/... or file:///... URIs
-        if uri.startswith("file:"):
-            uri = uri[len("file:") :]
-            while uri.startswith("//"):
-                uri = uri[1:]
-        return uri
-
-    return sorted(
-        (
-            {"file": os.path.relpath(_local_path(r["file"]), data_dir), "rows": r["rows"]}
-            for r in out.groupBy(F.input_file_name().alias("file"))
-            .agg(F.count(F.lit(1)).alias("rows"))
-            .collect()
-        ),
-        key=lambda e: e["file"],
-    )
 
 
 class CheckpointStore:
@@ -104,16 +82,18 @@ class CheckpointStore:
             return df, StageResult(stage, data_dir, man["rows"], True, man.get("metrics", {}))
 
         df = build()
-        tmp = os.path.join(self._dir(stage), "_tmp")
-        shutil.rmtree(self._dir(stage), ignore_errors=True)
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(tmp)
-        os.rename(tmp, data_dir)
+        # no manifest may outlive the table it describes: a kill from here
+        # until the new manifest lands leaves the stage to recompute
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(self.manifest_path(stage))
+        publish_parquet(df, data_dir, partition_by)
 
-        out = self.spark.read.parquet(data_dir)
-        lineage = _lineage_entries(out, data_dir)
+        # read back under the data columns' written schema: no footer to
+        # infer it from, so no Spark job. Partition column types are still
+        # inferred from the directory names, as on resume.
+        data_schema = StructType([f for f in df.schema if f.name not in (partition_by or ())])
+        out = self.spark.read.schema(data_schema).parquet(data_dir)
+        lineage = parquet_file_rows(data_dir)
         rows = sum(e["rows"] for e in lineage)
         metrics = {"rows": rows, **(extra_metrics or {})}
         man = {
@@ -134,7 +114,7 @@ class CheckpointStore:
         if man is None:
             return None
         data_dir = os.path.join(self._dir(stage), "data")
-        man["lineage"] = _lineage_entries(self.spark.read.parquet(data_dir), data_dir)
+        man["lineage"] = parquet_file_rows(data_dir)
         man["rows"] = man["metrics"]["rows"] = sum(e["rows"] for e in man["lineage"])
         write_json_atomic(self.manifest_path(stage), man, indent=1, sort_keys=True)
         return man

@@ -101,7 +101,7 @@ def run_cycle(
     cursor_lit = F.to_timestamp(F.lit(cursor.strftime("%Y-%m-%d %H:%M:%S")))
     live = linkable(nodes)
     fresh = select_fresh(live, cursor_lit, max_nodes_per_cycle).localCheckpoint(eager=True)
-    n_fresh = fresh.count()
+    n_fresh, max_created = fresh.agg(F.count(F.lit(1)), F.max("created_at")).first()
     if n_fresh == 0:
         metrics = {"nodes_processed": 0, "edges_created": 0, "cursor": cursor.isoformat(), "cycle": cycle + 1}
         _write_meta(meta_path, cursor, cycle + 1, chash, metrics)
@@ -133,11 +133,10 @@ def run_cycle(
         proposed, cfg, now, existing_edges, max_edges=max_edges_per_cycle
     ).localCheckpoint(eager=True)
 
-    n_edges = new_edges.count()
-    generic = (
-        new_edges.groupBy("src").count().filter(F.col("count") >= GENERIC_CONTENT_THRESHOLD).count()
-    )
-    max_created = fresh.agg(F.max("created_at")).first()[0]
+    # one row per linked fresh node: a driver-sized collect
+    per_src = [r["count"] for r in new_edges.groupBy("src").count().collect()]
+    n_edges = sum(per_src)
+    generic = sum(c >= GENERIC_CONTENT_THRESHOLD for c in per_src)
     new_cursor = max(cursor.replace(tzinfo=None), max_created) if max_created else cursor.replace(tzinfo=None)
     metrics = {
         "nodes_processed": n_fresh,

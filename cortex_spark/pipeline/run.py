@@ -76,7 +76,7 @@ def run_pipeline(
     )
     summary["stages"]["nodes"] = asdict(r1)
 
-    lsh_kwargs = {"n_planes": cfg.lsh_planes, "bands": cfg.lsh_bands}
+    lsh_kwargs = {"n_planes": cfg.lsh_planes, "bands": cfg.lsh_bands, "dim": cfg.embed_dim}
 
     # The candidate and canon results below are built lazily, at most once
     # per build: only when a stage that needs them is not resumed.

@@ -19,7 +19,6 @@ ingest/autolink jobs:
 from __future__ import annotations
 
 import os
-import shutil
 from collections.abc import Iterator
 
 import pandas as pd
@@ -28,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from cortex_spark.io import publish_parquet, recover_parquet
 from cortex_spark.streaming.ingest import EVENT_SCHEMA, warren_events_to_nodes
 
 
@@ -128,13 +128,11 @@ def stream_agent_state(spark: SparkSession, source_dir: str, out_dir: str):
         fresh = batch_df.localCheckpoint(eager=True)
         if fresh.isEmpty():
             return
-        # crash-window recovery: a previous attempt may have renamed the
-        # live dir away (stats_dir_old) without publishing its replacement —
-        # restore it before the first-run check below can misread the gap
-        # as a fresh store
-        old_dir = stats_dir + "_old"
-        if not os.path.isdir(stats_dir) and os.path.isdir(old_dir):
-            os.rename(old_dir, stats_dir)
+        # crash-window recovery: a previous publish may have renamed the
+        # live dir away without publishing its replacement — restore it
+        # before the first-run check below can misread the gap as a fresh
+        # store
+        recover_parquet(stats_dir)
         # First-run detection by path existence, NOT a bare except: a
         # transient read failure must propagate (batch retries) rather
         # than silently overwrite the store with only this batch's agents.
@@ -145,18 +143,11 @@ def stream_agent_state(spark: SparkSession, source_dir: str, out_dir: str):
             merged = old.join(fresh.select("agent"), "agent", "left_anti").unionByName(fresh)
         else:
             merged = fresh
-        # atomic publish: write to tmp, then rename over the old dir — a
-        # crash mid-overwrite of stats_dir itself would otherwise leave a
-        # partial dir that the first-run check above reads as "fresh store",
+        # a crash mid-overwrite of stats_dir itself would leave a partial
+        # dir that the first-run check above reads as "fresh store",
         # resetting accumulated state (the failure mode this block exists
-        # to prevent)
-        tmp = stats_dir + "_tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        shutil.rmtree(old_dir, ignore_errors=True)
-        if os.path.isdir(stats_dir):
-            os.rename(stats_dir, old_dir)
-        os.rename(tmp, stats_dir)
-        shutil.rmtree(old_dir, ignore_errors=True)
+        # to prevent) — publish swaps the new table in by rename instead
+        publish_parquet(merged, stats_dir)
 
     return (
         updated.writeStream.outputMode("update")

@@ -33,6 +33,8 @@ import sys
 import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+from bench import host_probe  # noqa: E402
 
 _CHILD = """
 import json, sys, time, urllib.request
@@ -126,30 +128,6 @@ def one_leg(n: int, cpus: int, k: int, frozen: bool, timeout: int = 7200) -> dic
         f"{(out.stdout or '')[-1500:]}\n{(out.stderr or '')[-2500:]}")
 
 
-def host_probe(procs: int = 8, secs: float = 2.0) -> float:
-    import multiprocessing as mp
-
-    import numpy as np
-
-    def burn(q):
-        a = np.random.RandomState(0).rand(512, 512).astype(np.float32)
-        t0 = time.time()
-        c = 0
-        while time.time() - t0 < secs:
-            a @ a
-            c += 1
-        q.put(c)
-
-    q: "mp.Queue" = mp.Queue()
-    ps = [mp.Process(target=burn, args=(q,)) for _ in range(procs)]
-    for p in ps:
-        p.start()
-    total = sum(q.get() for _ in ps)
-    for p in ps:
-        p.join()
-    return round(total / secs, 1)
-
-
 def main() -> None:
     if "--help" in sys.argv or "-h" in sys.argv:
         print(__doc__)
@@ -159,12 +137,12 @@ def main() -> None:
     k = int(sys.argv[3]) if len(sys.argv) > 3 else 100
     legs = []
     for frozen in (False, True, True, False):  # T-F-F-T interleave
-        probe = host_probe()
+        probe = host_probe(8)
         leg = one_leg(n, cpus, k, frozen)
         leg["probe_before"] = probe
         legs.append(leg)
         time.sleep(30)
-    probe_end = host_probe()
+    probe_end = host_probe(8)
     tuned = min((l for l in legs if l["arm"] == "tuned"), key=lambda r: r["cand_wall_sec"])
     frozen_ = min((l for l in legs if l["arm"] == "frozen"), key=lambda r: r["cand_wall_sec"])
     probes = [l["probe_before"] for l in legs] + [probe_end]

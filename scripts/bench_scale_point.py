@@ -23,6 +23,10 @@ import subprocess
 import sys
 import time
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+from bench import host_probe  # noqa: E402
+
 _CHILD = """
 import json, sys, time, urllib.request
 sys.path.insert(0, {root!r})
@@ -133,40 +137,13 @@ def one_leg(cpus: int, n_pages: int, timeout: int = 7200, frozen_lsh: bool = Fal
     raise RuntimeError(f"leg failed (cpus={cpus}):\n{out.stdout[-2000:]}\n{out.stderr[-2000:]}")
 
 
-def host_probe(procs: int = 8, secs: float = 2.0) -> float:
-    """512×512 float32 GEMMs/sec across `procs` processes — the SAME
-    fingerprint bench.py records (healthy ≈1800 @8), so scale-point legs
-    are comparable against every other committed number."""
-    import multiprocessing as mp
-
-    import numpy as np
-
-    def burn(q):
-        a = np.random.RandomState(0).rand(512, 512).astype(np.float32)
-        t0 = time.time()
-        n = 0
-        while time.time() - t0 < secs:
-            a @ a
-            n += 1
-        q.put(n)
-
-    q: mp.Queue = mp.Queue()
-    ps = [mp.Process(target=burn, args=(q,)) for _ in range(procs)]
-    for p in ps:
-        p.start()
-    total = sum(q.get() for _ in ps)
-    for p in ps:
-        p.join()
-    return round(total / secs, 1)
-
-
 def wait_for_health(min_gemms: float, max_wait: float = 7200.0) -> float:
     """Block until the host probe clears min_gemms (the VM's health swings
     by ~8× on hypervisor weather — rounds 2-4 all measured it; a timed leg
     on a sick host is noise, not evidence). Returns the passing probe."""
     t0 = time.time()
     while True:
-        g = host_probe()
+        g = host_probe(8)
         if g >= min_gemms or time.time() - t0 > max_wait:
             if g < min_gemms:
                 print(f"# health gate TIMED OUT at {g} gemms/s (wanted {min_gemms})",
@@ -193,7 +170,7 @@ def main() -> None:
     for _ in range(timed_legs):
         probes.append(wait_for_health(health_min, max_wait=health_wait))
         legs.append(one_leg(cpus, n_pages, frozen_lsh=frozen, skew=skew))
-        probes.append(host_probe())
+        probes.append(host_probe(8))
         time.sleep(45)
     best = min(legs, key=lambda r: r["total_sec"])
     det = one_leg(det_cpus, n_pages, frozen_lsh=frozen, skew=skew)

@@ -44,6 +44,8 @@ import threading
 import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+from bench import host_probe  # noqa: E402
 
 _STAGE_HEADER = """
 import json, sys, time, urllib.request
@@ -269,30 +271,6 @@ def run_chain(n_pages: int, cpus: int, work: str, n_groups: int, driver_mem: str
     }
 
 
-def host_probe(procs: int = 8, secs: float = 2.0) -> float:
-    import multiprocessing as mp
-
-    import numpy as np
-
-    def burn(q):
-        a = np.random.RandomState(0).rand(512, 512).astype(np.float32)
-        t0 = time.time()
-        n = 0
-        while time.time() - t0 < secs:
-            a @ a
-            n += 1
-        q.put(n)
-
-    q: "mp.Queue" = mp.Queue()
-    ps = [mp.Process(target=burn, args=(q,)) for _ in range(procs)]
-    for p in ps:
-        p.start()
-    total = sum(q.get() for _ in ps)
-    for p in ps:
-        p.join()
-    return round(total / secs, 1)
-
-
 def main() -> None:
     if "--help" in sys.argv or "-h" in sys.argv:
         print(__doc__)
@@ -310,9 +288,9 @@ def main() -> None:
     if not any("java" in (open(f"/proc/{p}/comm").read() if p.isdigit() else "")
                for p in os.listdir("/proc") if p.isdigit()):
         shutil.rmtree("/tmp/spark-local", ignore_errors=True)
-    probes = [host_probe()]
+    probes = [host_probe(8)]
     timed = run_chain(n_pages, cpus, "/tmp/scale_staged_timed", n_groups, driver_mem)
-    probes.append(host_probe())
+    probes.append(host_probe(8))
     out: dict = {
         "metric": "kg_scale_point_staged",
         "n_pages": n_pages,

@@ -27,6 +27,8 @@ import sys
 import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+from bench import host_probe  # noqa: E402
 
 _CHILD = """
 import json, sys, time
@@ -71,36 +73,12 @@ def one_leg(cpus: int, n_pages: int, skew: bool) -> dict:
     return json.loads(out.stdout.strip().splitlines()[-1])
 
 
-def host_probe(procs: int = 8, secs: float = 2.0) -> float:
-    import multiprocessing as mp
-
-    import numpy as np
-
-    def burn(q):
-        a = np.random.RandomState(0).rand(512, 512).astype(np.float32)
-        t0 = time.time()
-        n = 0
-        while time.time() - t0 < secs:
-            a @ a
-            n += 1
-        q.put(n)
-
-    q: "mp.Queue" = mp.Queue()
-    ps = [mp.Process(target=burn, args=(q,)) for _ in range(procs)]
-    for p in ps:
-        p.start()
-    total = sum(q.get() for _ in ps)
-    for p in ps:
-        p.join()
-    return round(total / secs, 1)
-
-
 def main() -> None:
     n_pages = int(sys.argv[1]) if len(sys.argv) > 1 else 64000
     cpus = int(sys.argv[2]) if len(sys.argv) > 2 else 8
     legs = []
     for skew in (False, True, True, False):  # interleaved U-S-S-U
-        probe = host_probe()
+        probe = host_probe(8)
         leg = one_leg(cpus, n_pages, skew)
         leg["probe_before"] = probe
         legs.append(leg)

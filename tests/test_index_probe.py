@@ -8,7 +8,7 @@ rows with `==` — scores must be bit-identical, not close:
 
 - a re-appended (updated) node whose STALE signature surfaces it scores
   against its newest vector;
-- `exclude_self` both ways;
+- a query that is also a stored node never meets itself;
 - hot buckets past the cap (`DEFAULT_MAX_BUCKET` patched small);
 - an all-zero embedding scores 0.0;
 - a `k` that cuts inside a score tie keeps the lowest ids.
@@ -35,7 +35,6 @@ def _probe_oracle(
     k: int = 10,
     id_col: str = "node_id",
     vec_col: str = "embedding",
-    exclude_self: bool = True,
 ) -> DataFrame:
     from cortex_spark.linker.lsh import DEFAULT_MAX_BUCKET
 
@@ -65,9 +64,7 @@ def _probe_oracle(
         .filter(F.col("rn") <= DEFAULT_MAX_BUCKET)
         .drop("rn")
     )
-    cands = idx_hit.join(q, "sig")
-    if exclude_self:
-        cands = cands.filter(F.col("a_id") != F.col("b_id"))
+    cands = idx_hit.join(q, "sig").filter(F.col("a_id") != F.col("b_id"))
     latest_b = cands.groupBy("b_id").agg(
         F.max_by(F.col("b_vec"), F.col("b_seq")).alias("b_latest")
     )
@@ -113,16 +110,14 @@ def index(spark, tmp_path_factory):
     return store, queries, q
 
 
-@pytest.mark.parametrize("exclude_self", [True, False])
-def test_probe_matches_oracle(index, exclude_self):
+def test_probe_matches_oracle(index):
     store, queries, _ = index
     for k in (2, 50):  # k=2 cuts inside q_t's three-way tie
-        want = _rows(_probe_oracle(store, queries, k=k, exclude_self=exclude_self))
-        got = _rows(store.probe(queries, k=k, exclude_self=exclude_self))
+        want = _rows(_probe_oracle(store, queries, k=k))
+        got = _rows(store.probe(queries, k=k))
         assert got == want, (k, got ^ want)
-    # r00 is both a query and a stored node: it meets itself only when
-    # exclude_self is off
-    assert (("r00", "r00") in {(a, b) for a, b, _ in got}) is not exclude_self
+        # r00 is both a query and a stored node: it never meets itself
+        assert ("r00", "r00") not in {(a, b) for a, b, _ in got}
 
 
 def test_stale_signature_scores_newest_vector(index):
@@ -137,14 +132,13 @@ def test_stale_signature_scores_newest_vector(index):
 def test_newest_version_resolved_after_exclude_self(spark, index):
     """`u` probes with its current vector (-q), as a re-appended fresh node
     does in a cycle. Its self-match is the only row that sees its second
-    version, so with exclude_self that version stays invisible and q_u
-    scores against the first (+1); without it, against the second (-1)."""
+    version, so with the self-match dropped that version stays invisible
+    and q_u scores against the first (+1)."""
     store, _, q = index
     queries = spark.createDataFrame([("u", _vec(-q)), ("q_u", _vec(q))], SCHEMA)
-    for exclude_self, want_score in ((True, 1.0), (False, -1.0)):
-        got = _rows(store.probe(queries, k=50, exclude_self=exclude_self))
-        assert got == _rows(_probe_oracle(store, queries, k=50, exclude_self=exclude_self))
-        assert {(a, b): s for a, b, s in got}[("q_u", "u")] == pytest.approx(want_score)
+    got = _rows(store.probe(queries, k=50))
+    assert got == _rows(_probe_oracle(store, queries, k=50))
+    assert {(a, b): s for a, b, s in got}[("q_u", "u")] == pytest.approx(1.0)
 
 
 def test_zero_embedding_scores_zero(index):

@@ -116,3 +116,42 @@ def test_run_pipeline_canonicalizes_once(spark, tmp_path, monkeypatch):
     summary = run_pipeline(spark, synth_pages(spark, 40, seed=9), str(tmp_path / "kg"), PipelineConfig(embed_dim=64))
     assert len(calls) == 1
     assert summary["audit_rows"] > summary["stages"]["nodes"]["rows"]
+
+
+def test_cycle_metrics_from_one_pass_each(spark, nodes_df_factory, edges_df_factory, tmp_path):
+    """run_cycle takes its counts from one aggregate over the fresh nodes and
+    one collect of the per-source edge counts; the metrics equal the
+    separate counts they replace, on a cycle where one fresh node gets ≥ 30
+    edges (a generic-content node)."""
+    from cortex_spark.pipeline.incremental import GENERIC_CONTENT_THRESHOLD, run_cycle
+
+    rng = np.random.default_rng(5)
+    hub, lone = np.eye(16)[0], np.eye(16)[1]
+
+    def near(center, i):
+        return make_node(
+            f"{'h' if center is hub else 'l'}{i:02d}", created_at="2025-06-01 00:00:00",
+            embedding=[float(x) for x in center + 0.02 * rng.normal(size=16)],
+        )
+
+    rows = [near(hub, i) for i in range(40)] + [near(lone, i) for i in range(3)]
+    rows += [
+        make_node("fresh_hub", embedding=[float(x) for x in hub], created_at=FRESH),
+        make_node("fresh_lone", embedding=[float(x) for x in lone], created_at="2026-01-01 13:00:00"),
+    ]
+    nodes = nodes_df_factory(rows)
+    edges, metrics = run_cycle(nodes, edges_df_factory([]), str(tmp_path / "meta.json"), now=NOW)
+
+    per_src = edges.groupBy("src").count()
+    want = {
+        "nodes_processed": 2,
+        "edges_created": edges.count(),
+        "generic_content_nodes": per_src.filter(F.col("count") >= GENERIC_CONTENT_THRESHOLD).count(),
+        "cursor": "2026-01-01T13:00:00",
+        "cycle": 1,
+    }
+    assert metrics == want
+    assert [type(metrics[k]) for k in want] == [type(v) for v in want.values()]
+    counts = {r["src"]: r["count"] for r in per_src.collect()}
+    assert set(counts) == {"fresh_hub", "fresh_lone"}
+    assert counts["fresh_hub"] >= GENERIC_CONTENT_THRESHOLD
