@@ -18,8 +18,6 @@ import os
 import sys
 import time
 
-from pyspark.sql import functions as F
-
 
 # the host probe's GEMM processes run one BLAS thread each, whatever the
 # caller's environment: a multi-threaded BLAS per process measures
@@ -68,10 +66,7 @@ def run_bench(sf_dir: str, cpus: int, pages_n: int | None = None) -> dict:
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     import __spark_entry__ as entry_mod
     from cortex_spark.corpus import synth_pages
-    from cortex_spark.extract.fused import pages_to_nodes_fused
-    from cortex_spark.linker.pipeline import link_nodes
-    from cortex_spark.canon.dedup import dedup_actions, dedup_pairs
-    from cortex_spark.canon.merge import canonicalize
+    from cortex_spark.pipeline.run import PipelineConfig, run_pipeline
     from cortex_spark.session import get_spark
 
     # probe BEFORE the JVM exists (clean fork) — recorded in the output
@@ -116,39 +111,22 @@ def run_bench(sf_dir: str, cpus: int, pages_n: int | None = None) -> dict:
     # sample measures the host slot, not the engine. Both samples recorded.
     n_docs = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
     n_pages = pages_n or int(os.environ.get("SPARK_GRAFT_BENCH_PAGES", 2 * n_docs))
-    from cortex_spark.linker.pipeline import ann_candidates
+    # the product's chain, in memory, at the adaptive LSH parameters
+    cfg = PipelineConfig(embed_dim=64, lsh_planes=None, lsh_bands=20)
 
     def run_kg() -> dict:
-        t0 = time.time()
-        pages = synth_pages(spark, n_pages, seed=42)
-        nodes = pages_to_nodes_fused(pages, embed_dim=64).localCheckpoint()
-        n_nodes = nodes.count()
-        t_extract = time.time() - t0
-
-        t1 = time.time()
-        cands = ann_candidates(nodes, lsh_kwargs={"dim": 64, "n_rows": n_nodes}).localCheckpoint()
-        edges = link_nodes(nodes, candidates=cands).localCheckpoint()
-        n_edges = edges.count()
-        t_link = time.time() - t1
-
-        t2 = time.time()
-        pairs = dedup_pairs(nodes, candidates=cands)
-        actions = dedup_actions(pairs, nodes, edges)
-        cnodes, cedges, _ = canonicalize(nodes, edges, actions)
-        n_cedges = cedges.count()
-        t_canon = time.time() - t2
-
-        kg_secs = time.time() - t0
-        for df in (nodes, cands, edges):
-            df.unpersist()
+        summary = run_pipeline(spark, synth_pages(spark, n_pages, seed=42), None, cfg)
+        st = summary["stages"]
+        kg_secs = summary["wall_secs"]
+        n_nodes, n_edges = st["nodes"]["rows"], st["edges"]["rows"]
         return {
             "pages": n_pages,
             "nodes": n_nodes,
             "edges": n_edges,
-            "canonical_edges": n_cedges,
-            "extract_sec": round(t_extract, 2),
-            "link_sec": round(t_link, 2),
-            "canon_sec": round(t_canon, 2),
+            "canonical_edges": st["canonical_edges"]["rows"],
+            "extract_sec": round(st["nodes"]["secs"], 2),
+            "link_sec": round(st["edges"]["secs"], 2),
+            "canon_sec": round(st["canonical_nodes"]["secs"] + st["canonical_edges"]["secs"], 2),
             "nodes_per_sec": round(n_nodes / kg_secs, 1),
             "triples_per_sec": round(n_edges / kg_secs, 1),
             "kg_secs": round(kg_secs, 3),

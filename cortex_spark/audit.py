@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from cortex_spark.io import parquet_file_rows
+
 AUDIT = T.StructType(
     [
         T.StructField("ts", T.TimestampType(), False),
@@ -72,10 +74,11 @@ class AuditLog:
         entries.write.mode("append").parquet(self.path)
 
     def read(self) -> DataFrame:
-        try:
-            return self.spark.read.parquet(self.path)
-        except Exception:
+        # no data file yet (never appended, or only a killed append's
+        # _temporary dir) reads as an empty log; any other error raises
+        if not parquet_file_rows(self.path):
             return self.spark.createDataFrame([], AUDIT)
+        return self.spark.read.parquet(self.path)
 
     def query(
         self,

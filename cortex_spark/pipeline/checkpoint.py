@@ -8,14 +8,16 @@ The reference persists an auto-linker cursor + cycle count in a meta table
   by `io.publish_parquet`: written once beside the live path, swapped in
   by rename; with an Iceberg catalog this becomes
   `writeTo(...).overwritePartitions()` and the manifest is the snapshot),
-- a `_manifest.json` with the stage name, config hash, row count and
-  per-file lineage (files + rows, from the parquet footers) + metrics.
+- a `_manifest.json` with the stage name, config hash, the data columns'
+  schema, row count and per-file lineage (files + rows, from the parquet
+  footers) + metrics.
 
 `load_or_run` makes any stage resumable: if a manifest exists with a
 matching config hash the stage is skipped and its table is read back —
 the kill-and-rerun test (FIXTURES §5 checkpoint_kill) drives this.
 A config-hash mismatch invalidates the checkpoint (full recompute), exactly
-like the reference's cursor reset on config change.
+like the reference's cursor reset on config change; so does a manifest
+without a schema.
 """
 
 from __future__ import annotations
@@ -77,34 +79,37 @@ class CheckpointStore:
         """Return the stage table, recomputing only when no valid checkpoint."""
         man = self.read_manifest(stage)
         data_dir = os.path.join(self._dir(stage), "data")
-        if man and man.get("config_hash") == cfg_hash and os.path.exists(data_dir):
-            df = self.spark.read.parquet(data_dir)
-            return df, StageResult(stage, data_dir, man["rows"], True, man.get("metrics", {}))
+        resumed = bool(
+            man
+            and man.get("config_hash") == cfg_hash
+            and "schema" in man  # older manifests recompute their stage
+            and os.path.exists(data_dir)
+        )
+        if not resumed:
+            df = build()
+            # no manifest may outlive the table it describes: a kill from here
+            # until the new manifest lands leaves the stage to recompute
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(self.manifest_path(stage))
+            publish_parquet(df, data_dir, partition_by)
+            lineage = parquet_file_rows(data_dir)
+            rows = sum(e["rows"] for e in lineage)
+            data_schema = StructType([f for f in df.schema if f.name not in (partition_by or ())])
+            man = {
+                "stage": stage,
+                "config_hash": cfg_hash,
+                "schema": data_schema.jsonValue(),
+                "rows": rows,
+                "lineage": lineage,
+                "metrics": {"rows": rows, **(extra_metrics or {})},
+            }
+            write_json_atomic(self.manifest_path(stage), man, indent=1, sort_keys=True)
 
-        df = build()
-        # no manifest may outlive the table it describes: a kill from here
-        # until the new manifest lands leaves the stage to recompute
-        with contextlib.suppress(FileNotFoundError):
-            os.remove(self.manifest_path(stage))
-        publish_parquet(df, data_dir, partition_by)
-
-        # read back under the data columns' written schema: no footer to
-        # infer it from, so no Spark job. Partition column types are still
-        # inferred from the directory names, as on resume.
-        data_schema = StructType([f for f in df.schema if f.name not in (partition_by or ())])
-        out = self.spark.read.schema(data_schema).parquet(data_dir)
-        lineage = parquet_file_rows(data_dir)
-        rows = sum(e["rows"] for e in lineage)
-        metrics = {"rows": rows, **(extra_metrics or {})}
-        man = {
-            "stage": stage,
-            "config_hash": cfg_hash,
-            "rows": rows,
-            "lineage": lineage,
-            "metrics": metrics,
-        }
-        write_json_atomic(self.manifest_path(stage), man, indent=1, sort_keys=True)
-        return out, StageResult(stage, data_dir, rows, False, metrics)
+        # fresh or resumed, the table is read under the data columns' written
+        # schema: nothing to infer from a footer, so no Spark job. Partition
+        # column types are still inferred from the directory names.
+        out = self.spark.read.schema(StructType.fromJson(man["schema"])).parquet(data_dir)
+        return out, StageResult(stage, data_dir, man["rows"], resumed, man.get("metrics", {}))
 
     def refresh_manifest(self, stage: str) -> dict | None:
         """Re-stamp rows + per-file lineage after an out-of-band mutation

@@ -1,6 +1,6 @@
 """Order-of-magnitude scale point for the KG job (round-4 evidence).
 
-Runs the full extract → link → canon pipeline once per leg at `n_pages`
+Runs `run_pipeline` (extract → link → canon) once per leg at `n_pages`
 (default 256k — 4× the largest previously committed evidence) in a FRESH
 subprocess per leg (a second SparkContext in the same JVM inherits
 degraded state), recording per-stage wall, cc round count over the full
@@ -21,6 +21,7 @@ import json
 import os
 import subprocess
 import sys
+import tempfile
 import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -31,50 +32,37 @@ _CHILD = """
 import json, sys, time, urllib.request
 sys.path.insert(0, {root!r})
 from cortex_spark.canon.components import connected_components
-from cortex_spark.canon.dedup import dedup_actions, dedup_pairs
-from cortex_spark.canon.merge import canonicalize
 from cortex_spark.corpus import synth_pages
-from cortex_spark.extract.fused import pages_to_nodes_fused
-from cortex_spark.linker.pipeline import ann_candidates, link_nodes
+from cortex_spark.pipeline.run import PipelineConfig, run_pipeline
 from cortex_spark.session import get_spark
 
-cpus, n_pages, frozen_lsh, skew = {cpus}, {n_pages}, {frozen_lsh}, {skew}
+cpus, n_pages, frozen_lsh, skew, out = {cpus}, {n_pages}, {frozen_lsh}, {skew}, {out!r}
 spark = get_spark(f"scale-point-{{cpus}}", master=f"local[{{cpus}}]",
                   shuffle_partitions=cpus * 2,
                   extra_conf={{"spark.ui.enabled": "true"}})
 spark.sparkContext.setLogLevel("ERROR")
 
-t0 = time.time()
 pages = synth_pages(spark, n_pages, seed=42, partitions=cpus * 2, skew=skew)
-nodes = pages_to_nodes_fused(pages, embed_dim=64).localCheckpoint()
-n_nodes = nodes.count()
-t_extract = time.time() - t0
-
-from cortex_spark.linker.lsh import choose_lsh_params
-lsh_kwargs = {{"dim": 64, "n_rows": n_nodes}}
 if frozen_lsh:
     # A/B leg: pre-band-boost parameters (rows frozen at 10, 20 bands) —
-    # the formula whose mean bucket grows linearly with n past 512k rows
+    # the formula whose mean bucket grows linearly with n past 512k rows.
+    # It needs the node count, so this leg counts the nodes before the timer
     import numpy as _np
+    from cortex_spark.extract.fused import pages_to_nodes_fused
+    n_nodes = pages_to_nodes_fused(pages, embed_dim=64).count()
     lsh_rows = min(10, max(3, int(_np.ceil(_np.log2(max(n_nodes / 500, 1.0))))))
     lsh_bands = 20
-    lsh_kwargs.update({{"n_planes": lsh_rows * 20, "bands": 20}})
+    cfg = PipelineConfig(embed_dim=64, lsh_planes=lsh_rows * lsh_bands, lsh_bands=lsh_bands)
 else:
+    cfg = PipelineConfig(embed_dim=64, lsh_planes=None, lsh_bands=20)
+
+t0 = time.time()
+st = run_pipeline(spark, pages, out, cfg)["stages"]
+n_nodes, n_edges = st["nodes"]["rows"], st["edges"]["rows"]
+if not frozen_lsh:
+    from cortex_spark.linker.lsh import choose_lsh_params
     lsh_rows, lsh_bands = choose_lsh_params(n_nodes)
-
-t1 = time.time()
-cands = ann_candidates(nodes, lsh_kwargs=lsh_kwargs).localCheckpoint()
-edges = link_nodes(nodes, candidates=cands).localCheckpoint()
-n_edges = edges.count()
-t_link = time.time() - t1
-
-t2 = time.time()
-pairs = dedup_pairs(nodes, candidates=cands)
-actions = dedup_actions(pairs, nodes, edges)
-cnodes, cedges, _ = canonicalize(nodes, edges, actions)
-cedges = cedges.localCheckpoint()
-n_cedges = cedges.count()
-t_canon = time.time() - t2
+cedges = spark.read.parquet(out + "/canonical_edges/data")
 
 # cc over the FULL linked graph: the O(log^2 n) term under test
 t3 = time.time()
@@ -110,10 +98,11 @@ total = time.time() - t0
 print("CHILD_JSON " + json.dumps({{
     "cpus": cpus, "pages": n_pages, "nodes": n_nodes, "edges": n_edges,
     "lsh": {{"frozen": bool(frozen_lsh), "rows": lsh_rows, "bands": lsh_bands}},
-    "canonical_edges": n_cedges, "components": n_comp,
+    "canonical_edges": st["canonical_edges"]["rows"], "components": n_comp,
     "cc_rounds": cc_stats.get("rounds"),
-    "extract_sec": round(t_extract, 2), "link_sec": round(t_link, 2),
-    "canon_sec": round(t_canon, 2), "cc_sec": round(t_cc, 2),
+    "extract_sec": round(st["nodes"]["secs"], 2), "link_sec": round(st["edges"]["secs"], 2),
+    "canon_sec": round(st["canonical_nodes"]["secs"] + st["canonical_edges"]["secs"], 2),
+    "cc_sec": round(t_cc, 2),
     "total_sec": round(total, 2),
     "triples_per_sec": round(n_edges / total, 1),
     "shuffle_write_bytes": shuffle_write, "shuffle_read_bytes": shuffle_read,
@@ -125,12 +114,13 @@ print("CHILD_JSON " + json.dumps({{
 
 def one_leg(cpus: int, n_pages: int, timeout: int = 7200, frozen_lsh: bool = False,
             skew: bool = False) -> dict:
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    code = _CHILD.format(root=root, cpus=cpus, n_pages=n_pages, frozen_lsh=frozen_lsh,
-                         skew=skew)
-    out = subprocess.run(
-        [sys.executable, "-c", code], capture_output=True, text=True, timeout=timeout
-    )
+    # the child's pipeline output, removed with the leg
+    with tempfile.TemporaryDirectory(prefix="scale-point-") as work:
+        code = _CHILD.format(root=ROOT, cpus=cpus, n_pages=n_pages, frozen_lsh=frozen_lsh,
+                             skew=skew, out=os.path.join(work, "kg"))
+        out = subprocess.run(
+            [sys.executable, "-c", code], capture_output=True, text=True, timeout=timeout
+        )
     for line in out.stdout.splitlines():
         if line.startswith("CHILD_JSON "):
             return json.loads(line[len("CHILD_JSON "):])

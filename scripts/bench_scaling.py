@@ -24,32 +24,27 @@ _CHILD_SNIPPET = """
 import json, sys, time
 sys.path.insert(0, {root!r})
 from cortex_spark.corpus import synth_pages
-from cortex_spark.extract.fused import pages_to_nodes_fused
-from cortex_spark.linker.pipeline import link_nodes
+from cortex_spark.pipeline.run import PipelineConfig, run_pipeline
 from cortex_spark.session import get_spark
 
 cpus, n_pages = {cpus}, {n_pages}
 spark = get_spark(f"scaling-{{cpus}}", master=f"local[{{cpus}}]", shuffle_partitions=cpus * 2)
 spark.sparkContext.setLogLevel("ERROR")
+# extract + link in memory, at the adaptive LSH parameters
+cfg = PipelineConfig(embed_dim=64, lsh_planes=None, lsh_bands=20, run_dedup=False)
 # steady-state warmup, OUTSIDE the timed window and identical for both
 # levels: a fresh JVM pays ~8-12 s of one-time codegen + Arrow python-worker
 # spin-up + BLAS page-in, which is session state, not per-page work — on a
 # real cluster a 100 TB job amortizes it over hours, but at bench size it
 # is 25% of an 8-core leg and structurally under-reads the high level
 # (BASELINE.md §Round-5 sizing note)
-_w = pages_to_nodes_fused(synth_pages(spark, 200, seed=7, partitions=cpus), embed_dim=64)
-link_nodes(_w.localCheckpoint(), use_lsh=True, lsh_kwargs={{"dim": 64, "n_rows": _w.count()}}).count()
+run_pipeline(spark, synth_pages(spark, 200, seed=7, partitions=cpus), None, cfg)
 t0 = time.time()
-pages = synth_pages(spark, n_pages, seed=42, partitions=cpus * 2)
-nodes = pages_to_nodes_fused(pages, embed_dim=64).localCheckpoint()
-n_nodes = nodes.count()
-t_ex = time.time() - t0
-edges = link_nodes(nodes, use_lsh=True,
-                   lsh_kwargs={{"dim": 64, "n_rows": n_nodes}}).localCheckpoint()
-n_edges = edges.count()
+st = run_pipeline(spark, synth_pages(spark, n_pages, seed=42, partitions=cpus * 2), None, cfg)["stages"]
 secs = time.time() - t0
-print(json.dumps({{"cpus": cpus, "secs": round(secs, 2), "extract_secs": round(t_ex, 2),
-                   "link_secs": round(secs - t_ex, 2), "nodes": n_nodes,
+n_edges = st["edges"]["rows"]
+print(json.dumps({{"cpus": cpus, "secs": round(secs, 2), "extract_secs": round(st["nodes"]["secs"], 2),
+                   "link_secs": round(st["edges"]["secs"], 2), "nodes": st["nodes"]["rows"],
                    "triples": n_edges, "triples_per_sec": round(n_edges / secs, 1)}}))
 """
 

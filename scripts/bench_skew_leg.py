@@ -34,30 +34,24 @@ _CHILD = """
 import json, sys, time
 sys.path.insert(0, {root!r})
 from cortex_spark.corpus import synth_pages
-from cortex_spark.extract.fused import pages_to_nodes_fused
-from cortex_spark.linker.pipeline import link_nodes
+from cortex_spark.pipeline.run import PipelineConfig, run_pipeline
 from cortex_spark.session import get_spark
 
 cpus, n_pages, skew = {cpus}, {n_pages}, {skew}
 spark = get_spark(f"skewleg-{{cpus}}", master=f"local[{{cpus}}]", shuffle_partitions=cpus * 2)
 spark.sparkContext.setLogLevel("ERROR")
+cfg = PipelineConfig(embed_dim=64, lsh_planes=None, lsh_bands=20, run_dedup=False)
 # identical steady-state warmup to bench_scaling's child (outside timing)
-_w = pages_to_nodes_fused(synth_pages(spark, 200, seed=7, partitions=cpus), embed_dim=64)
-link_nodes(_w.localCheckpoint(), use_lsh=True, lsh_kwargs={{"dim": 64, "n_rows": _w.count()}}).count()
+run_pipeline(spark, synth_pages(spark, 200, seed=7, partitions=cpus), None, cfg)
 t0 = time.time()
 pages = synth_pages(spark, n_pages, seed=42, partitions=cpus * 2, skew=skew)
-nodes = pages_to_nodes_fused(pages, embed_dim=64).localCheckpoint()
-n_nodes = nodes.count()
-t_ex = time.time() - t0
-edges = link_nodes(nodes, use_lsh=True,
-                   lsh_kwargs={{"dim": 64, "n_rows": n_nodes}}).localCheckpoint()
-n_edges = edges.count()
+st = run_pipeline(spark, pages, None, cfg)["stages"]
 secs = time.time() - t0
-link_secs = secs - t_ex
+n_nodes, link_secs = st["nodes"]["rows"], st["edges"]["secs"]
 print(json.dumps({{"skew": bool(skew), "cpus": cpus, "pages": n_pages,
-                   "secs": round(secs, 2), "extract_secs": round(t_ex, 2),
+                   "secs": round(secs, 2), "extract_secs": round(st["nodes"]["secs"], 2),
                    "link_secs": round(link_secs, 2), "nodes": n_nodes,
-                   "edges": n_edges,
+                   "edges": st["edges"]["rows"],
                    "per_node_link_ms": round(1000.0 * link_secs / max(n_nodes, 1), 3)}}))
 """
 

@@ -147,6 +147,34 @@ def test_fresh_stage_runs_only_the_write(spark, tmp_path):
     assert stage == write
 
 
+def test_resumed_stage_runs_no_job(spark, tmp_path):
+    """A resume reads the stage under the schema its manifest records: no
+    schema-inference job."""
+    sc = spark.sparkContext
+    df = spark.range(0, 200, 1, 4).withColumn("kind", F.concat(F.lit("k"), F.col("id") % 3))
+    store = CheckpointStore(str(tmp_path / "out"), spark)
+    store.load_or_run("s", "h", lambda: df, partition_by=["kind"])
+    sc.setJobGroup("publish-resume", "publish-resume")
+    try:
+        resumed, r = store.load_or_run("s", "h", lambda: df, partition_by=["kind"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert r.resumed
+    assert sc.statusTracker().getJobIdsForGroup("publish-resume") == []
+    assert resumed.schema["kind"].dataType.simpleString() == "string"
+
+
+def test_manifest_without_schema_recomputes(spark, tmp_path):
+    store = CheckpointStore(str(tmp_path / "out"), spark)
+    store.load_or_run("s", "h", lambda: spark.range(3))
+    man = store.read_manifest("s")
+    del man["schema"]
+    with open(store.manifest_path("s"), "w") as f:
+        json.dump(man, f)
+    _, r = store.load_or_run("s", "h", lambda: spark.range(5))
+    assert not r.resumed and r.rows == 5
+
+
 def test_fresh_stage_reads_back_as_a_resume_does(spark, tmp_path):
     """The frame a fresh stage returns has the schema and rows a resumed
     one reads, partition values that look numeric included."""

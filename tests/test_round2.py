@@ -174,6 +174,21 @@ def test_pipeline_writes_audit_rows(spark, tmp_path):
     assert summary["audit_rows"] == sum(by_action.values())
 
 
+def test_audit_read_raises_on_a_corrupt_log(spark, tmp_path):
+    """Only a log without data files reads as empty: a killed append's
+    `_temporary` dir is not data, an unreadable data file is an error."""
+    from cortex_spark.audit import AuditLog
+
+    path = tmp_path / "audit"
+    log = AuditLog(str(path), spark)
+    assert log.read().count() == 0  # no directory yet
+    (path / "_temporary" / "0").mkdir(parents=True)
+    assert log.read().count() == 0
+    (path / "part-x.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Exception):
+        log.read().count()
+
+
 def test_canonicalization_audit_merge_and_tombstone(spark, nodes_df_factory, edges_df_factory):
     """merge → node.merged + node.deleted (tombstone) + edge.created rows."""
     from cortex_spark.audit import canonicalization_audit
