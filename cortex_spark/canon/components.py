@@ -11,6 +11,9 @@ Scale notes: every round is two shuffles on node id; `localCheckpoint`
 every round cuts the exponential lineage growth that would otherwise blow
 up the Catalyst plan; convergence is detected by an aggregate signature
 (sum of xxhash64 of sorted edges) instead of expensive DataFrame equality.
+Every round runs under the session's own settings: the kernel sets no
+session conf (in a shared session a set would race every concurrent
+query), so AQE stays as `session.get_spark` configured it.
 """
 
 from __future__ import annotations
@@ -21,13 +24,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # Graphs at or below this edge count bypass the iterative kernel: a bounded
-# limit(cap+1) Arrow collect + driver min-label propagation answers in one
-# job what the alternation answers in ~40 (each Kiveris round is several
-# query stages, and per-job latency — not data — dominates small and
-# mid-size graphs: measured 3.3 s for the 646-edge canonical_map merge
-# graph and 6.9 s for the 165k-edge sf0.1 hierarchy vs ~1 s collected;
-# round-6 re-measurement on a 1.65M-edge sf1-shaped hierarchy: distributed
-# ~14 s warm vs ~4 s driver path). The cap is sized by DRIVER MEMORY, not
+# limit(cap+1) count, an Arrow collect and driver min-label propagation
+# answer in two jobs what the alternation answers in ~40 (each Kiveris
+# round is several query stages, and per-job latency — not data —
+# dominates small and mid-size graphs: measured 3.3 s for the 646-edge
+# canonical_map merge graph and 6.9 s for the 165k-edge sf0.1 hierarchy
+# vs ~1 s collected; round-6 re-measurement on a 1.65M-edge sf1-shaped
+# hierarchy: distributed ~14 s warm vs ~4 s driver path). The cap is sized by DRIVER MEMORY, not
 # by the crossover (which sits far higher): 4M edges ≈ 150 MB Arrow-
 # serialized / under ~1 GB materialized in pandas — the same order as a
 # large broadcast-join build side, and an order below the driver heap.
@@ -35,18 +38,6 @@ from pyspark.sql import functions as F
 # so the 100 TB path is untouched. Both paths produce identical rows
 # (tests/test_components.py pins equality on the same graph).
 DRIVER_CC_MAX_EDGES = int(os.environ.get("CORTEX_CC_DRIVER_MAX_EDGES", "4000000"))
-
-# Rounds whose state frame is at or below this row count run with AQE
-# disabled: each Kiveris round is ~6 exchanges, and adaptive execution
-# re-plans (a driver round-trip + a new job) at every one of them — at
-# mid-size graphs that latency, not data, dominates the loop (interleaved
-# A/B on a 1.65M-edge sf1-shaped hierarchy: 21.0/16.2 s AQE-on vs
-# 16.4/13.3 s AQE-off, identical output, same round count). The decision is
-# made PER ROUND from the measured frame size the convergence signature
-# already returns — round 1 always runs adaptive, and past the threshold
-# AQE stays on so skew-splitting and partition coalescing protect the
-# 100 TB regime. Session setting is restored on exit.
-CC_AQE_OFF_MAX_ROWS = 20_000_000
 
 
 def _neighborhoods(edges: DataFrame) -> DataFrame:
@@ -166,14 +157,15 @@ def connected_components(
     e0 = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     cap = DRIVER_CC_MAX_EDGES
     if cap > 0:
-        # small/mid-graph fast path: ONE bounded job decides. limit(cap+1)
-        # keeps the collect bounded regardless of graph size; exactly cap+1
-        # rows back means "too big" and the distributed kernel below runs on
-        # the full frame (one redundant partial scan, amortized at that
-        # size). The collect rides Arrow (toPandas) — at the cap that is
-        # ~40x cheaper than row-pickling .collect().
-        head = e0.filter(F.col("src") != F.col("dst")).limit(cap + 1).toPandas()
-        if len(head) <= cap:
+        # small/mid-graph fast path: one bounded count decides. limit(cap+1)
+        # keeps the probe bounded regardless of graph size; exactly cap+1
+        # rows means "too big" and the distributed kernel below runs on the
+        # full frame without anything collected. Only a graph that fits is
+        # collected, over Arrow (toPandas) — at the cap that is ~40x
+        # cheaper than row-pickling .collect().
+        bounded = e0.filter(F.col("src") != F.col("dst")).limit(cap + 1)
+        n = bounded.count()
+        if n <= cap:
             if stats is not None:
                 stats["rounds"] = 0
                 stats["driver_path"] = True
@@ -183,8 +175,9 @@ def connected_components(
             schema = StructType(
                 [StructField("node_id", id_type), StructField("component", id_type)]
             )
-            if len(head) == 0:
+            if n == 0:
                 return spark.createDataFrame([], schema)
+            head = bounded.toPandas()
             return spark.createDataFrame(
                 _driver_components_np(head.iloc[:, 0], head.iloc[:, 1]), schema
             )
@@ -192,26 +185,13 @@ def connected_components(
     cur = cur.localCheckpoint(eager=True)
     prev_sig = None
     rounds = 0
-    conf = spark.conf
-    aqe_was = conf.get("spark.sql.adaptive.enabled", "true")
-    try:
-        for i in range(max_iterations):
-            cur = _small_star(_large_star(cur)).localCheckpoint(eager=True)
-            rounds = i + 1
-            sig = _signature(cur)
-            if sig == prev_sig:
-                break
-            prev_sig = sig
-            # next round's latency/skew trade-off from THIS round's measured
-            # size (see CC_AQE_OFF_MAX_ROWS) — results are AQE-independent
-            # (min-aggregates, order-independent by construction)
-            if aqe_was == "true":
-                conf.set(
-                    "spark.sql.adaptive.enabled",
-                    "false" if sig[1] <= CC_AQE_OFF_MAX_ROWS else "true",
-                )
-    finally:
-        conf.set("spark.sql.adaptive.enabled", aqe_was)
+    for i in range(max_iterations):
+        cur = _small_star(_large_star(cur)).localCheckpoint(eager=True)
+        rounds = i + 1
+        sig = _signature(cur)
+        if sig == prev_sig:
+            break
+        prev_sig = sig
     if stats is not None:
         stats["rounds"] = rounds
     # converged state: edges point each node at its component min. Emit the

@@ -3,11 +3,13 @@
 - ann_topk_bruteforce: exact top-k per query — broadcast the (small) query
   set against the corpus, native cosine, window rank. The correctness
   baseline; fine whenever |queries| is broadcastable.
-- ann_topk_lsh: the scale path — random-hyperplane bucketing on BOTH sides,
-  join on (band, signature), exact rescore, per-query top-k. Probed buckets
-  ≪ corpus ⇒ the 100 TB-corpus query cost is proportional to bucket sizes,
-  not corpus size. Recall is tunable via (n_planes, bands); falls back to
-  brute force within each bucket.
+- ann_topk_lsh: the scale path — `linker.index.probe_topk`, the one LSH
+  join the persisted index's probe also runs, over the corpus's signature
+  rows computed in memory: only candidates sharing ≥1 (band, signature)
+  are rescored exactly, each hot bucket capped at DEFAULT_MAX_BUCKET
+  lowest ids. Probed buckets ≪ corpus ⇒ the 100 TB-corpus query cost is
+  proportional to bucket sizes, not corpus size. Recall is tunable via
+  (n_planes, bands).
 - ann_topk_ivf: the second scale path — IVF coarse quantizer: k-means
   centroids fit driver-side on a deterministic sample (standard IVF
   practice), corpus vectors assigned to their nearest-centroid inverted
@@ -24,7 +26,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cortex_spark.functions.similarity import cosine_from_norms, l2_norm_col, top_k_by_score
-from cortex_spark.linker.lsh import add_lsh_bands, infer_dim
+from cortex_spark.linker.index import probe_topk, signature_rows, signed_queries
+from cortex_spark.linker.lsh import infer_dim
 
 
 def _rescore_topk(cands: DataFrame, k: int) -> DataFrame:
@@ -76,23 +79,18 @@ def ann_topk_lsh(
     bands: int = 8,
     seed: int = 7,
 ) -> DataFrame:
-    """LSH-bucketed top-k: only candidates sharing ≥1 band are scored."""
-    dim = infer_dim(corpus, vec_col)
-    c = add_lsh_bands(
-        corpus.select(F.col(corpus_id).alias("neighbor_id"), F.col(vec_col).alias("c_vec")),
-        "c_vec", dim, n_planes, bands, seed,
-    ).select(
-        "neighbor_id", "c_vec", l2_norm_col(F.col("c_vec")).alias("c_norm"),
-        F.explode("lsh_sigs").alias("sig"),
+    """LSH-bucketed top-k through the index probe's kernel: the corpus is
+    the stored side (every row one version, b_seq 0, so a hot bucket keeps
+    its lowest ids), the queries the signed query side."""
+    lsh = (infer_dim(corpus, vec_col), n_planes, bands, seed)
+    stored = signature_rows(corpus, corpus_id, vec_col, *lsh).select(
+        F.col("node_id").alias("b_id"), F.col("vec").alias("b_vec"), "sig",
+        F.lit(0).alias("b_seq"),
     )
-    q = add_lsh_bands(
-        queries.select(F.col(query_id).alias("query_id"), F.col(vec_col).alias("q_vec")),
-        "q_vec", dim, n_planes, bands, seed,
-    ).select(
-        "query_id", "q_vec", l2_norm_col(F.col("q_vec")).alias("q_norm"),
-        F.explode("lsh_sigs").alias("sig"),
+    top = probe_topk(stored, signed_queries(queries, query_id, vec_col, *lsh), k, rank_col="rank")
+    return top.select(
+        F.col("a_id").alias("query_id"), F.col("b_id").alias("neighbor_id"), "score", "rank"
     )
-    return _rescore_topk(c.join(q, "sig").dropDuplicates(["query_id", "neighbor_id"]), k)
 
 
 def _ivf_sample(corpus, vec_col: str, corpus_id: str, sample_cap: int, seed: int, n: int):

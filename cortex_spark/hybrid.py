@@ -52,28 +52,19 @@ def vector_search(
 ) -> DataFrame:
     """Top-k cosine for one query vector (VectorFilter F4 applied pre-score).
 
-    Without an index (or below INDEX_ABOVE_CORPUS live rows): brute-force —
-    the query vector is a literal array, no shuffle, one scan + TakeOrdered.
-    With `index` (an LshIndexStore) on a large corpus: probe the persisted
-    signature index — the scan partition-prunes to the query's buckets."""
+    Without an index (or with one holding ≤ INDEX_ABOVE_CORPUS rows, by its
+    meta's rows_indexed): brute-force — the query vector is a literal
+    array, no shuffle, one scan + TakeOrdered. With `index` (an
+    LshIndexStore) over a larger corpus: probe the persisted signature
+    index — the scan partition-prunes to the query's buckets."""
     df = nodes.filter(~F.coalesce(F.col("deleted"), F.lit(False))).filter(F.col("embedding").isNotNull())
     if index is not None and use_index is None:
         # Path pick is driver-side metadata, not a Spark job: the index meta
-        # carries a corpus-size hint (rows_indexed, maintained by append/
-        # compact), so interactive queries don't launch a limit+count job
-        # just to choose brute-vs-index. Falls back to the bounded count
-        # only for hint-less (pre-hint / hand-built) indexes.
-        hint = None
-        meta_fn = getattr(index, "meta", None)
-        if callable(meta_fn):
-            try:
-                hint = (meta_fn() or {}).get("rows_indexed")
-            except Exception:
-                hint = None
-        if hint:
-            use_index = int(hint) > INDEX_ABOVE_CORPUS
-        else:
-            use_index = df.limit(INDEX_ABOVE_CORPUS + 1).count() > INDEX_ABOVE_CORPUS
+        # carries a corpus-size hint (rows_indexed, written by every append
+        # and compact; a store with no meta reads as 0 and takes the exact
+        # scan), so interactive queries don't launch a count job just to
+        # choose brute-vs-index.
+        use_index = index.meta()["rows_indexed"] > INDEX_ABOVE_CORPUS
     if index is not None and use_index:
         return _vector_search_indexed(
             df, index, query_text, k, embed_dim, embed_seed, kinds, exclude_ids, source_agent

@@ -1,12 +1,11 @@
-"""Persisted LSH signature index for incremental link cycles.
+"""Persisted LSH signature index, and the one LSH query-vs-corpus join.
 
 Round-1 `run_cycle` recomputed LSH signatures over the ENTIRE live node
-table every cycle (the `ann_topk_lsh(live, fresh)` call) — at corpus scale
-that defeats the cursor: the whole point of incremental processing is that
-cycle cost tracks the fresh-node count, not the corpus. The reference keeps
-a persistent HNSW index and only *inserts* new vectors per cycle
-(vector/index.rs:298-314, auto_linker.rs:378-398); this module is the
-distributed analogue:
+table every cycle — at corpus scale that defeats the cursor: the whole
+point of incremental processing is that cycle cost tracks the fresh-node
+count, not the corpus. The reference keeps a persistent HNSW index and
+only *inserts* new vectors per cycle (vector/index.rs:298-314,
+auto_linker.rs:378-398); this module is the distributed analogue:
 
 - the index is a parquet/Iceberg table of exploded (sig, node_id, embedding)
   rows, partitioned by the hash of `sig` (bucketed join key),
@@ -16,6 +15,13 @@ distributed analogue:
   scan, one per-sig cap, one per-stored-node aggregate and one exact
   rescore — a shuffle proportional to the probed buckets, never a corpus
   re-bucketing.
+
+That pass is `probe_topk`, the package's only LSH query-vs-corpus join. Its
+stored side is any frame of (b_id, b_vec, sig, b_seq) rows: `probe` feeds
+it the pruned index scan, `dataops.ann.ann_topk_lsh` feeds it a corpus's
+signature rows computed in memory (`signature_rows`, the rows `append`
+writes, all at b_seq 0). Its query side is `signed_queries`' materialized
+frame.
 
 Index staleness semantics match the reference: deleted nodes are filtered
 at probe time via the caller's live-node set (HNSW likewise keeps stale
@@ -45,6 +51,88 @@ from cortex_spark.linker.lsh import add_lsh_bands
 # so Spark partition-prunes the index read to the probed buckets — the scan
 # cost tracks the query's signature footprint, not the index size.
 N_BUCKET_PARTS = 64
+
+
+def signature_rows(
+    nodes: DataFrame, id_col: str, vec_col: str, dim: int, n_planes: int, bands: int,
+    seed: int, center=None,
+) -> DataFrame:
+    """(node_id, vec, sig): one row per non-null band signature of each
+    node — the stored side's rows, before `append` stamps them."""
+    with_sigs = add_lsh_bands(nodes, vec_col, dim, n_planes, bands, seed, center=center)
+    return with_sigs.select(
+        F.col(id_col).alias("node_id"),
+        F.col(vec_col).alias("vec"),
+        F.explode("lsh_sigs").alias("sig"),
+    ).filter(F.col("sig").isNotNull())
+
+
+def signed_queries(
+    queries: DataFrame, id_col: str, vec_col: str, dim: int, n_planes: int, bands: int,
+    seed: int, center=None,
+) -> DataFrame:
+    """The query side, materialized once: one row per query node with its
+    vector, norm and band signatures (a_id, a_vec, a_norm, lsh_sigs) — the
+    only Arrow UDF a probe runs."""
+    return (
+        add_lsh_bands(queries, vec_col, dim, n_planes, bands, seed, center=center)
+        .select(
+            F.col(id_col).alias("a_id"), F.col(vec_col).alias("a_vec"),
+            l2_norm_col(F.col(vec_col)).alias("a_norm"), "lsh_sigs",
+        )
+        .localCheckpoint(eager=True)
+    )
+
+
+def _query_sigs(qn: DataFrame) -> DataFrame:
+    return qn.select("a_id", F.explode("lsh_sigs").alias("sig")).filter(F.col("sig").isNotNull())
+
+
+def probe_topk(stored: DataFrame, qn: DataFrame, k: int, rank_col: str | None = None) -> DataFrame:
+    """(a_id, b_id, score[, rank_col]): the top-k stored neighbors of each
+    `signed_queries` row among the `stored` (b_id, b_vec, sig, b_seq) rows
+    sharing at least one band signature with it.
+
+    Each sig's hot bucket is capped at `DEFAULT_MAX_BUCKET` rows, newest
+    versions (max b_seq) and lowest ids first (the quadratic-blowup guard
+    candidate_topk also applies); a query never meets its own id; one
+    aggregate per stored node resolves its NEWEST vector, its norm and the
+    queries it met; scores are exact cosine."""
+    from cortex_spark.linker.lsh import DEFAULT_MAX_BUCKET
+
+    q = _query_sigs(qn)
+    # touch only probed buckets; cap each at max_bucket, newest versions
+    # and lowest ids first (deterministic truncation)
+    probe_sigs = q.select("sig").distinct()
+    idx_hit = stored.join(F.broadcast(probe_sigs), "sig")
+    w_cap = Window.partitionBy("sig").orderBy(F.desc("b_seq"), F.asc("b_id"))
+    idx_hit = (
+        idx_hit.withColumn("rn", F.row_number().over(w_cap))
+        .filter(F.col("rn") <= DEFAULT_MAX_BUCKET)
+        .drop("rn")
+    )
+    cands = idx_hit.join(q, "sig").filter(F.col("a_id") != F.col("b_id"))
+    # newest VISIBLE version of each stored node wins for re-appended
+    # (updated) nodes — resolved per b_id across all probed buckets, so
+    # a candidate surfaced via a stale version's signature still scores
+    # against the newest vector those buckets know (run compact() to
+    # drop superseded versions entirely)
+    latest_b = (
+        cands.groupBy("b_id")
+        .agg(
+            F.max_by(F.col("b_vec"), F.col("b_seq")).alias("b_vec"),
+            F.collect_set("a_id").alias("a_ids"),
+        )
+        .withColumn("b_norm", l2_norm_col(F.col("b_vec")))
+    )
+    pairs = latest_b.select("b_id", "b_vec", "b_norm", F.explode("a_ids").alias("a_id"))
+    scored = pairs.join(qn, "a_id").select(
+        "a_id", "b_id",
+        cosine_from_norms(
+            F.col("a_vec"), F.col("b_vec"), F.col("a_norm"), F.col("b_norm")
+        ).alias("score"),
+    )
+    return top_k_by_score(scored, "a_id", "b_id", k, rank_col=rank_col)
 
 
 class LshIndexStore:
@@ -104,19 +192,6 @@ class LshIndexStore:
     def exists(self) -> bool:
         return os.path.exists(self.data_dir)
 
-    # -- signature computation (fresh side only) ------------------------------
-
-    def _sigs(self, nodes: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-        with_sigs = add_lsh_bands(
-            nodes, vec_col, self.dim, self.n_planes, self.bands, self.seed,
-            center=self.center,
-        )
-        return with_sigs.select(
-            F.col(id_col).alias("node_id"),
-            F.col(vec_col).alias("vec"),
-            F.explode("lsh_sigs").alias("sig"),
-        ).filter(F.col("sig").isNotNull())
-
     def append(self, fresh: DataFrame, id_col: str = "node_id", vec_col: str = "embedding") -> int:
         """Index the fresh nodes (signatures computed for THEM ONLY)."""
         # materialize once: the sig write and the count below would otherwise
@@ -125,7 +200,10 @@ class LshIndexStore:
         meta = self.meta()
         seq = len(meta.get("appends", []))
         sigs = (
-            self._sigs(fresh, id_col, vec_col)
+            signature_rows(
+                fresh, id_col, vec_col, self.dim, self.n_planes, self.bands, self.seed,
+                self.center,
+            )
             .withColumn("append_seq", F.lit(seq))
             .withColumn("bucket", F.pmod(F.xxhash64("sig"), F.lit(N_BUCKET_PARTS)))
         )
@@ -151,40 +229,22 @@ class LshIndexStore:
     ) -> DataFrame:
         """(a_id, b_id, score): top-k stored neighbors per query node.
 
-        One pass, each piece of work once per call: the query side's
-        signatures and norms are computed once into a materialized frame
-        (one cycle's fresh nodes or one search query; ids unique), which
-        yields both the pruned bucket values and the broadcast probe sigs.
-        The index is scanned once, in the PROBED bucket partitions only, and
-        never re-bucketed or re-embedded; each sig's hot bucket is capped at
-        `max_bucket` newest-first (the quadratic-blowup guard candidate_topk
-        also applies); a query never meets its own id; one aggregate per
-        stored node resolves its NEWEST appended vector (max append_seq), its
-        norm and the queries it met. Callers semi-join b_id against their
-        live set to drop tombstoned entries (HNSW-stale semantics)."""
-        from cortex_spark.linker.lsh import DEFAULT_MAX_BUCKET
-
+        Signs the queries once (one cycle's fresh nodes or one search
+        query; ids unique), scans the index once in the PROBED bucket
+        partitions only and hands the scan to `probe_topk`, whose b_seq is
+        the append_seq. Callers semi-join b_id against their live set to
+        drop tombstoned entries (HNSW-stale semantics)."""
         idx = self.spark.read.parquet(self.data_dir)
-        # the query side, materialized once: one row per query node with its
-        # vector, norm and band signatures (the only Arrow UDF run)
-        qn = (
-            add_lsh_bands(
-                queries, vec_col, self.dim, self.n_planes, self.bands, self.seed,
-                center=self.center,
-            )
-            .select(
-                F.col(id_col).alias("a_id"), F.col(vec_col).alias("a_vec"),
-                l2_norm_col(F.col(vec_col)).alias("a_norm"), "lsh_sigs",
-            )
-            .localCheckpoint(eager=True)
+        qn = signed_queries(
+            queries, id_col, vec_col, self.dim, self.n_planes, self.bands, self.seed,
+            self.center,
         )
-        q = qn.select("a_id", F.explode("lsh_sigs").alias("sig")).filter(F.col("sig").isNotNull())
         # partition pruning: collect the probe's ≤ N_BUCKET_PARTS distinct
         # bucket values (a tiny query-side job) and filter the scan — the
         # index read touches only the probed bucket partitions
         bvals = [
             r["b"]
-            for r in q.select(
+            for r in _query_sigs(qn).select(
                 F.pmod(F.xxhash64("sig"), F.lit(N_BUCKET_PARTS)).alias("b")
             ).distinct().collect()
         ]
@@ -193,38 +253,7 @@ class LshIndexStore:
             F.col("node_id").alias("b_id"), F.col("vec").alias("b_vec"), "sig",
             F.col("append_seq").alias("b_seq"),
         )
-        # touch only probed buckets; cap each at max_bucket, newest versions
-        # and lowest ids first (deterministic truncation)
-        probe_sigs = q.select("sig").distinct()
-        idx_hit = idx.join(F.broadcast(probe_sigs), "sig")
-        w_cap = Window.partitionBy("sig").orderBy(F.desc("b_seq"), F.asc("b_id"))
-        idx_hit = (
-            idx_hit.withColumn("rn", F.row_number().over(w_cap))
-            .filter(F.col("rn") <= DEFAULT_MAX_BUCKET)
-            .drop("rn")
-        )
-        cands = idx_hit.join(q, "sig").filter(F.col("a_id") != F.col("b_id"))
-        # newest VISIBLE version of each stored node wins for re-appended
-        # (updated) nodes — resolved per b_id across all probed buckets, so
-        # a candidate surfaced via a stale version's signature still scores
-        # against the newest vector those buckets know (run compact() to
-        # drop superseded versions entirely)
-        latest_b = (
-            cands.groupBy("b_id")
-            .agg(
-                F.max_by(F.col("b_vec"), F.col("b_seq")).alias("b_vec"),
-                F.collect_set("a_id").alias("a_ids"),
-            )
-            .withColumn("b_norm", l2_norm_col(F.col("b_vec")))
-        )
-        pairs = latest_b.select("b_id", "b_vec", "b_norm", F.explode("a_ids").alias("a_id"))
-        scored = pairs.join(qn, "a_id").select(
-            "a_id", "b_id",
-            cosine_from_norms(
-                F.col("a_vec"), F.col("b_vec"), F.col("a_norm"), F.col("b_norm")
-            ).alias("score"),
-        )
-        return top_k_by_score(scored, "a_id", "b_id", k)
+        return probe_topk(idx, qn, k)
 
     def compact(self) -> int:
         """Drop all superseded node versions (keep each node_id's rows at

@@ -5,8 +5,9 @@ Distributed re-expression of AutoLinker::run_cycle (auto_linker.rs:185-364):
   read cursor (first run: now − 24 h, auto_linker.rs:95-107; config change →
   epoch reset, :137-182) → nodes with created_at/updated_at > cursor (W6,
   graph/temporal.rs:38-53), take ≤ max_nodes_per_cycle oldest-first →
-  LSH-probe top-k against the FULL live node table (new nodes are queries,
-  not a self-join — the incremental candidate join) → rule pass → the link
+  insert them into the persisted LSH index and probe it top-k (new nodes
+  are queries against the whole indexed corpus, not a self-join — the
+  incremental candidate join; linker/index.py) → rule pass → the link
   tail batch linking uses too (`linker.pipeline.link_tail`: anti-join
   existing edges (J11), first-rule-wins, per-node cap, plus the per-cycle
   cap) → append edges + advance cursor + persist metrics (A7).
@@ -70,19 +71,19 @@ def run_cycle(
     embed_model: str = "hash-v1",
     max_nodes_per_cycle: int = MAX_NODES_PER_CYCLE,
     max_edges_per_cycle: int = MAX_EDGES_PER_CYCLE,
-    index_store=None,
+    *,
+    index_store,
 ) -> tuple[DataFrame, dict]:
     """One incremental cycle. Returns (new_edges, metrics).
 
     Caller appends new_edges to the edge table; metrics carries the advanced
     cursor (already persisted to meta_path).
 
-    `index_store` (an LshIndexStore) is the scale path: the live corpus's
-    LSH signatures are a PERSISTED table — the cycle computes signatures for
-    the ≤500 fresh nodes only, probes the stored index, and appends the fresh
-    signatures afterwards. Without it, the cycle falls back to re-bucketing
-    the live table (correct, but per-cycle cost grows with the corpus — the
-    round-1 anti-pattern this parameter removes).
+    `index_store` (an LshIndexStore) holds the live corpus's LSH signatures
+    as a PERSISTED table: the cycle signs the ≤500 fresh nodes only, appends
+    them and probes the stored index, so per-cycle cost tracks the fresh
+    count, not the corpus. The first cycle on an empty index indexes the
+    pre-cursor backlog once.
     """
     cfg = config or LinkerConfig()
     now = now or datetime(2026, 1, 1, tzinfo=timezone.utc)
@@ -109,24 +110,15 @@ def run_cycle(
 
     # incremental candidate join: fresh nodes probe the corpus index (the
     # reference's per-node HNSW search against the whole index)
-    if index_store is not None:
-        if not index_store.exists():
-            # first cycle: index the pre-cursor backlog once
-            index_store.append(live.join(fresh.select("node_id"), "node_id", "left_anti"))
-        # insert-then-search, like the reference's HNSW cycle — fresh nodes
-        # see both the stored corpus and each other
-        index_store.append(fresh)
-        pairs = index_store.probe(fresh, k=cfg.ann_k)
-        # drop tombstoned/stale index entries (HNSW-stale semantics)
-        pairs = pairs.join(live.select(F.col("node_id").alias("b_id")), "b_id", "left_semi")
-    else:
-        from cortex_spark.dataops.ann import ann_topk_lsh
-
-        pairs = ann_topk_lsh(
-            live.select(F.col("node_id").alias("vec_id"), F.col("embedding")),
-            fresh.select(F.col("node_id").alias("vec_id"), F.col("embedding")),
-            k=cfg.ann_k,
-        ).select(F.col("query_id").alias("a_id"), F.col("neighbor_id").alias("b_id"), "score")
+    if not index_store.exists():
+        # first cycle: index the pre-cursor backlog once
+        index_store.append(live.join(fresh.select("node_id"), "node_id", "left_anti"))
+    # insert-then-search, like the reference's HNSW cycle — fresh nodes
+    # see both the stored corpus and each other
+    index_store.append(fresh)
+    pairs = index_store.probe(fresh, k=cfg.ann_k)
+    # drop tombstoned/stale index entries (HNSW-stale semantics)
+    pairs = pairs.join(live.select(F.col("node_id").alias("b_id")), "b_id", "left_semi")
 
     proposed = apply_link_rules(_attach_attrs(pairs, live, cfg), cfg)
     new_edges = link_tail(

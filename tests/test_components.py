@@ -141,33 +141,15 @@ def test_driver_np_kernel_int_ids():
     assert set(zip(got["node_id"], got["component"])) == ref
 
 
-@pytest.mark.parametrize("thr", [0, 10_000_000])
-def test_aqe_toggle_rounds_identical_and_restored(spark, thr, monkeypatch):
-    """Rounds below CC_AQE_OFF_MAX_ROWS run with AQE disabled (latency), but
-    the output must be identical either way and the session setting must be
-    restored afterwards — including when the threshold keeps AQE on."""
+@pytest.mark.parametrize("cap", [None, 0], ids=["driver", "distributed"])
+def test_driver_path_leaves_session_conf_alone(spark, cap, monkeypatch):
+    """Neither path sets session conf: in a shared session a set would race
+    every concurrent query. `cap=0` forces the distributed alternation."""
     import cortex_spark.canon.components as C
-
-    rng = random.Random(11)
-    nodes = [f"v{i:03d}" for i in range(100)]
-    edges = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(160)]
-    edges = [(u, v) for u, v in edges if u != v]
-    df = spark.createDataFrame(edges, "src string, dst string")
-
-    before = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    monkeypatch.setattr(C, "DRIVER_CC_MAX_EDGES", 0)
-    monkeypatch.setattr(C, "CC_AQE_OFF_MAX_ROWS", thr)
-    got = {(r["node_id"], r["component"]) for r in connected_components(df).collect()}
-    assert spark.conf.get("spark.sql.adaptive.enabled", "true") == before
-    ns = sorted({x for e in edges for x in e})
-    assert got == set(union_find(edges, ns).items())
-
-
-def test_driver_path_leaves_session_conf_alone(spark, monkeypatch):
-    """The driver path sets no session conf: in a shared session a set
-    would race every concurrent query."""
     from pyspark.sql.conf import RuntimeConfig
 
+    if cap is not None:
+        monkeypatch.setattr(C, "DRIVER_CC_MAX_EDGES", cap)
     calls = []
     real_set = RuntimeConfig.set
 
@@ -180,4 +162,28 @@ def test_driver_path_leaves_session_conf_alone(spark, monkeypatch):
     stats: dict = {}
     got = connected_components(spark.createDataFrame(edges, "src string, dst string"), stats=stats)
     assert {r["node_id"]: r["component"] for r in got.collect()} == union_find(edges, sorted({x for e in edges for x in e}))
-    assert stats["driver_path"] and calls == []
+    assert stats.get("driver_path", False) == (cap is None) and calls == []
+
+
+def test_graph_over_the_cap_is_counted_not_collected(spark, monkeypatch):
+    """The driver-path probe counts its bounded frame first: a graph over
+    the cap never reaches toPandas and takes the distributed kernel."""
+    import cortex_spark.canon.components as C
+
+    rng = random.Random(7)
+    nodes = [f"v{i:02d}" for i in range(30)]
+    edges = [tuple(rng.sample(nodes, 2)) for _ in range(40)]
+    df = spark.createDataFrame(edges, "src string, dst string")
+    collected = []
+    real = type(df).toPandas
+
+    def spy(self, *args, **kwargs):
+        collected.append(1)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(type(df), "toPandas", spy)
+    monkeypatch.setattr(C, "DRIVER_CC_MAX_EDGES", 5)
+    stats: dict = {}
+    got = {(r["node_id"], r["component"]) for r in connected_components(df, stats=stats).collect()}
+    assert collected == [] and "driver_path" not in stats
+    assert got == set(union_find(edges, sorted({x for e in edges for x in e})).items())

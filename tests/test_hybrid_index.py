@@ -123,6 +123,21 @@ def test_auto_switch_reads_meta_hint_without_count_job(spark, corpus, monkeypatc
     store._write_meta(meta)
 
 
+def test_auto_switch_raises_on_unreadable_meta(spark, corpus, tmp_path):
+    """The size hint is read, not guessed: an index whose meta file is
+    truncated JSON fails the search instead of silently counting the
+    corpus."""
+    import json
+
+    nodes, _ = corpus
+    broken = LshIndexStore(str(tmp_path / "broken"), spark, dim=DIM)
+    os.makedirs(broken.path)
+    with open(broken.meta_path, "w") as f:
+        f.write('{"rows_indexed": 30')
+    with pytest.raises(json.JSONDecodeError):
+        vector_search(nodes, QUERY, k=10, embed_dim=DIM, index=broken)
+
+
 def test_index_search_applies_filters_and_tombstones(spark, corpus):
     nodes, store = corpus
     # tombstone + exclude the two top brute hits; the served path must not

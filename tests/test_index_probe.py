@@ -12,18 +12,28 @@ rows with `==` — scores must be bit-identical, not close:
 - hot buckets past the cap (`DEFAULT_MAX_BUCKET` patched small);
 - an all-zero embedding scores 0.0;
 - a `k` that cuts inside a score tie keeps the lowest ids.
+
+`dataops.ann.ann_topk_lsh` runs the same kernel over signature rows it
+computes in memory; `_ann_lsh_oracle` is its earlier two-sided join, kept
+verbatim, and the two agree row for row (rank included) until a hot bucket
+passes the cap, which only the kernel applies. No module outside `linker/`
+signs vectors for an LSH join.
 """
 
 from __future__ import annotations
+
+import os
+import re
 
 import numpy as np
 import pytest
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from cortex_spark.functions.similarity import cosine_col
+from cortex_spark.dataops.ann import _rescore_topk, ann_topk_lsh
+from cortex_spark.functions.similarity import cosine_col, l2_norm_col
 from cortex_spark.linker import lsh
-from cortex_spark.linker.index import N_BUCKET_PARTS, LshIndexStore
+from cortex_spark.linker.index import N_BUCKET_PARTS, LshIndexStore, signature_rows
 
 DIM = 8
 SCHEMA = "node_id string, embedding array<float>"
@@ -41,7 +51,9 @@ def _probe_oracle(
     idx = store.spark.read.parquet(store.data_dir)
     if "append_seq" not in idx.columns:
         idx = idx.withColumn("append_seq", F.lit(0))
-    q = store._sigs(queries, id_col, vec_col).select(
+    q = signature_rows(
+        queries, id_col, vec_col, store.dim, store.n_planes, store.bands, store.seed, store.center
+    ).select(
         F.col("node_id").alias("a_id"), F.col("vec").alias("a_vec"), "sig"
     )
     if "bucket" in idx.columns:
@@ -74,6 +86,37 @@ def _probe_oracle(
     )
     w = Window.partitionBy("a_id").orderBy(F.desc("score"), F.asc("b_id"))
     return scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k).drop("rn")
+
+
+def _ann_lsh_oracle(
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int = 10,
+    corpus_id: str = "vec_id",
+    query_id: str = "vec_id",
+    vec_col: str = "embedding",
+    n_planes: int = 16,
+    bands: int = 8,
+    seed: int = 7,
+) -> DataFrame:
+    """The earlier `ann_topk_lsh`: both sides signed and exploded, joined on
+    sig, deduplicated per pair, rescored — no hot-bucket cap."""
+    dim = lsh.infer_dim(corpus, vec_col)
+    c = lsh.add_lsh_bands(
+        corpus.select(F.col(corpus_id).alias("neighbor_id"), F.col(vec_col).alias("c_vec")),
+        "c_vec", dim, n_planes, bands, seed,
+    ).select(
+        "neighbor_id", "c_vec", l2_norm_col(F.col("c_vec")).alias("c_norm"),
+        F.explode("lsh_sigs").alias("sig"),
+    )
+    q = lsh.add_lsh_bands(
+        queries.select(F.col(query_id).alias("query_id"), F.col(vec_col).alias("q_vec")),
+        "q_vec", dim, n_planes, bands, seed,
+    ).select(
+        "query_id", "q_vec", l2_norm_col(F.col("q_vec")).alias("q_norm"),
+        F.explode("lsh_sigs").alias("sig"),
+    )
+    return _rescore_topk(c.join(q, "sig").dropDuplicates(["query_id", "neighbor_id"]), k)
 
 
 def _rows(df: DataFrame) -> set[tuple]:
@@ -164,3 +207,102 @@ def test_hot_bucket_cap_matches_oracle(index, monkeypatch):
     got = _rows(store.probe(queries, k=50))
     assert got != uncapped  # the cap bites
     assert got == _rows(_probe_oracle(store, queries, k=50))
+
+
+# --------------------------------------------------------------------------
+# ann_topk_lsh: the same kernel over in-memory signature rows
+# --------------------------------------------------------------------------
+
+
+def _ann_rows(df: DataFrame) -> set[tuple]:
+    return {(r["query_id"], r["neighbor_id"], r["score"], r["rank"]) for r in df.collect()}
+
+
+@pytest.fixture(scope="module")
+def ann_case(spark, index):
+    """The index fixture's first append as an in-memory corpus (`u` at its
+    first vector, so every id has one version) and its queries, by vec_id."""
+    store, queries, _ = index
+    corpus = (
+        spark.read.parquet(store.data_dir)
+        .filter("append_seq = 0")
+        .select(F.col("node_id").alias("vec_id"), F.col("vec").alias("embedding"))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    return corpus, queries.withColumnRenamed("node_id", "vec_id")
+
+
+def test_ann_topk_lsh_matches_two_sided_join(ann_case):
+    corpus, queries = ann_case
+    got = {}
+    for k in (2, 50):  # k=2 cuts inside q_t's three-way tie
+        got[k] = _ann_rows(ann_topk_lsh(corpus, queries, k=k, n_planes=4, bands=2))
+        want = _ann_rows(_ann_lsh_oracle(corpus, queries, k=k, n_planes=4, bands=2))
+        assert got[k] == want, (k, got[k] ^ want)
+    by_pair = {(a, b): (s, r) for a, b, s, r in got[50]}
+    assert ("r00", "r00") not in by_pair  # r00 is a query and a corpus row
+    zero = [s for (a, _), (s, _) in by_pair.items() if a == "z_query"]
+    assert zero and set(zero) == {0.0}
+    assert sorted((r, b) for a, b, _, r in got[2] if a == "q_t") == [(1, "t0"), (2, "t1")]
+    ranks: dict[str, list[int]] = {}
+    for (a, _), (_, r) in by_pair.items():
+        ranks.setdefault(a, []).append(r)
+    assert all(sorted(rs) == list(range(1, len(rs) + 1)) for rs in ranks.values())
+
+
+def _band_sigs(df: DataFrame) -> dict[str, set[int]]:
+    rows = df.collect()
+    sigs = lsh.band_signer(DIM, 4, 2, 7)(np.array([r["embedding"] for r in rows], dtype=np.float64))
+    return {r["vec_id"]: {int(x) for x in s} for r, s in zip(rows, sigs)}
+
+
+def test_ann_topk_lsh_caps_hot_buckets_at_lowest_ids(ann_case, monkeypatch):
+    """With the cap at 3, each bucket contributes its 3 lowest corpus ids
+    (every row is one version at b_seq 0); the two-sided join keeps every
+    bucket whole. Surviving pairs score exactly as before."""
+    corpus, queries = ann_case
+    uncapped = _ann_rows(_ann_lsh_oracle(corpus, queries, k=50, n_planes=4, bands=2))
+    monkeypatch.setattr(lsh, "DEFAULT_MAX_BUCKET", 3)
+    got = _ann_rows(ann_topk_lsh(corpus, queries, k=50, n_planes=4, bands=2))
+
+    buckets: dict[int, list[str]] = {}
+    for vid, sigs in _band_sigs(corpus).items():
+        for sig in sigs:
+            buckets.setdefault(sig, []).append(vid)
+    kept = {sig: sorted(ids)[:3] for sig, ids in buckets.items()}
+    want = {
+        (a, b)
+        for a, sigs in _band_sigs(queries).items()
+        for sig in sigs
+        for b in kept.get(sig, [])
+        if b != a
+    }
+    assert {(a, b) for a, b, _, _ in got} == want
+    assert want < {(a, b) for a, b, _, _ in uncapped}  # the cap bites
+    score = {(a, b): s for a, b, s, _ in uncapped}
+    assert all(score[(a, b)] == s for a, b, s, _ in got)
+
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+LSH_SIGNING = re.compile(r"\b(add_lsh_bands|band_sig_udf|_sig_vec_udf)\(")
+# the modules that may sign vectors for an LSH join: the signer itself and
+# the one query-vs-corpus join (index probe and ann_topk_lsh alike)
+SIGNING_MODULES = {os.path.join("linker", "lsh.py"), os.path.join("linker", "index.py")}
+
+
+def test_one_lsh_join():
+    pkg = os.path.join(ROOT, "cortex_spark")
+    signers = []
+    for dirpath, _, files in os.walk(pkg):
+        for name in files:
+            path = os.path.join(dirpath, name)
+            rel = os.path.relpath(path, pkg)
+            if name.endswith(".py") and rel not in SIGNING_MODULES:
+                with open(path) as f:
+                    if LSH_SIGNING.search(f.read()):
+                        signers.append(rel)
+    assert signers == []
+    # the incremental cycle's one candidate source is its index probe
+    with open(os.path.join(pkg, "pipeline", "incremental.py")) as f:
+        assert "ann_topk_lsh" not in f.read()

@@ -9,6 +9,7 @@ from datetime import datetime
 import numpy as np
 from pyspark.sql import functions as F
 
+from cortex_spark.linker.index import LshIndexStore
 from cortex_spark.linker.rules import ConfigRule, LinkerConfig
 from tests.conftest import make_node
 
@@ -22,8 +23,9 @@ def _edge_rows(df):
 
 
 def _cycle_pairs(nodes, k):
-    """run_cycle's candidate pairs when every node is fresh and no index is
-    given: the fresh nodes probe the whole live table."""
+    """run_cycle's candidate pairs when every node is fresh: the fresh nodes
+    probe an index of the whole live table (ann_topk_lsh runs the index
+    probe's kernel over signatures it computes in memory)."""
     from cortex_spark.dataops.ann import ann_topk_lsh
 
     vecs = nodes.select(F.col("node_id").alias("vec_id"), "embedding")
@@ -59,6 +61,7 @@ def test_run_cycle_body_rule_matches_link_nodes(spark, nodes_df_factory, edges_d
     cycle_edges, metrics = run_cycle(
         nodes, edges_df_factory([]), str(tmp_path / "meta.json"), cfg, now=NOW,
         max_edges_per_cycle=UNCAPPED,
+        index_store=LshIndexStore(str(tmp_path / "idx"), spark, dim=16),
     )
     batch_edges = link_nodes(nodes, cfg, run_ts=NOW, candidates=_cycle_pairs(nodes, cfg.ann_k))
 
@@ -92,6 +95,7 @@ def test_cycle_cap_cuts_a_pair_by_priority(spark, nodes_df_factory, edges_df_fac
         edges, _ = run_cycle(
             nodes, edges_df_factory([]), str(tmp_path / f"meta{cap}.json"), cfg, now=NOW,
             max_edges_per_cycle=cap,
+            index_store=LshIndexStore(str(tmp_path / f"idx{cap}"), spark, dim=16),
         )
         kept[cap] = {(r["src"], r["dst"], r["relation"]) for r in edges.collect()}
     assert kept[1] == {("new", "old", "related_to")}
@@ -140,7 +144,10 @@ def test_cycle_metrics_from_one_pass_each(spark, nodes_df_factory, edges_df_fact
         make_node("fresh_lone", embedding=[float(x) for x in lone], created_at="2026-01-01 13:00:00"),
     ]
     nodes = nodes_df_factory(rows)
-    edges, metrics = run_cycle(nodes, edges_df_factory([]), str(tmp_path / "meta.json"), now=NOW)
+    edges, metrics = run_cycle(
+        nodes, edges_df_factory([]), str(tmp_path / "meta.json"), now=NOW,
+        index_store=LshIndexStore(str(tmp_path / "idx"), spark, dim=16),
+    )
 
     per_src = edges.groupBy("src").count()
     want = {

@@ -357,11 +357,14 @@ def test_index_probe_scores_newest_vector_version(spark, nodes_df_factory, tmp_p
 
 def test_run_cycle_with_index_scales_with_fresh_count(spark, nodes_df_factory, edges_df_factory, tmp_path):
     """Cycle cost ∝ fresh nodes: the index meta proves only the fresh slice
-    was (re-)signed per cycle, and the emitted edges match the
-    full-re-bucketing path exactly."""
+    was (re-)signed per cycle, and the emitted edges match the earlier
+    index-less cycle, which re-bucketed the whole live table (kept here as
+    the reference, through the earlier two-sided LSH join)."""
     from cortex_spark.linker.index import LshIndexStore
-    from cortex_spark.linker.rules import LinkerConfig
-    from cortex_spark.pipeline.incremental import run_cycle
+    from cortex_spark.linker.pipeline import _attach_attrs, link_tail, linkable
+    from cortex_spark.linker.rules import LinkerConfig, apply_link_rules
+    from cortex_spark.pipeline.incremental import MAX_EDGES_PER_CYCLE, run_cycle
+    from tests.test_index_probe import _ann_lsh_oracle
 
     base = _embed_rows(80, seed=7, created="2026-01-10 00:00:00")
     # fresh nodes reuse base embeddings → the similarity rule actually fires
@@ -378,7 +381,6 @@ def test_run_cycle_with_index_scales_with_fresh_count(spark, nodes_df_factory, e
     empty_edges = edges_df_factory([])
     cfg = LinkerConfig()
 
-    # indexed path
     store = LshIndexStore(str(tmp_path / "idx"), spark, dim=32)
     nodes1 = nodes_df_factory(base + fresh1)
     e1, m1 = run_cycle(nodes1, empty_edges, str(tmp_path / "meta.json"),
@@ -390,14 +392,22 @@ def test_run_cycle_with_index_scales_with_fresh_count(spark, nodes_df_factory, e
     # appends: [backlog 80, fresh 6, fresh 4] — cycle 2 signed ONLY the 4
     assert store.meta()["appends"] == [80, 6, 4]
 
-    # reference behavior: same cycles WITHOUT the index (full re-bucketing)
-    r1, _ = run_cycle(nodes1, empty_edges, str(tmp_path / "meta_ref.json"),
-                      cfg, now=datetime(2026, 1, 21))
-    r2, _ = run_cycle(nodes2, r1, str(tmp_path / "meta_ref.json"),
-                      cfg, now=datetime(2026, 1, 26))
+    def reference_cycle(nodes, fresh, existing, now):
+        live = linkable(nodes)
+        vecs = live.select(F.col("node_id").alias("vec_id"), "embedding")
+        fresh_ids = [r[0] for r in fresh]  # make_node tuple: node_id at idx 0
+        pairs = _ann_lsh_oracle(
+            vecs, vecs.filter(F.col("vec_id").isin(fresh_ids)), k=cfg.ann_k
+        ).select(F.col("query_id").alias("a_id"), F.col("neighbor_id").alias("b_id"), "score")
+        proposed = apply_link_rules(_attach_attrs(pairs, live, cfg), cfg)
+        return link_tail(proposed, cfg, now, existing, max_edges=MAX_EDGES_PER_CYCLE)
+
+    r1 = reference_cycle(nodes1, fresh1, empty_edges, datetime(2026, 1, 21))
+    r2 = reference_cycle(nodes2, fresh2, r1, datetime(2026, 1, 26))
     key = lambda df: {(r["src"], r["dst"], r["relation"]) for r in df.collect()}  # noqa: E731
     assert key(e1) == key(r1)
     assert key(e2) == key(r2)
+    assert key(e1) and key(e2)
 
 
 # --------------------------------------------------------------------------

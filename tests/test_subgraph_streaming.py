@@ -122,6 +122,7 @@ def test_warren_streaming_ingest(spark, tmp_path):
 
 def test_incremental_cycle(spark, tmp_path, nodes_df_factory, edges_df_factory):
     from cortex_spark.embed import encode_py
+    from cortex_spark.linker.index import LshIndexStore
     from cortex_spark.pipeline.incremental import read_meta, run_cycle
 
     def node(nid, created, text):
@@ -138,8 +139,9 @@ def test_incremental_cycle(spark, tmp_path, nodes_df_factory, edges_df_factory):
     nodes = nodes_df_factory(base + fresh)
     edges = edges_df_factory([])
     meta = str(tmp_path / "meta.json")
+    store = LshIndexStore(str(tmp_path / "idx"), spark, dim=32)
 
-    new_edges, m1 = run_cycle(nodes, edges, meta, now=datetime(2026, 1, 1, 12))
+    new_edges, m1 = run_cycle(nodes, edges, meta, now=datetime(2026, 1, 1, 12), index_store=store)
     assert m1["nodes_processed"] == 2  # old1 is before the 24h default cursor
     assert m1["edges_created"] > 0
     srcs = {r["src"] for r in new_edges.collect()}
@@ -147,7 +149,7 @@ def test_incremental_cycle(spark, tmp_path, nodes_df_factory, edges_df_factory):
 
     # second cycle: cursor advanced → nothing to do
     edges2 = edges.unionByName(new_edges)
-    _, m2 = run_cycle(nodes, edges2, meta, now=datetime(2026, 1, 1, 13))
+    _, m2 = run_cycle(nodes, edges2, meta, now=datetime(2026, 1, 1, 13), index_store=store)
     assert m2["nodes_processed"] == 0
     assert read_meta(meta)["cycle"] == 2
 
@@ -155,7 +157,9 @@ def test_incremental_cycle(spark, tmp_path, nodes_df_factory, edges_df_factory):
     from cortex_spark.linker.rules import LinkerConfig
 
     cfg2 = LinkerConfig(auto_link_threshold=0.8, contradiction_threshold=0.8)
-    _, m3 = run_cycle(nodes, edges2, meta, config=cfg2, now=datetime(2026, 1, 1, 14))
+    _, m3 = run_cycle(
+        nodes, edges2, meta, config=cfg2, now=datetime(2026, 1, 1, 14), index_store=store
+    )
     assert m3["nodes_processed"] == 3
 
 
