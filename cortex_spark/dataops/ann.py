@@ -6,10 +6,9 @@
 - ann_topk_lsh: the scale path — `linker.index.probe_topk`, the one LSH
   join the persisted index's probe also runs, over the corpus's signature
   rows computed in memory: only candidates sharing ≥1 (band, signature)
-  are rescored exactly, each hot bucket capped at DEFAULT_MAX_BUCKET
-  lowest ids. Probed buckets ≪ corpus ⇒ the 100 TB-corpus query cost is
-  proportional to bucket sizes, not corpus size. Recall is tunable via
-  (n_planes, bands).
+  are rescored exactly, every bucket whole (no hot-bucket cap). Probed
+  buckets ≪ corpus ⇒ the 100 TB-corpus query cost is proportional to
+  bucket sizes, not corpus size. Recall is tunable via (n_planes, bands).
 - ann_topk_ivf: the second scale path — IVF coarse quantizer: k-means
   centroids fit driver-side on a deterministic sample (standard IVF
   practice), corpus vectors assigned to their nearest-centroid inverted
@@ -79,15 +78,18 @@ def ann_topk_lsh(
     bands: int = 8,
     seed: int = 7,
 ) -> DataFrame:
-    """LSH-bucketed top-k through the index probe's kernel: the corpus is
-    the stored side (every row one version, b_seq 0, so a hot bucket keeps
-    its lowest ids), the queries the signed query side."""
+    """LSH-bucketed top-k through the index probe's kernel, uncapped: the
+    corpus is the stored side (one version per row, b_seq 0), the queries
+    the signed query side. Signing the queries is one eager Spark job at
+    call time; the returned frame reads their checkpointed blocks, which
+    Spark's context cleaner frees once the frame is garbage collected."""
     lsh = (infer_dim(corpus, vec_col), n_planes, bands, seed)
     stored = signature_rows(corpus, corpus_id, vec_col, *lsh).select(
         F.col("node_id").alias("b_id"), F.col("vec").alias("b_vec"), "sig",
         F.lit(0).alias("b_seq"),
     )
-    top = probe_topk(stored, signed_queries(queries, query_id, vec_col, *lsh), k, rank_col="rank")
+    qn = signed_queries(queries, query_id, vec_col, *lsh)
+    top = probe_topk(stored, qn, k, max_bucket=None, rank_col="rank")
     return top.select(
         F.col("a_id").alias("query_id"), F.col("b_id").alias("neighbor_id"), "score", "rank"
     )

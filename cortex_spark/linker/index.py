@@ -18,10 +18,10 @@ auto_linker.rs:378-398); this module is the distributed analogue:
 
 That pass is `probe_topk`, the package's only LSH query-vs-corpus join. Its
 stored side is any frame of (b_id, b_vec, sig, b_seq) rows: `probe` feeds
-it the pruned index scan, `dataops.ann.ann_topk_lsh` feeds it a corpus's
-signature rows computed in memory (`signature_rows`, the rows `append`
-writes, all at b_seq 0). Its query side is `signed_queries`' materialized
-frame.
+it the pruned index scan (hot buckets capped), `dataops.ann.ann_topk_lsh` a
+corpus's signature rows computed in memory (`signature_rows`, the rows
+`append` writes, all at b_seq 0; uncapped). Its query side is
+`signed_queries`' materialized frame.
 
 Index staleness semantics match the reference: deleted nodes are filtered
 at probe time via the caller's live-node set (HNSW likewise keeps stale
@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 
 from cortex_spark.functions.similarity import cosine_from_norms, l2_norm_col, top_k_by_score
 from cortex_spark.io import parquet_file_rows, publish_parquet, write_json_atomic
-from cortex_spark.linker.lsh import add_lsh_bands
+from cortex_spark.linker import lsh
 
 # Signature rows are written partitionBy("bucket") with
 # bucket = pmod(xxhash64(sig), N_BUCKET_PARTS): a probe collects its (≤
@@ -59,7 +59,7 @@ def signature_rows(
 ) -> DataFrame:
     """(node_id, vec, sig): one row per non-null band signature of each
     node — the stored side's rows, before `append` stamps them."""
-    with_sigs = add_lsh_bands(nodes, vec_col, dim, n_planes, bands, seed, center=center)
+    with_sigs = lsh.add_lsh_bands(nodes, vec_col, dim, n_planes, bands, seed, center=center)
     return with_sigs.select(
         F.col(id_col).alias("node_id"),
         F.col(vec_col).alias("vec"),
@@ -75,7 +75,7 @@ def signed_queries(
     vector, norm and band signatures (a_id, a_vec, a_norm, lsh_sigs) — the
     only Arrow UDF a probe runs."""
     return (
-        add_lsh_bands(queries, vec_col, dim, n_planes, bands, seed, center=center)
+        lsh.add_lsh_bands(queries, vec_col, dim, n_planes, bands, seed, center=center)
         .select(
             F.col(id_col).alias("a_id"), F.col(vec_col).alias("a_vec"),
             l2_norm_col(F.col(vec_col)).alias("a_norm"), "lsh_sigs",
@@ -88,29 +88,30 @@ def _query_sigs(qn: DataFrame) -> DataFrame:
     return qn.select("a_id", F.explode("lsh_sigs").alias("sig")).filter(F.col("sig").isNotNull())
 
 
-def probe_topk(stored: DataFrame, qn: DataFrame, k: int, rank_col: str | None = None) -> DataFrame:
+def probe_topk(
+    stored: DataFrame, qn: DataFrame, k: int, *, max_bucket: int | None, rank_col: str | None = None,
+) -> DataFrame:
     """(a_id, b_id, score[, rank_col]): the top-k stored neighbors of each
     `signed_queries` row among the `stored` (b_id, b_vec, sig, b_seq) rows
     sharing at least one band signature with it.
 
-    Each sig's hot bucket is capped at `DEFAULT_MAX_BUCKET` rows, newest
-    versions (max b_seq) and lowest ids first (the quadratic-blowup guard
-    candidate_topk also applies); a query never meets its own id; one
+    Each sig's hot bucket keeps at most `max_bucket` rows (None: all),
+    newest versions (max b_seq) and lowest ids first (the quadratic-blowup
+    guard candidate_topk also applies); a query never meets its own id; one
     aggregate per stored node resolves its NEWEST vector, its norm and the
     queries it met; scores are exact cosine."""
-    from cortex_spark.linker.lsh import DEFAULT_MAX_BUCKET
-
     q = _query_sigs(qn)
-    # touch only probed buckets; cap each at max_bucket, newest versions
-    # and lowest ids first (deterministic truncation)
+    # touch only probed buckets
     probe_sigs = q.select("sig").distinct()
     idx_hit = stored.join(F.broadcast(probe_sigs), "sig")
-    w_cap = Window.partitionBy("sig").orderBy(F.desc("b_seq"), F.asc("b_id"))
-    idx_hit = (
-        idx_hit.withColumn("rn", F.row_number().over(w_cap))
-        .filter(F.col("rn") <= DEFAULT_MAX_BUCKET)
-        .drop("rn")
-    )
+    if max_bucket is not None:
+        # newest versions and lowest ids first (deterministic truncation)
+        w_cap = Window.partitionBy("sig").orderBy(F.desc("b_seq"), F.asc("b_id"))
+        idx_hit = (
+            idx_hit.withColumn("rn", F.row_number().over(w_cap))
+            .filter(F.col("rn") <= max_bucket)
+            .drop("rn")
+        )
     cands = idx_hit.join(q, "sig").filter(F.col("a_id") != F.col("b_id"))
     # newest VISIBLE version of each stored node wins for re-appended
     # (updated) nodes — resolved per b_id across all probed buckets, so
@@ -232,8 +233,9 @@ class LshIndexStore:
         Signs the queries once (one cycle's fresh nodes or one search
         query; ids unique), scans the index once in the PROBED bucket
         partitions only and hands the scan to `probe_topk`, whose b_seq is
-        the append_seq. Callers semi-join b_id against their live set to
-        drop tombstoned entries (HNSW-stale semantics)."""
+        the append_seq, hot buckets capped at DEFAULT_MAX_BUCKET. Callers
+        semi-join b_id against their live set to drop tombstoned entries
+        (HNSW-stale semantics)."""
         idx = self.spark.read.parquet(self.data_dir)
         qn = signed_queries(
             queries, id_col, vec_col, self.dim, self.n_planes, self.bands, self.seed,
@@ -253,7 +255,7 @@ class LshIndexStore:
             F.col("node_id").alias("b_id"), F.col("vec").alias("b_vec"), "sig",
             F.col("append_seq").alias("b_seq"),
         )
-        return probe_topk(idx, qn, k)
+        return probe_topk(idx, qn, k, max_bucket=lsh.DEFAULT_MAX_BUCKET)
 
     def compact(self) -> int:
         """Drop all superseded node versions (keep each node_id's rows at

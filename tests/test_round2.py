@@ -279,6 +279,37 @@ def test_gate_conflict_lsh_matches_bruteforce(spark, nodes_df_factory):
     assert recall >= 0.95, f"LSH gate recall {recall}"
 
 
+def test_gate_lsh_scores_hot_buckets_past_the_cap(spark, nodes_df_factory, monkeypatch):
+    """The gate's LSH path keeps every bucket whole: with the probe's
+    hot-bucket cap patched below the fixture's fullest bucket, its verdicts
+    are unchanged and still match brute force."""
+    from cortex_spark.gate import conflict_verdicts
+    from cortex_spark.linker import lsh
+
+    rows = _clustered_nodes(12, 4)
+    ex_rows = [(rid, c, vec) for rid, c, vec in rows if not rid.endswith("_3")]
+    existing = nodes_df_factory([make_node(rid, embedding=vec, source_agent=f"agent{c}") for rid, c, vec in ex_rows])
+    incoming = nodes_df_factory(
+        [make_node(rid, embedding=vec, source_agent=f"agent{c}") for rid, c, vec in rows if rid.endswith("_3")]
+    )
+    sizes: dict[int, int] = {}
+    for sigs in lsh.band_signer(32, 16, 8, 7)(np.array([vec for _, _, vec in ex_rows])):
+        for sig in sigs:
+            sizes[int(sig)] = sizes.get(int(sig), 0) + 1
+    cap = 2
+    assert max(sizes.values()) > cap
+
+    def verdicts(use_lsh):
+        return {(r["node_id"], r["gate_reason"]) for r in conflict_verdicts(incoming, existing, use_lsh=use_lsh).collect()}
+
+    uncapped = verdicts(True)
+    exact = verdicts(False)
+    monkeypatch.setattr(lsh, "DEFAULT_MAX_BUCKET", cap)
+    approx = verdicts(True)
+    assert approx == uncapped
+    assert len(exact & approx) / len(exact) >= 0.95
+
+
 # --------------------------------------------------------------------------
 # persisted LSH index: incremental cycles don't re-bucket the corpus
 # --------------------------------------------------------------------------
