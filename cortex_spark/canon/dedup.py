@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cortex_spark.graph.degree import degree
-from cortex_spark.linker.lsh import brute_force_pairs, candidate_topk
+from cortex_spark.linker.lsh import brute_force_pairs
 from cortex_spark.linker.pipeline import linkable
 
 SUPERSEDE_SIM = 0.98
@@ -29,24 +29,21 @@ IMPORTANCE_GAP = 0.3
 def near_dup_pairs(
     nodes: DataFrame,
     threshold: float,
-    use_lsh: bool = True,
-    lsh_kwargs: dict | None = None,
     candidates: DataFrame | None = None,
 ) -> DataFrame:
     """Canonical (a_id < b_id) pairs of a (node_id, embedding) frame with
     cosine ≥ threshold: (a_id, b_id, score).
 
-    Candidate arm (use_lsh, or `candidates` given): threshold search over a
-    per-node top-k candidate frame — `candidates` (linker.pipeline.
-    ann_candidates output) or a fresh candidate_topk — since threshold-grade
-    pairs are always within a node's top neighbors; each unordered pair
-    keeps its max score. Exact arm: brute_force_pairs.
+    With `candidates` (a per-node top-k frame: linker.pipeline.
+    ann_candidates or candidate_topk output): a threshold search over it,
+    since threshold-grade pairs are always within a node's top neighbors;
+    each unordered pair keeps its max score. Without: the exact arm,
+    brute_force_pairs.
     """
-    if candidates is None and not use_lsh:
+    if candidates is None:
         return brute_force_pairs(nodes).filter(F.col("score") >= threshold)
-    topk = candidates if candidates is not None else candidate_topk(nodes, **(lsh_kwargs or {}))
     return (
-        topk.filter(F.col("score") >= threshold)
+        candidates.filter(F.col("score") >= threshold)
         .select(
             F.least("a_id", "b_id").alias("a_id"),
             F.greatest("a_id", "b_id").alias("b_id"),
@@ -60,17 +57,15 @@ def near_dup_pairs(
 def dedup_pairs(
     nodes: DataFrame,
     dedup_threshold: float = 0.92,
-    use_lsh: bool = True,
-    lsh_kwargs: dict | None = None,
     candidates: DataFrame | None = None,
 ) -> DataFrame:
     """Canonical (a_id < b_id) near-duplicate pairs among the linkable
     nodes with cosine ≥ threshold (near_dup_pairs).
 
     Pass `candidates` (linker.pipeline.ann_candidates output) to reuse the
-    linker's candidate structure instead of recomputing the similarity join.
+    linker's candidate structure; without it the exact all-pairs scan runs.
     """
-    return near_dup_pairs(linkable(nodes), dedup_threshold, use_lsh, lsh_kwargs, candidates)
+    return near_dup_pairs(linkable(nodes), dedup_threshold, candidates)
 
 
 def dedup_actions(pairs: DataFrame, nodes: DataFrame, edges: DataFrame) -> DataFrame:

@@ -3,18 +3,17 @@
 - ann_topk_bruteforce: exact top-k per query — broadcast the (small) query
   set against the corpus, native cosine, window rank. The correctness
   baseline; fine whenever |queries| is broadcastable.
-- ann_topk_lsh: the scale path — `linker.index.probe_topk`, the one LSH
-  join the persisted index's probe also runs, over the corpus's signature
-  rows computed in memory: only candidates sharing ≥1 (band, signature)
-  are rescored exactly, every bucket whole (no hot-bucket cap). Probed
-  buckets ≪ corpus ⇒ the 100 TB-corpus query cost is proportional to
-  bucket sizes, not corpus size. Recall is tunable via (n_planes, bands).
-- ann_topk_ivf: the second scale path — IVF coarse quantizer: k-means
-  centroids fit driver-side on a deterministic sample (standard IVF
-  practice), corpus vectors assigned to their nearest-centroid inverted
-  list via an Arrow GEMM, queries probe only the `nprobe` nearest lists.
-  Query cost ∝ nprobe/n_centroids of the corpus; the cell column is the
-  natural bucketing/partition key for the corpus table at rest.
+- ann_topk_lsh and ann_topk_ivf: the scale paths, one join with two
+  filters. Both run `linker.index.probe_topk` (the bucketed join the
+  persisted LSH index's probe also runs) with every bucket whole: only
+  corpus rows sharing a bucket with a query are rescored exactly, so
+  query cost is proportional to bucket sizes, not corpus size.
+  - ann_topk_lsh buckets by (band, signature), over the corpus's signature
+    rows computed in memory. Recall is tunable via (n_planes, bands).
+  - ann_topk_ivf buckets by IVF cell: k-means centroids fit driver-side on
+    a deterministic sample (standard IVF practice), each corpus vector in
+    its nearest-centroid cell (an Arrow GEMM), each query probing its
+    `nprobe` nearest cells. Query cost ∝ nprobe/n_centroids of the corpus.
 """
 
 from __future__ import annotations
@@ -25,23 +24,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cortex_spark.functions.similarity import cosine_from_norms, l2_norm_col, top_k_by_score
-from cortex_spark.linker.index import probe_topk, signature_rows, signed_queries
+from cortex_spark.linker.index import probe_topk, query_rows, signature_rows, signed_queries
 from cortex_spark.linker.lsh import infer_dim
-
-
-def _rescore_topk(cands: DataFrame, k: int) -> DataFrame:
-    """The tail every ANN path shares: drop self matches, exact cosine from
-    the per-row norms, per-query top-k. `cands` carries (query_id,
-    neighbor_id, q_vec, c_vec, q_norm, c_norm); the output is (query_id,
-    neighbor_id, score, rank ≤ k)."""
-    scored = cands.filter(F.col("query_id") != F.col("neighbor_id")).select(
-        "query_id",
-        "neighbor_id",
-        cosine_from_norms(
-            F.col("q_vec"), F.col("c_vec"), F.col("q_norm"), F.col("c_norm")
-        ).alias("score"),
-    )
-    return top_k_by_score(scored, "query_id", "neighbor_id", k, rank_col="rank")
 
 
 def ann_topk_bruteforce(
@@ -64,7 +48,22 @@ def ann_topk_bruteforce(
         F.col(vec_col).alias("q_vec"),
         l2_norm_col(F.col(vec_col)).alias("q_norm"),
     )
-    return _rescore_topk(c.crossJoin(F.broadcast(q)), k)
+    scored = c.crossJoin(F.broadcast(q)).filter(F.col("query_id") != F.col("neighbor_id")).select(
+        "query_id",
+        "neighbor_id",
+        cosine_from_norms(
+            F.col("q_vec"), F.col("c_vec"), F.col("q_norm"), F.col("c_norm")
+        ).alias("score"),
+    )
+    return top_k_by_score(scored, "query_id", "neighbor_id", k, rank_col="rank")
+
+
+def _bucketed_topk(stored: DataFrame, qn: DataFrame, k: int) -> DataFrame:
+    """`probe_topk`, uncapped, in this module's column names."""
+    top = probe_topk(stored, qn, k, max_bucket=None, rank_col="rank")
+    return top.select(
+        F.col("a_id").alias("query_id"), F.col("b_id").alias("neighbor_id"), "score", "rank"
+    )
 
 
 def ann_topk_lsh(
@@ -88,11 +87,7 @@ def ann_topk_lsh(
         F.col("node_id").alias("b_id"), F.col("vec").alias("b_vec"), "sig",
         F.lit(0).alias("b_seq"),
     )
-    qn = signed_queries(queries, query_id, vec_col, *lsh)
-    top = probe_topk(stored, qn, k, max_bucket=None, rank_col="rank")
-    return top.select(
-        F.col("a_id").alias("query_id"), F.col("b_id").alias("neighbor_id"), "score", "rank"
-    )
+    return _bucketed_topk(stored, signed_queries(queries, query_id, vec_col, *lsh), k)
 
 
 def _ivf_sample(corpus, vec_col: str, corpus_id: str, sample_cap: int, seed: int, n: int):
@@ -186,87 +181,24 @@ def ann_topk_ivf(
     centroids=None,
     n_rows: int | None = None,
 ) -> DataFrame:
-    """IVF top-k: corpus vectors live in their top-1 centroid cell, each
-    query probes its `nprobe` nearest cells, exact cosine rescore + window
-    rank inside the probed lists only. Pass precomputed `centroids` to
-    reuse a fitted quantizer (the persisted-index pattern)."""
+    """IVF top-k through `probe_topk`: each corpus vector is a stored row
+    in its top-1 centroid cell (one version, b_seq 0), each query probes its
+    `nprobe` nearest cells, and the exact cosine rescore + rank run inside
+    the probed cells only. Pass precomputed `centroids` to reuse a fitted
+    quantizer. Like ann_topk_lsh, the queries are materialized by one
+    eager Spark job at call time."""
     C = centroids if centroids is not None else fit_ivf_centroids(
         corpus, vec_col, corpus_id, n_centroids, seed=seed, n_rows=n_rows
     )
     # null-embedding rows are dropped on BOTH sides (the same contract as
     # the linker paths); _cell_udf would otherwise fail the whole stage on a
     # ragged batch
-    c = corpus.select(
-        F.col(corpus_id).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
-    ).filter(F.col("c_vec").isNotNull()).withColumn("cell", _cell_udf(C, 1)(F.col("c_vec"))[0]).withColumn(
-        "c_norm", l2_norm_col(F.col("c_vec"))
+    stored = corpus.filter(F.col(vec_col).isNotNull()).select(
+        F.col(corpus_id).alias("b_id"), F.col(vec_col).alias("b_vec"),
+        _cell_udf(C, 1)(F.col(vec_col))[0].alias("sig"), F.lit(0).alias("b_seq"),
     )
-    q = (
-        queries.select(F.col(query_id).alias("query_id"), F.col(vec_col).alias("q_vec"))
-        .filter(F.col("q_vec").isNotNull())
-        .withColumn("cell", F.explode(_cell_udf(C, nprobe)(F.col("q_vec"))))
-        .withColumn("q_norm", l2_norm_col(F.col("q_vec")))
+    qn = query_rows(
+        queries.filter(F.col(vec_col).isNotNull()), query_id, vec_col,
+        _cell_udf(C, nprobe)(F.col(vec_col)),
     )
-    return _rescore_topk(c.join(F.broadcast(q), "cell"), k)
-
-
-class IvfIndexStore:
-    """Persisted IVF index: centroids as a small parquet, corpus
-    assignments written `partitionBy("cell")` — the inverted lists ARE
-    parquet partitions, so a probe's `cell IN (...)` filter partition-prunes
-    the scan to the probed lists (pytest asserts the pruned file count).
-    The at-rest layout a 100 TB embedding corpus would use."""
-
-    def __init__(self, root: str, spark) -> None:
-        import os
-
-        self.root = root
-        self.spark = spark
-        self.centroids_path = os.path.join(root, "centroids")
-        self.lists_path = os.path.join(root, "lists")
-
-    def build(
-        self,
-        corpus: DataFrame,
-        corpus_id: str = "vec_id",
-        vec_col: str = "embedding",
-        n_centroids: int = 16,
-        seed: int = 7,
-        n_rows: int | None = None,
-    ) -> None:
-        C = fit_ivf_centroids(corpus, vec_col, corpus_id, n_centroids, seed=seed, n_rows=n_rows)
-        rows = [(int(i), [float(x) for x in row]) for i, row in enumerate(C)]
-        self.spark.createDataFrame(rows, "cell int, centroid array<float>").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(self.centroids_path)
-        assigned = corpus.select(
-            F.col(corpus_id).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
-        ).filter(F.col("c_vec").isNotNull()).withColumn("cell", _cell_udf(C, 1)(F.col("c_vec"))[0])
-        assigned.write.mode("overwrite").partitionBy("cell").parquet(self.lists_path)
-
-    def centroids(self):
-        rows = self.spark.read.parquet(self.centroids_path).orderBy("cell").collect()
-        return np.array([r["centroid"] for r in rows], dtype=np.float32)
-
-    def probe(
-        self,
-        queries: DataFrame,
-        k: int = 10,
-        query_id: str = "vec_id",
-        vec_col: str = "embedding",
-        nprobe: int = 4,
-    ) -> DataFrame:
-        """Top-k over the persisted lists; reads ONLY the probed cells."""
-        C = self.centroids()
-        q = (
-            queries.select(F.col(query_id).alias("query_id"), F.col(vec_col).alias("q_vec"))
-            .filter(F.col("q_vec").isNotNull())
-            .withColumn("cell", F.explode(_cell_udf(C, nprobe)(F.col("q_vec"))))
-            .localCheckpoint(eager=True)
-        )
-        cells = [r["cell"] for r in q.select("cell").distinct().collect()]
-        lists = self.spark.read.parquet(self.lists_path).filter(F.col("cell").isin(cells))
-        cands = lists.withColumn("c_norm", l2_norm_col(F.col("c_vec"))).join(
-            F.broadcast(q.withColumn("q_norm", l2_norm_col(F.col("q_vec")))), "cell"
-        )
-        return _rescore_topk(cands, k)
+    return _bucketed_topk(stored, qn, k)

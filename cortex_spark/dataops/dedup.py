@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from cortex_spark.canon.dedup import near_dup_pairs
+from cortex_spark.linker.lsh import candidate_topk
 
 
 def normalized_text_col(text) -> F.Column:
@@ -232,7 +233,9 @@ def embedding_neardup_pairs(
 ) -> DataFrame:
     """Embedding-cosine near-duplicates ≥ threshold as canonical (a_id <
     b_id, score) pairs with string ids — near_dup_pairs over the renamed
-    columns (`lsh_kwargs` go to candidate_topk; the LSH arm's scores are
-    its float32 GEMM scores). The embedding analogue of minhash_lsh_pairs."""
+    columns, with candidate_topk candidates under `use_lsh` (`lsh_kwargs`
+    go to candidate_topk; that arm's scores are its float32 GEMM scores).
+    The embedding analogue of minhash_lsh_pairs."""
     d = df.select(F.col(id_col).cast("string").alias("node_id"), F.col(vec_col).alias("embedding"))
-    return near_dup_pairs(d, threshold, use_lsh, lsh_kwargs)
+    cands = candidate_topk(d, **(lsh_kwargs or {})) if use_lsh else None
+    return near_dup_pairs(d, threshold, cands)

@@ -53,11 +53,13 @@ def vector_search(
     """Top-k cosine for one query vector (VectorFilter F4 applied pre-score).
 
     Without an index (or with one holding ≤ INDEX_ABOVE_CORPUS rows, by its
-    meta's rows_indexed): brute-force — the query vector is a literal
+    meta's rows_indexed): the exact scan — the query vector is a literal
     array, no shuffle, one scan + TakeOrdered. With `index` (an
     LshIndexStore) over a larger corpus: probe the persisted signature
-    index — the scan partition-prunes to the query's buckets."""
-    df = nodes.filter(~F.coalesce(F.col("deleted"), F.lit(False))).filter(F.col("embedding").isNotNull())
+    index — the scan partition-prunes to the query's buckets. Either way
+    the filters are written once, over the scored live rows; Catalyst
+    pushes them below the score Project and into the index path's join."""
+    qvec = [float(x) for x in encode_py(query_text, embed_dim, embed_seed)]
     if index is not None and use_index is None:
         # Path pick is driver-side metadata, not a Spark job: the index meta
         # carries a corpus-size hint (rows_indexed, written by every append
@@ -66,69 +68,52 @@ def vector_search(
         # choose brute-vs-index.
         use_index = index.meta()["rows_indexed"] > INDEX_ABOVE_CORPUS
     if index is not None and use_index:
-        return _vector_search_indexed(
-            df, index, query_text, k, embed_dim, embed_seed, kinds, exclude_ids, source_agent
-        )
+        fetch_k = k * INDEX_OVERFETCH + len(exclude_ids or ())
+        scored = _indexed_scan(nodes, index, qvec, fetch_k)
+    else:
+        scored = _exact_scan(nodes, qvec)
     if kinds:
-        df = df.filter(F.col("kind").isin(kinds))
+        scored = scored.filter(F.col("kind").isin(kinds))
     if exclude_ids:
-        df = df.filter(~F.col("node_id").isin(exclude_ids))
+        scored = scored.filter(~F.col("node_id").isin(exclude_ids))
     if source_agent:
-        df = df.filter(F.col("source_agent") == source_agent)
-    qvec = F.array(*[F.lit(float(x)) for x in encode_py(query_text, embed_dim, embed_seed)])
-    return (
-        df.withColumn("vector_score", cosine_col(F.col("embedding"), qvec))
-        .orderBy(F.desc("vector_score"), F.asc("node_id"))
-        .limit(k)
-    )
+        scored = scored.filter(F.col("source_agent") == source_agent)
+    return scored.orderBy(F.desc("vector_score"), F.asc("node_id")).limit(k)
 
 
-def _vector_search_indexed(
-    live: DataFrame,
-    index,
-    query_text: str,
-    k: int,
-    embed_dim: int,
-    embed_seed: int,
-    kinds: list[str] | None,
-    exclude_ids: list[str] | None,
-    source_agent: str | None,
-) -> DataFrame:
-    """Index-served search: one single-row query frame probes the persisted
-    LSH signature index (partition-pruned to the query's buckets), the
-    over-fetched candidates join back to live node attrs for filtering, and
-    the final rank re-uses the probe's exact cosine scores. Tombstoned /
-    stale index entries drop at the live-join (HNSW-stale semantics)."""
-    spark = live.sparkSession
-    qvec = [float(x) for x in encode_py(query_text, embed_dim, embed_seed)]
-    qdf = spark.createDataFrame(
+def _live(nodes: DataFrame) -> DataFrame:
+    return nodes.filter(~F.coalesce(F.col("deleted"), F.lit(False))).filter(F.col("embedding").isNotNull())
+
+
+def _exact_scan(nodes: DataFrame, qvec: list[float]) -> DataFrame:
+    """Every live node with an embedding, scored against the literal query
+    vector: nodes.* plus vector_score."""
+    lit = F.array(*[F.lit(x) for x in qvec])
+    return _live(nodes).withColumn("vector_score", cosine_col(F.col("embedding"), lit))
+
+
+def _indexed_scan(nodes: DataFrame, index, qvec: list[float], fetch_k: int) -> DataFrame:
+    """The index-served candidates in `_exact_scan`'s columns: one
+    single-row query frame probes the persisted LSH signature index
+    (partition-pruned to the query's buckets) for `fetch_k` hits, which
+    join back to the live node attrs and keep the probe's exact cosine
+    scores. Tombstoned / stale index entries drop at the live-join
+    (HNSW-stale semantics)."""
+    live = _live(nodes)
+    qdf = live.sparkSession.createDataFrame(
         [("__query__", qvec)], "node_id string, embedding array<float>"
     )
-    fetch_k = k * INDEX_OVERFETCH + len(exclude_ids or ())
     hits = index.probe(qdf, k=fetch_k).select(
         F.col("b_id").alias("node_id"), F.col("score").alias("vector_score")
     )
-    out = hits.join(live, "node_id")  # inner: only live nodes survive
-    if kinds:
-        out = out.filter(F.col("kind").isin(kinds))
-    if exclude_ids:
-        out = out.filter(~F.col("node_id").isin(exclude_ids))
-    if source_agent:
-        out = out.filter(F.col("source_agent") == source_agent)
-    # column order matches the brute path: nodes.* then vector_score
-    out = out.select(*live.columns, "vector_score")
-    return out.orderBy(F.desc("vector_score"), F.asc("node_id")).limit(k)
+    # inner: only live nodes survive; column order matches the exact scan
+    return hits.join(live, "node_id").select(*live.columns, "vector_score")
 
 
 def search_threshold(nodes: DataFrame, query_text: str, threshold: float, embed_dim: int = 384, embed_seed: int = 42) -> DataFrame:
     """All nodes with cosine ≥ threshold (index.rs:375-387)."""
-    qvec = F.array(*[F.lit(float(x)) for x in encode_py(query_text, embed_dim, embed_seed)])
-    return (
-        nodes.filter(~F.coalesce(F.col("deleted"), F.lit(False)))
-        .filter(F.col("embedding").isNotNull())
-        .withColumn("vector_score", cosine_col(F.col("embedding"), qvec))
-        .filter(F.col("vector_score") >= threshold)
-    )
+    qvec = [float(x) for x in encode_py(query_text, embed_dim, embed_seed)]
+    return _exact_scan(nodes, qvec).filter(F.col("vector_score") >= threshold)
 
 
 def hybrid_search(

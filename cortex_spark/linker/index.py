@@ -16,12 +16,15 @@ auto_linker.rs:378-398); this module is the distributed analogue:
   rescore — a shuffle proportional to the probed buckets, never a corpus
   re-bucketing.
 
-That pass is `probe_topk`, the package's only LSH query-vs-corpus join. Its
-stored side is any frame of (b_id, b_vec, sig, b_seq) rows: `probe` feeds
-it the pruned index scan (hot buckets capped), `dataops.ann.ann_topk_lsh` a
-corpus's signature rows computed in memory (`signature_rows`, the rows
-`append` writes, all at b_seq 0; uncapped). Its query side is
-`signed_queries`' materialized frame.
+That pass is `probe_topk`, the package's only bucketed query-vs-corpus
+join, for LSH and IVF alike: a `sig` is whatever filter key puts a corpus
+row in a bucket, an LSH band signature or an IVF cell. Its stored side is
+any frame of (b_id, b_vec, sig, b_seq) rows: `probe` feeds it the pruned
+index scan (hot buckets capped), `dataops.ann.ann_topk_lsh` a corpus's
+signature rows computed in memory (`signature_rows`, the rows `append`
+writes, all at b_seq 0; uncapped), and `dataops.ann.ann_topk_ivf` each
+corpus row at its top-1 cell (uncapped). Its query side is a `query_rows`
+frame: `signed_queries` for LSH, the queries' `nprobe` cells for IVF.
 
 Index staleness semantics match the reference: deleted nodes are filtered
 at probe time via the caller's live-node set (HNSW likewise keeps stale
@@ -38,7 +41,7 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cortex_spark.functions.similarity import cosine_from_norms, l2_norm_col, top_k_by_score
@@ -67,21 +70,23 @@ def signature_rows(
     ).filter(F.col("sig").isNotNull())
 
 
+def query_rows(queries: DataFrame, id_col: str, vec_col: str, sigs: Column) -> DataFrame:
+    """`probe_topk`'s query side, materialized once: one row per query with
+    its vector, norm and the bucket keys `sigs` gives it (a_id, a_vec,
+    a_norm, lsh_sigs) — the only Arrow UDF a probe runs."""
+    return queries.select(
+        F.col(id_col).alias("a_id"), F.col(vec_col).alias("a_vec"),
+        l2_norm_col(F.col(vec_col)).alias("a_norm"), sigs.alias("lsh_sigs"),
+    ).localCheckpoint(eager=True)
+
+
 def signed_queries(
     queries: DataFrame, id_col: str, vec_col: str, dim: int, n_planes: int, bands: int,
     seed: int, center=None,
 ) -> DataFrame:
-    """The query side, materialized once: one row per query node with its
-    vector, norm and band signatures (a_id, a_vec, a_norm, lsh_sigs) — the
-    only Arrow UDF a probe runs."""
-    return (
-        lsh.add_lsh_bands(queries, vec_col, dim, n_planes, bands, seed, center=center)
-        .select(
-            F.col(id_col).alias("a_id"), F.col(vec_col).alias("a_vec"),
-            l2_norm_col(F.col(vec_col)).alias("a_norm"), "lsh_sigs",
-        )
-        .localCheckpoint(eager=True)
-    )
+    """The LSH query side: `query_rows` keyed by the band signatures."""
+    signed = lsh.add_lsh_bands(queries, vec_col, dim, n_planes, bands, seed, center=center)
+    return query_rows(signed, id_col, vec_col, F.col("lsh_sigs"))
 
 
 def _query_sigs(qn: DataFrame) -> DataFrame:
@@ -92,8 +97,8 @@ def probe_topk(
     stored: DataFrame, qn: DataFrame, k: int, *, max_bucket: int | None, rank_col: str | None = None,
 ) -> DataFrame:
     """(a_id, b_id, score[, rank_col]): the top-k stored neighbors of each
-    `signed_queries` row among the `stored` (b_id, b_vec, sig, b_seq) rows
-    sharing at least one band signature with it.
+    `query_rows` row among the `stored` (b_id, b_vec, sig, b_seq) rows
+    sharing at least one bucket key (band signature or cell) with it.
 
     Each sig's hot bucket keeps at most `max_bucket` rows (None: all),
     newest versions (max b_seq) and lowest ids first (the quadratic-blowup

@@ -82,8 +82,10 @@ def choose_lsh_params(
     O(n·b(n)·target_bucket) ≈ O(n^1.38) — no quadratic cliff and no
     truncation regime. Bands are budget-capped at max_bands (shuffle
     volume ∝ bands); past THAT (n ≳ 10⁹ at the defaults) rows stop growing
-    and max_bucket bounds compute linearly — the regime where the IVF
-    index (dataops/ann.py) is the right tool.
+    and max_bucket bounds compute linearly. No index in this package
+    covers that regime: `dataops.ann.ann_topk_ivf` puts IVF cells through
+    the same `probe_topk` join, but fits its quantizer per call and
+    persists nothing.
 
     Engagement point (round-5, measured): the boost only turns on when the
     frozen mean bucket n/2^rows_cap crosses max_bucket/2 — the zone where

@@ -51,6 +51,7 @@ def stream_autolink(
     edges_dir = os.path.join(out_dir, "edges")
     meta_path = os.path.join(out_dir, "linker_meta.json")
     metrics_path = os.path.join(out_dir, "metrics.jsonl")
+    index_dir = os.path.join(out_dir, "lsh_index")
 
     raw = spark.readStream.schema(
         T.StructType([T.StructField("value", T.StringType())])
@@ -88,7 +89,12 @@ def stream_autolink(
             existing = spark.createDataFrame([], EDGES)
         # cycle clock = newest event in the batch (deterministic, replayable)
         now = nodes_b.agg(F.max("created_at")).first()[0]
-        store = LshIndexStore(os.path.join(out_dir, "lsh_index"), spark, dim=embed_dim)
+        # an existing index keeps the params it was built with: a store made
+        # at the defaults would relabel its meta on append and sign with
+        # params its earlier rows were not written under
+        store = LshIndexStore(index_dir, spark, dim=embed_dim)
+        if os.path.exists(store.meta_path):
+            store = LshIndexStore.open(index_dir, spark)
         new_edges, metrics = run_cycle(
             all_nodes, existing, meta_path, cfg, now=now, index_store=store
         )

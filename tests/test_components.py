@@ -1,11 +1,16 @@
 """Connected components vs a pure-Python union-find oracle, on shapes from
-FIXTURES §5 cc_chains: chains, stars, cliques, plus seeded random graphs."""
+FIXTURES §5 cc_chains: chains, stars, cliques, plus seeded random graphs;
+and both paths vs networkx on hypothesis-generated edge lists."""
 
 from __future__ import annotations
 
 import random
+from unittest import mock
 
+import networkx as nx
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from cortex_spark.canon.components import connected_components
 
@@ -187,3 +192,30 @@ def test_graph_over_the_cap_is_counted_not_collected(spark, monkeypatch):
     got = {(r["node_id"], r["component"]) for r in connected_components(df, stats=stats).collect()}
     assert collected == [] and "driver_path" not in stats
     assert got == set(union_find(edges, sorted({x for e in edges for x in e})).items())
+
+
+# ids drawn from a small pool, so lists repeat edges and hold self-loops
+_edge_lists = st.lists(
+    st.tuples(st.integers(0, 19), st.integers(0, 19)).map(lambda e: (f"v{e[0]:02d}", f"v{e[1]:02d}")),
+    min_size=1,
+    max_size=40,
+)
+
+
+@settings(max_examples=8, deadline=None, derandomize=True, database=None)
+@given(edges=_edge_lists)
+def test_both_paths_match_networkx(spark, edges):
+    """Random edge lists, self-loops and duplicate edges included: the
+    driver path and the distributed path (cap forced to 0) each equal
+    networkx's components, every node labelled by its component's min id.
+    A node whose only edges are self-loops is a singleton component, which
+    connected_components does not emit (its documented contract)."""
+    import cortex_spark.canon.components as C
+
+    comps = nx.connected_components(nx.Graph(edges))
+    exp = {n: min(comp) for comp in comps if len(comp) > 1 for n in comp}
+    df = spark.createDataFrame(edges, "src string, dst string")
+    assert {r["node_id"]: r["component"] for r in connected_components(df).collect()} == exp
+    with mock.patch.object(C, "DRIVER_CC_MAX_EDGES", 0):
+        dist = {r["node_id"]: r["component"] for r in connected_components(df).collect()}
+    assert dist == exp

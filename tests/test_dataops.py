@@ -203,43 +203,6 @@ def test_ivf_sample_plan_has_no_shuffle_or_global_sort(spark, embs):
     assert [r["i"] for r in small] == [r["i"] for r in re4]
 
 
-def test_ivf_index_store_prunes_partitions(spark, embs, tmp_path):
-    """The persisted IVF index returns the same top-k as the in-memory path
-    AND its probe scan touches only the probed cell partitions."""
-    from cortex_spark.dataops.ann import IvfIndexStore, ann_topk_ivf, fit_ivf_centroids
-
-    store = IvfIndexStore(str(tmp_path / "ivf"), spark)
-    store.build(embs, n_centroids=16, seed=7)
-    queries = embs.filter("vec_id < 2")
-
-    got = store.probe(queries, k=10, nprobe=3)
-    C = fit_ivf_centroids(embs, n_centroids=16, seed=7)
-    want = ann_topk_ivf(embs, queries, k=10, n_centroids=16, nprobe=3, centroids=C)
-    g = {(r["query_id"], r["neighbor_id"], r["rank"]) for r in got.collect()}
-    w = {(r["query_id"], r["neighbor_id"], r["rank"]) for r in want.collect()}
-    assert g == w and g
-
-    # partition pruning: the probe's list scan carries a PartitionFilter on
-    # the cell column (inputFiles() can't show pruning — it predates it)
-    from cortex_spark.dataops.ann import _cell_udf
-
-    q = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec"))
-    cells = sorted(
-        r["cell"]
-        for r in q.withColumn("cell", F.explode(_cell_udf(C, 3)(F.col("q_vec"))))
-        .select("cell")
-        .distinct()
-        .collect()
-    )
-    assert 0 < len(cells) < 16
-    filtered = spark.read.parquet(store.lists_path).filter(F.col("cell").isin(cells))
-    plan = filtered._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
-    pf_lines = [l for l in plan.splitlines() if "PartitionFilters" in l]
-    assert pf_lines and "cell" in pf_lines[0] and "IN" in pf_lines[0]
-
-
 def test_ann_bruteforce_topk_matches_numpy(spark, embs):
     rows = embs.collect()
     vecs = {r["vec_id"]: np.array(r["embedding"], dtype=np.float64) for r in rows}

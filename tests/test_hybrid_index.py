@@ -12,12 +12,18 @@ analogue is the persisted LSH signature index. These tests pin:
 - partition pruning: the probe's index scan carries a PartitionFilter on
   the bucket column — only probed buckets are read,
 - one pass: the probe's plan scans the index once and runs no Arrow UDF,
-- hybrid_search end-to-end through the index path (schema + blend intact).
+- hybrid_search end-to-end through the index path (schema + blend intact),
+- the exact scan: `_vector_search_oracle` and `_search_threshold_oracle`
+  are the earlier exact bodies of vector_search and search_threshold, kept
+  verbatim; the shared scan returns their rows (scores compared with ==)
+  from the same optimized plan, under every filter, tombstones and null
+  embeddings.
 """
 
 from __future__ import annotations
 
 import os
+import re
 
 import numpy as np
 import pytest
@@ -25,7 +31,8 @@ from pyspark.sql import functions as F
 
 from conftest import make_edge, make_node
 from cortex_spark.embed import encode_py
-from cortex_spark.hybrid import hybrid_search, vector_search
+from cortex_spark.functions.similarity import cosine_col
+from cortex_spark.hybrid import hybrid_search, search_threshold, vector_search
 from cortex_spark.linker.index import N_BUCKET_PARTS, LshIndexStore
 
 QUERY = "graph memory retention and decay policies"
@@ -84,8 +91,6 @@ def test_auto_switch_reads_meta_hint_without_count_job(spark, corpus, monkeypatc
     limit+count job — we pin that by making DataFrame.count raise during
     plan construction. A large hint routes to the index (a live node absent
     from the index can't appear); a small hint keeps the exact scan."""
-    import pyspark.sql as pysql
-
     nodes, store = corpus
     # a live node the index has never seen, placed exactly at the query
     # vector so the brute path must rank it #1
@@ -96,7 +101,10 @@ def test_auto_switch_reads_meta_hint_without_count_job(spark, corpus, monkeypatc
     )
     live = nodes.unionByName(extra)
 
-    real_count = pysql.DataFrame.count
+    # the class that defines count for this session's frames (pyspark's
+    # classic DataFrame overrides the base class's count)
+    frame_cls = type(live)
+    real_count = frame_cls.count
 
     def boom(self):
         raise AssertionError("path selection launched a count job")
@@ -105,18 +113,18 @@ def test_auto_switch_reads_meta_hint_without_count_job(spark, corpus, monkeypatc
     meta = store.meta()
     meta["rows_indexed"] = 20_000
     store._write_meta(meta)
-    monkeypatch.setattr(pysql.DataFrame, "count", boom)
+    monkeypatch.setattr(frame_cls, "count", boom)
     served = vector_search(live, QUERY, k=10, embed_dim=DIM, index=store)
-    monkeypatch.setattr(pysql.DataFrame, "count", real_count)
+    monkeypatch.setattr(frame_cls, "count", real_count)
     got = [r["node_id"] for r in served.collect()]
     assert "zz_unindexed" not in got  # index-served: unindexed node invisible
 
     # small hint ⇒ exact scan (still no count job), unindexed node visible
     meta["rows_indexed"] = 301
     store._write_meta(meta)
-    monkeypatch.setattr(pysql.DataFrame, "count", boom)
+    monkeypatch.setattr(frame_cls, "count", boom)
     brute = vector_search(live, QUERY, k=10, embed_dim=DIM, index=store)
-    monkeypatch.setattr(pysql.DataFrame, "count", real_count)
+    monkeypatch.setattr(frame_cls, "count", real_count)
     assert [r["node_id"] for r in brute.collect()][0] == "zz_unindexed"
     # restore the real meta for the other module-scoped tests
     meta["rows_indexed"] = 300
@@ -207,3 +215,90 @@ def test_hybrid_search_through_index(spark, corpus, edges_df_factory):
     # over-fetched index candidates cover the brute top-5 here (recall 1.0
     # on this clustered corpus) ⇒ identical blended ranking
     assert s == b
+
+
+def _vector_search_oracle(nodes, query_text, k=10, embed_dim=384, embed_seed=42, kinds=None,
+                          exclude_ids=None, source_agent=None):
+    """The earlier exact path of vector_search."""
+    df = nodes.filter(~F.coalesce(F.col("deleted"), F.lit(False))).filter(F.col("embedding").isNotNull())
+    if kinds:
+        df = df.filter(F.col("kind").isin(kinds))
+    if exclude_ids:
+        df = df.filter(~F.col("node_id").isin(exclude_ids))
+    if source_agent:
+        df = df.filter(F.col("source_agent") == source_agent)
+    qvec = F.array(*[F.lit(float(x)) for x in encode_py(query_text, embed_dim, embed_seed)])
+    return (
+        df.withColumn("vector_score", cosine_col(F.col("embedding"), qvec))
+        .orderBy(F.desc("vector_score"), F.asc("node_id"))
+        .limit(k)
+    )
+
+
+def _search_threshold_oracle(nodes, query_text, threshold, embed_dim=384, embed_seed=42):
+    """The earlier search_threshold."""
+    qvec = F.array(*[F.lit(float(x)) for x in encode_py(query_text, embed_dim, embed_seed)])
+    return (
+        nodes.filter(~F.coalesce(F.col("deleted"), F.lit(False)))
+        .filter(F.col("embedding").isNotNull())
+        .withColumn("vector_score", cosine_col(F.col("embedding"), qvec))
+        .filter(F.col("vector_score") >= threshold)
+    )
+
+
+def _optimized(df) -> str:
+    """The optimized plan, with expression ids and lambda-variable numbers
+    (session counters) erased."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return re.sub(r"(lambda [A-Za-z]+)_\d+", r"\1", re.sub(r"#\d+L?", "#", plan))
+
+
+def _rows(df) -> list[tuple]:
+    return [tuple(r) for r in df.collect()]
+
+
+@pytest.fixture(scope="module")
+def mixed(corpus):
+    """The corpus with three kinds, two agents, tombstoned, null-deleted
+    and null-embedding rows."""
+    nodes, _ = corpus
+    i = F.substring("node_id", 2, 3).cast("int")
+    return (
+        nodes.withColumn("kind", F.when(i % 3 == 0, "decision").when(i % 3 == 1, "fact").otherwise("event"))
+        .withColumn("source_agent", F.when(i % 2 == 0, "a1").otherwise("a2"))
+        .withColumn("deleted", F.when(i % 7 == 0, F.lit(True)).when(i % 7 == 1, F.lit(None)).otherwise(F.lit(False)))
+        .withColumn("embedding", F.when(i % 11 == 0, F.lit(None)).otherwise(F.col("embedding")))
+        .cache()
+    )
+
+
+@pytest.mark.parametrize(
+    "filters",
+    [
+        {},
+        {"kinds": ["fact", "event"]},
+        {"exclude_ids": ["n001", "n002", "n004"]},
+        {"source_agent": "a2"},
+        {"kinds": ["decision"], "exclude_ids": ["n003"], "source_agent": "a1"},
+    ],
+    ids=["none", "kinds", "exclude", "agent", "all"],
+)
+def test_exact_scan_matches_earlier_body(mixed, filters):
+    for k in (1, 10, 400):
+        got = vector_search(mixed, QUERY, k=k, embed_dim=DIM, **filters)
+        want = _vector_search_oracle(mixed, QUERY, k=k, embed_dim=DIM, **filters)
+        assert _rows(got) == _rows(want)
+        assert _optimized(got) == _optimized(want)
+    ids = [r[0] for r in _rows(got)]
+    assert ids and len(ids) == len(set(ids))
+
+
+def test_threshold_scan_matches_earlier_body(mixed):
+    for threshold in (-1.0, 0.5, 0.9):
+        got = search_threshold(mixed, QUERY, threshold, embed_dim=DIM)
+        want = _search_threshold_oracle(mixed, QUERY, threshold, embed_dim=DIM)
+        assert sorted(_rows(got), key=lambda r: r[0]) == sorted(_rows(want), key=lambda r: r[0])
+        assert _optimized(got) == _optimized(want)
+    # every row but the tombstoned (i % 7 == 0) and null-embedding (i % 11 == 0)
+    live = sum(1 for i in range(300) if i % 7 and i % 11)
+    assert len(_rows(search_threshold(mixed, QUERY, -1.0, embed_dim=DIM))) == live

@@ -14,10 +14,17 @@ rows with `==` — scores must be bit-identical, not close:
 - a `k` that cuts inside a score tie keeps the lowest ids.
 
 `dataops.ann.ann_topk_lsh` runs the same kernel over signature rows it
-computes in memory; `_ann_lsh_oracle` is its earlier two-sided join, kept
-verbatim, and the two agree row for row (rank included), hot buckets past
-the probe's cap too: `ann_topk_lsh` runs the kernel uncapped. No module
-outside `linker/` signs vectors for an LSH join.
+computes in memory; `_ann_lsh_oracle` is its earlier two-sided join, and
+the two agree row for row (rank included), hot buckets past the probe's
+cap too: `ann_topk_lsh` runs the kernel uncapped. No module outside
+`linker/` signs vectors for an LSH join.
+
+`dataops.ann.ann_topk_ivf` runs the kernel too, with IVF cells for band
+signatures; `_ann_ivf_oracle` is its earlier body, kept verbatim, and the
+two agree row for row (rank included) with null embeddings on both sides,
+a query that is also a corpus row, a `k` inside a tie and `nprobe` up to
+past the cell count. Both oracles rescore through `_rescore_oracle`, the
+earlier ANN rescore tail.
 """
 
 from __future__ import annotations
@@ -30,8 +37,19 @@ import pytest
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from cortex_spark.dataops.ann import _rescore_topk, ann_topk_lsh
-from cortex_spark.functions.similarity import cosine_col, l2_norm_col
+from cortex_spark.dataops.ann import (
+    _cell_udf,
+    ann_topk_bruteforce,
+    ann_topk_ivf,
+    ann_topk_lsh,
+    fit_ivf_centroids,
+)
+from cortex_spark.functions.similarity import (
+    cosine_col,
+    cosine_from_norms,
+    l2_norm_col,
+    top_k_by_score,
+)
 from cortex_spark.linker import lsh
 from cortex_spark.linker.index import N_BUCKET_PARTS, LshIndexStore, signature_rows
 
@@ -88,6 +106,19 @@ def _probe_oracle(
     return scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k).drop("rn")
 
 
+def _rescore_oracle(cands: DataFrame, k: int) -> DataFrame:
+    """The earlier ANN rescore tail: drop self matches, exact cosine from
+    the per-row norms, per-query top-k."""
+    scored = cands.filter(F.col("query_id") != F.col("neighbor_id")).select(
+        "query_id",
+        "neighbor_id",
+        cosine_from_norms(
+            F.col("q_vec"), F.col("c_vec"), F.col("q_norm"), F.col("c_norm")
+        ).alias("score"),
+    )
+    return top_k_by_score(scored, "query_id", "neighbor_id", k, rank_col="rank")
+
+
 def _ann_lsh_oracle(
     corpus: DataFrame,
     queries: DataFrame,
@@ -116,7 +147,42 @@ def _ann_lsh_oracle(
         "query_id", "q_vec", l2_norm_col(F.col("q_vec")).alias("q_norm"),
         F.explode("lsh_sigs").alias("sig"),
     )
-    return _rescore_topk(c.join(q, "sig").dropDuplicates(["query_id", "neighbor_id"]), k)
+    return _rescore_oracle(c.join(q, "sig").dropDuplicates(["query_id", "neighbor_id"]), k)
+
+
+def _ann_ivf_oracle(
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int = 10,
+    corpus_id: str = "vec_id",
+    query_id: str = "vec_id",
+    vec_col: str = "embedding",
+    n_centroids: int = 16,
+    nprobe: int = 4,
+    seed: int = 7,
+    centroids=None,
+    n_rows: int | None = None,
+) -> DataFrame:
+    """The earlier `ann_topk_ivf`: its own cell join, broadcasting the
+    exploded query cells against the corpus's top-1 cells."""
+    C = centroids if centroids is not None else fit_ivf_centroids(
+        corpus, vec_col, corpus_id, n_centroids, seed=seed, n_rows=n_rows
+    )
+    # null-embedding rows are dropped on BOTH sides (the same contract as
+    # the linker paths); _cell_udf would otherwise fail the whole stage on a
+    # ragged batch
+    c = corpus.select(
+        F.col(corpus_id).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
+    ).filter(F.col("c_vec").isNotNull()).withColumn("cell", _cell_udf(C, 1)(F.col("c_vec"))[0]).withColumn(
+        "c_norm", l2_norm_col(F.col("c_vec"))
+    )
+    q = (
+        queries.select(F.col(query_id).alias("query_id"), F.col(vec_col).alias("q_vec"))
+        .filter(F.col("q_vec").isNotNull())
+        .withColumn("cell", F.explode(_cell_udf(C, nprobe)(F.col("q_vec"))))
+        .withColumn("q_norm", l2_norm_col(F.col("q_vec")))
+    )
+    return _rescore_oracle(c.join(F.broadcast(q), "cell"), k)
 
 
 def _rows(df: DataFrame) -> set[tuple]:
@@ -270,6 +336,57 @@ def test_ann_topk_lsh_keeps_hot_buckets_whole(ann_case, monkeypatch):
     monkeypatch.setattr(lsh, "DEFAULT_MAX_BUCKET", 3)
     got = _ann_rows(ann_topk_lsh(corpus, queries, k=50, n_planes=4, bands=2))
     assert got == _ann_rows(_ann_lsh_oracle(corpus, queries, k=50, n_planes=4, bands=2))
+
+
+# --------------------------------------------------------------------------
+# ann_topk_ivf: the same kernel over IVF cells
+# --------------------------------------------------------------------------
+
+N_CELLS = 4
+
+
+@pytest.fixture(scope="module")
+def ivf_case(spark, ann_case):
+    """`ann_case` plus a null embedding on each side, and a quantizer of
+    N_CELLS cells fit on the corpus."""
+    corpus, queries = ann_case
+    schema = "vec_id string, embedding array<float>"
+    corpus = corpus.unionByName(spark.createDataFrame([("n_store", None)], schema))
+    queries = queries.unionByName(spark.createDataFrame([("n_query", None)], schema))
+    return corpus, queries, fit_ivf_centroids(corpus, n_centroids=N_CELLS)
+
+
+@pytest.mark.parametrize("nprobe", [1, 2, N_CELLS, N_CELLS + 2])
+def test_ann_topk_ivf_matches_cell_join(ivf_case, nprobe):
+    corpus, queries, C = ivf_case
+    assert len(C) == N_CELLS
+    got = {}
+    for k in (2, 50):  # k=2 cuts inside q_t's three-way tie
+        got[k] = _ann_rows(ann_topk_ivf(corpus, queries, k=k, nprobe=nprobe, centroids=C))
+        want = _ann_rows(_ann_ivf_oracle(corpus, queries, k=k, nprobe=nprobe, centroids=C))
+        assert got[k] == want, (k, got[k] ^ want)
+    ids = {a for a, *_ in got[50]} | {b for _, b, *_ in got[50]}
+    assert "r00" in ids and not ids & {"n_store", "n_query"}  # null embeddings drop
+    assert not [a for a, b, *_ in got[50] if a == b]  # r00 never meets itself
+    # t0..t2 share q_t's vector, hence its nearest cell
+    assert sorted((r, b) for a, b, _, r in got[2] if a == "q_t") == [(1, "t0"), (2, "t1")]
+
+
+def test_ann_topk_ivf_probing_every_cell_is_exact(ivf_case):
+    """With nprobe ≥ the cell count every corpus row is a candidate, so the
+    IVF rows equal brute force's over the non-null corpus, bit for bit."""
+    corpus, queries, C = ivf_case
+    got = _ann_rows(ann_topk_ivf(corpus, queries, k=50, nprobe=N_CELLS + 2, centroids=C))
+    live = corpus.filter(F.col("embedding").isNotNull())
+    want = _ann_rows(ann_topk_bruteforce(live, queries.filter(F.col("embedding").isNotNull()), k=50))
+    assert got == want
+
+
+def test_ann_topk_ivf_fits_the_same_quantizer(ivf_case):
+    corpus, queries, _ = ivf_case
+    got = _ann_rows(ann_topk_ivf(corpus, queries, k=5, n_centroids=N_CELLS, nprobe=2))
+    want = _ann_rows(_ann_ivf_oracle(corpus, queries, k=5, n_centroids=N_CELLS, nprobe=2))
+    assert got == want
 
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))

@@ -29,7 +29,6 @@ BENCH_CFG = PipelineConfig(embed_dim=64, lsh_planes=None, lsh_bands=20)
 # scripts that keep a chain of their own, on purpose
 OWN_CHAIN = {
     "bench_scale_staged.py",  # one subprocess per stage, band-group passes
-    "bench_link_ab.py",  # A/Bs two source trees, one of them older than this chain
     "bench_lsh_ab.py",  # the candidate stage alone, on synthetic vectors
 }
 

@@ -210,3 +210,42 @@ def test_stream_autolink_end_to_end(spark, tmp_path):
     # cycle 2 signed only the 2 fresh nodes (index meta appends)
     idx_meta = json.load(open(out / "lsh_index" / "_index_meta.json"))
     assert idx_meta["appends"][-1] == 2
+
+
+def test_stream_batch_keeps_a_prebuilt_index_params(spark, tmp_path):
+    """An index built at non-default params before the stream starts keeps
+    them through a stream batch, and its earlier rows stay reachable: a
+    query at an earlier row's vector still finds it."""
+    import numpy as np
+
+    from cortex_spark.linker.index import LshIndexStore
+    from cortex_spark.streaming.autolink import stream_autolink
+
+    src = tmp_path / "events"
+    out = tmp_path / "kg"
+    src.mkdir()
+    rng = np.random.default_rng(5)
+    earlier = [(f"pre{i}", [float(x) for x in rng.standard_normal(32)]) for i in range(3)]
+    schema = "node_id string, embedding array<float>"
+    pre = LshIndexStore(str(out / "lsh_index"), spark, dim=32, n_planes=24, bands=2)
+    pre.append(spark.createDataFrame(earlier, schema))
+    params = json.load(open(pre.meta_path))["params"]
+
+    (src / "b1.jsonl").write_text(
+        "\n".join(
+            json.dumps(
+                {"type": "evidence.submitted", "item_id": "item0", "evidence_id": f"ev{i}",
+                 "content": f"shared evidence payload number {i}", "submitted_by": "kai",
+                 "ts": f"2026-01-02 0{i}:00:00"}
+            )
+            for i in range(3)
+        ) + "\n"
+    )
+    stream_autolink(spark, str(src), str(out), embed_dim=32).awaitTermination(120)
+
+    meta = json.load(open(pre.meta_path))
+    assert meta["appends"] == [3, 3] and meta["params"] == params
+    store = LshIndexStore.open(str(out / "lsh_index"), spark)
+    queries = spark.createDataFrame([(f"q_{i}", v) for i, v in earlier], schema)
+    hits = {(r["a_id"], r["b_id"]) for r in store.probe(queries, k=5).collect()}
+    assert {(f"q_{i}", i) for i, _ in earlier} <= hits
