@@ -45,11 +45,11 @@ def entry(spark: SparkSession) -> DataFrame:
     from cortex_spark.corpus import pages_from_documents
     from cortex_spark.extract.fused import pages_to_nodes_fused
     from cortex_spark.graph.degree import most_connected
-    from cortex_spark.linker.pipeline import link_nodes
+    from cortex_spark.linker.pipeline import ann_candidates, link_nodes
 
     pages = pages_from_documents(spark, "/root/testdata/sf0.001")
     nodes = pages_to_nodes_fused(pages, embed_dim=64).cache()
-    edges = link_nodes(nodes, run_ts=RUN_TS, use_lsh=True)
+    edges = link_nodes(nodes, run_ts=RUN_TS, candidates=ann_candidates(nodes))
     return most_connected(nodes, edges, n=20)
 
 
@@ -1312,15 +1312,16 @@ def q_briefing(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cortex_spark.briefing import generate_briefing
     from cortex_spark.corpus import pages_from_documents
     from cortex_spark.extract.fused import pages_to_nodes_fused
-    from cortex_spark.linker.pipeline import link_nodes
+    from cortex_spark.linker.pipeline import ann_candidates, link_nodes
     from cortex_spark.linker.rules import LinkerConfig
 
     pages = pages_from_documents(spark, sf_dir).filter(
         F.regexp_extract("url", r"/doc/(\d+)$", 1).cast("int") < 500
     )
     nodes = pages_to_nodes_fused(pages, embed_dim=64).cache()
+    cfg = LinkerConfig(max_edges_per_node=8)
     edges = link_nodes(
-        nodes, config=LinkerConfig(max_edges_per_node=8), run_ts=RUN_TS, use_lsh=False
+        nodes, config=cfg, run_ts=RUN_TS, candidates=ann_candidates(nodes, cfg, use_lsh=False)
     )
     agent = (
         nodes.groupBy("source_agent").count()
@@ -1340,21 +1341,22 @@ def q_kg_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     weight) list. Hash-checked against a GOLDEN materialized by the pure-
     Python oracle (scripts/make_kg_golden.py — composition of the python
     reference kernels + the tests' rule-cascade transliteration, no Spark),
-    inlined as SQL VALUES. Exact candidate path (use_lsh=False) keeps the
-    query deterministic; LSH-vs-exact triple P/R ≥0.95 is pytest-asserted
-    (tests/test_pipeline_e2e.py). Golden is pinned to the driver's
-    correctness SF (0.01). max_edges_per_node=8 exercises the W7 cap."""
+    inlined as SQL VALUES. The exact candidate path (ann_candidates with
+    use_lsh=False) keeps the query deterministic; LSH-vs-exact triple P/R
+    ≥0.95 is pytest-asserted (tests/test_pipeline_e2e.py). Golden is
+    pinned to sf0.01. max_edges_per_node=8 exercises the W7 cap."""
     from cortex_spark.corpus import pages_from_documents
     from cortex_spark.extract.fused import pages_to_nodes_fused
-    from cortex_spark.linker.pipeline import link_nodes
+    from cortex_spark.linker.pipeline import ann_candidates, link_nodes
     from cortex_spark.linker.rules import LinkerConfig
 
     pages = pages_from_documents(spark, sf_dir).filter(
         F.regexp_extract("url", r"/doc/(\d+)$", 1).cast("int") < 500
     )
     nodes = pages_to_nodes_fused(pages, embed_dim=64).cache()
+    cfg = LinkerConfig(max_edges_per_node=8)
     edges = link_nodes(
-        nodes, config=LinkerConfig(max_edges_per_node=8), run_ts=RUN_TS, use_lsh=False
+        nodes, config=cfg, run_ts=RUN_TS, candidates=ann_candidates(nodes, cfg, use_lsh=False)
     )
     return edges.select(
         "src", "dst", "relation", F.round(F.col("weight"), 6).alias("weight")

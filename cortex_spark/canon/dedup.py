@@ -1,7 +1,8 @@
 """Near-duplicate detection + action decision (reference linker/dedup.rs).
 
-- dedup_pairs (J13): similarity self-join at dedup_threshold (0.92 default,
-  vector/config.rs), canonical unordered pair key (dedup.rs:96-106).
+- dedup_pairs (J13): the linker's per-node candidates at dedup_threshold
+  (0.92 default, vector/config.rs), canonical unordered pair key
+  (dedup.rs:96-106).
 - dedup_actions (A4): exact reference precedence (dedup.rs:130-177):
     1. connections: a_conn > 2·b_conn (or vice versa) → Merge, keep the
        better-connected node
@@ -19,31 +20,22 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cortex_spark.graph.degree import degree
-from cortex_spark.linker.lsh import brute_force_pairs
-from cortex_spark.linker.pipeline import linkable
 
 SUPERSEDE_SIM = 0.98
 IMPORTANCE_GAP = 0.3
 
 
-def near_dup_pairs(
-    nodes: DataFrame,
-    threshold: float,
-    candidates: DataFrame | None = None,
-) -> DataFrame:
-    """Canonical (a_id < b_id) pairs of a (node_id, embedding) frame with
-    cosine ≥ threshold: (a_id, b_id, score).
+def dedup_pairs(candidates: DataFrame, dedup_threshold: float = 0.92) -> DataFrame:
+    """Canonical (a_id < b_id) near-duplicate pairs with cosine ≥
+    threshold: (a_id, b_id, score).
 
-    With `candidates` (a per-node top-k frame: linker.pipeline.
-    ann_candidates or candidate_topk output): a threshold search over it,
+    A threshold search over `candidates`, a per-node top-k frame
+    (linker.pipeline.ann_candidates output, which the linker reads too),
     since threshold-grade pairs are always within a node's top neighbors;
-    each unordered pair keeps its max score. Without: the exact arm,
-    brute_force_pairs.
+    each unordered pair keeps its max score.
     """
-    if candidates is None:
-        return brute_force_pairs(nodes).filter(F.col("score") >= threshold)
     return (
-        candidates.filter(F.col("score") >= threshold)
+        candidates.filter(F.col("score") >= dedup_threshold)
         .select(
             F.least("a_id", "b_id").alias("a_id"),
             F.greatest("a_id", "b_id").alias("b_id"),
@@ -52,20 +44,6 @@ def near_dup_pairs(
         .groupBy("a_id", "b_id")
         .agg(F.max("score").alias("score"))
     )
-
-
-def dedup_pairs(
-    nodes: DataFrame,
-    dedup_threshold: float = 0.92,
-    candidates: DataFrame | None = None,
-) -> DataFrame:
-    """Canonical (a_id < b_id) near-duplicate pairs among the linkable
-    nodes with cosine ≥ threshold (near_dup_pairs).
-
-    Pass `candidates` (linker.pipeline.ann_candidates output) to reuse the
-    linker's candidate structure; without it the exact all-pairs scan runs.
-    """
-    return near_dup_pairs(linkable(nodes), dedup_threshold, candidates)
 
 
 def dedup_actions(pairs: DataFrame, nodes: DataFrame, edges: DataFrame) -> DataFrame:

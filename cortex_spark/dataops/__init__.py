@@ -3,7 +3,6 @@ from cortex_spark.dataops.dedup import (
     minhash_signatures,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
-    embedding_neardup_pairs,
 )
 from cortex_spark.dataops.ann import ann_topk_bruteforce, ann_topk_lsh
 from cortex_spark.dataops.textqc import text_quality_profile
@@ -13,7 +12,6 @@ __all__ = [
     "minhash_signatures",
     "minhash_lsh_pairs",
     "ngram_jaccard_pairs",
-    "embedding_neardup_pairs",
     "ann_topk_bruteforce",
     "ann_topk_lsh",
     "text_quality_profile",

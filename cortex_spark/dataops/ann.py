@@ -1,8 +1,10 @@
 """Approximate-nearest-neighbor search over an embedding column.
 
 - ann_topk_bruteforce: exact top-k per query — broadcast the (small) query
-  set against the corpus, native cosine, window rank. The correctness
-  baseline; fine whenever |queries| is broadcastable.
+  set against the corpus, native cosine, window rank. The package's one
+  exact similarity scan: the gate's small batches, the linker's exact
+  candidates (linker.pipeline.ann_candidates, nodes on both sides) and the
+  tests' recall baseline; fine whenever |queries| is broadcastable.
 - ann_topk_lsh and ann_topk_ivf: the scale paths, one join with two
   filters. Both run `linker.index.probe_topk` (the bucketed join the
   persisted LSH index's probe also runs) with every bucket whole: only

@@ -1,6 +1,6 @@
 """Deduplication operators for training-data pipelines (first-class ops).
 
-Five families, each sized for 10^12-document corpora:
+Four families, each sized for 10^12-document corpora:
 
 - exact_dedup: hash-groupBy on normalized text (one shuffle on a 32-byte
   key; keeps the min doc id as canonical).
@@ -13,18 +13,15 @@ Five families, each sized for 10^12-document corpora:
   expressions (whole-stage codegen, SQL-oracle-able).
 - n-gram Jaccard: exact Jaccard over token 3-gram sets, evaluated on
   LSH-candidate pairs only (never all-pairs).
-- embedding cosine near-dup: the KG dedup scan (canon.dedup.near_dup_pairs)
-  over any id/vector table — per-node top-k candidates from the LSH
-  bucket GEMM, or exact all-pairs.
+
+Embedding-cosine near-duplicates are the KG dedup scan,
+canon.dedup.dedup_pairs, over per-node top-k candidates.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-from cortex_spark.canon.dedup import near_dup_pairs
-from cortex_spark.linker.lsh import candidate_topk
 
 
 def normalized_text_col(text) -> F.Column:
@@ -221,21 +218,3 @@ def ngram_jaccard_pairs(
     union = F.size(F.array_union("a_sh", "b_sh"))
     jac = F.when(union == 0, F.lit(0.0)).otherwise(inter.cast("double") / union.cast("double"))
     return pairs.select("a_id", "b_id", jac.alias("jaccard")).filter(F.col("jaccard") >= threshold)
-
-
-def embedding_neardup_pairs(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    threshold: float = 0.95,
-    use_lsh: bool = True,
-    lsh_kwargs: dict | None = None,
-) -> DataFrame:
-    """Embedding-cosine near-duplicates ≥ threshold as canonical (a_id <
-    b_id, score) pairs with string ids — near_dup_pairs over the renamed
-    columns, with candidate_topk candidates under `use_lsh` (`lsh_kwargs`
-    go to candidate_topk; that arm's scores are its float32 GEMM scores).
-    The embedding analogue of minhash_lsh_pairs."""
-    d = df.select(F.col(id_col).cast("string").alias("node_id"), F.col(vec_col).alias("embedding"))
-    cands = candidate_topk(d, **(lsh_kwargs or {})) if use_lsh else None
-    return near_dup_pairs(d, threshold, cands)

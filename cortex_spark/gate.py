@@ -169,16 +169,15 @@ def conflict_verdicts(
     conflict_threshold: float = CONFLICT_THRESHOLD,
     duplicate_threshold: float = DUPLICATE_THRESHOLD,
     ann_k: int = 5,
-    use_lsh: bool | None = None,
 ) -> DataFrame:
     """(node_id, gate_reason, existing_node) for incoming nodes rejected by
     the conflict check against the existing table (gate/mod.rs:318-388):
     top-5 neighbors; cosine > duplicate_threshold → reject; > conflict and
     same kind → reject (same agent ⇒ 'duplicate', else 'contradiction').
 
-    Path selection: use_lsh None (auto) routes large incoming batches through
+    Path selection: incoming batches above LSH_ABOVE_INCOMING rows go through
     the LSH-bucketed ANN (scale path — both sides bucketed, probed buckets ≪
-    corpus) and keeps exact brute force for broadcastable batches. LSH recall
+    corpus); broadcastable batches keep exact brute force. LSH recall
     at the 0.85/0.92 thresholds is pytest-asserted ≥ 0.95 — pairs that hot
     are near-parallel vectors, which collide in some band with high
     probability."""
@@ -194,8 +193,7 @@ def conflict_verdicts(
     )
     if ex.isEmpty():
         return incoming.sparkSession.createDataFrame([], "node_id string, gate_reason string, existing_node string")
-    if use_lsh is None:
-        use_lsh = inc.limit(LSH_ABOVE_INCOMING + 1).count() > LSH_ABOVE_INCOMING
+    use_lsh = inc.limit(LSH_ABOVE_INCOMING + 1).count() > LSH_ABOVE_INCOMING
     ann = ann_topk_lsh if use_lsh else ann_topk_bruteforce
     top = ann(
         ex.withColumnRenamed("ex_id", "vec_id"),

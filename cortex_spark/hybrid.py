@@ -22,6 +22,7 @@ from cortex_spark.embed import encode_py
 from cortex_spark.functions.scoring import hybrid_score_col, score_decay_col
 from cortex_spark.functions.similarity import cosine_col
 from cortex_spark.graph.traverse import bfs
+from cortex_spark.linker.pipeline import linkable
 
 DEFAULT_VECTOR_WEIGHT = 0.7  # hybrid.rs:34-45
 DEFAULT_MAX_ANCHOR_DEPTH = 3
@@ -81,15 +82,11 @@ def vector_search(
     return scored.orderBy(F.desc("vector_score"), F.asc("node_id")).limit(k)
 
 
-def _live(nodes: DataFrame) -> DataFrame:
-    return nodes.filter(~F.coalesce(F.col("deleted"), F.lit(False))).filter(F.col("embedding").isNotNull())
-
-
 def _exact_scan(nodes: DataFrame, qvec: list[float]) -> DataFrame:
     """Every live node with an embedding, scored against the literal query
     vector: nodes.* plus vector_score."""
     lit = F.array(*[F.lit(x) for x in qvec])
-    return _live(nodes).withColumn("vector_score", cosine_col(F.col("embedding"), lit))
+    return linkable(nodes).withColumn("vector_score", cosine_col(F.col("embedding"), lit))
 
 
 def _indexed_scan(nodes: DataFrame, index, qvec: list[float], fetch_k: int) -> DataFrame:
@@ -99,7 +96,7 @@ def _indexed_scan(nodes: DataFrame, index, qvec: list[float], fetch_k: int) -> D
     join back to the live node attrs and keep the probe's exact cosine
     scores. Tombstoned / stale index entries drop at the live-join
     (HNSW-stale semantics)."""
-    live = _live(nodes)
+    live = linkable(nodes)
     qdf = live.sparkSession.createDataFrame(
         [("__query__", qvec)], "node_id string, embedding array<float>"
     )

@@ -29,7 +29,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
-from cortex_spark.functions.similarity import cosine_col
 
 # 20 bands × 3 rows: high recall across the whole similarity range the rule
 # engine consumes (≥0.93 even for near-orthogonal pairs at this scale), with
@@ -643,16 +642,4 @@ def candidate_topk(
         merged.join(maybe_b(a_map), "a_id")
         .join(maybe_b(b_map), "b_id")
         .select(F.col("a_sid").alias("a_id"), F.col("b_sid").alias("b_id"), "score")
-    )
-
-
-def brute_force_pairs(nodes: DataFrame, id_col: str = "node_id", vec_col: str = "embedding") -> DataFrame:
-    """Exact all-pairs cosine (small inputs / recall baseline). O(n²) —
-    only for tests and ANN-recall measurement."""
-    a = nodes.select(F.col(id_col).alias("a_id"), F.col(vec_col).alias("a_vec"))
-    b = nodes.select(F.col(id_col).alias("b_id"), F.col(vec_col).alias("b_vec"))
-    return (
-        a.crossJoin(b)
-        .filter(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id", cosine_col(F.col("a_vec"), F.col("b_vec")).alias("score"))
     )

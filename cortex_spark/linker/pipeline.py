@@ -10,9 +10,9 @@ their candidate pairs come from; from there on both run the same code:
     (J11) → first-rule-wins per (src,dst,relation) → per-node cap (W7) →
     per-cycle cap (incremental only) → edge rows with provenance
 
-Batch candidates come from `ann_candidates` (LSH self-join, symmetrized:
-each node scans its neighbors); the cycle's come from probing its fresh
-nodes against the corpus index.
+Batch candidates come from `ann_candidates` (each node scans its
+neighbors: the LSH bucket GEMM, or the exact scan); the cycle's come from
+probing its fresh nodes against the corpus index.
 
 Shuffle budget: one shuffle for the LSH self-join, two broadcast-or-shuffle
 joins to attach node attrs (narrow projection only), and ONE `src` exchange
@@ -27,8 +27,7 @@ from datetime import datetime, timezone
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from cortex_spark.functions.similarity import top_k_by_score
-from cortex_spark.linker.lsh import brute_force_pairs, candidate_topk
+from cortex_spark.linker.lsh import candidate_topk
 from cortex_spark.linker.rules import LinkerConfig, apply_link_rules
 
 ATTR_COLS = ["kind", "title", "tags", "source_agent", "source_session", "created_at"]
@@ -148,15 +147,6 @@ def link_tail(
     )
 
 
-def symmetrize(pairs: DataFrame) -> DataFrame:
-    """Canonical (a<b) pairs → both orientations (each node scans neighbors,
-    auto_linker.rs:215-243)."""
-    swapped = pairs.select(
-        F.col("b_id").alias("a_id"), F.col("a_id").alias("b_id"), F.col("score")
-    )
-    return pairs.unionByName(swapped)
-
-
 def ann_candidates(
     nodes: DataFrame,
     config: LinkerConfig | None = None,
@@ -164,17 +154,25 @@ def ann_candidates(
     lsh_kwargs: dict | None = None,
 ) -> DataFrame:
     """Per-node top-k neighbor scan (the reference's HNSW `search(embedding,
-    100)`, auto_linker.rs:220-221), deterministic tie-break on neighbor id.
-    LSH path: bucketed-GEMM candidate_topk. Exact path: all-pairs + window.
+    100)`, auto_linker.rs:220-221) over the linkable nodes: (a_id, b_id,
+    score), ties broken on the lower neighbor id. LSH path: the bucketed
+    GEMM, candidate_topk (`lsh_kwargs` go to it). Exact path: the package's
+    exact scan, ann_topk_bruteforce, with the nodes as both corpus and
+    queries (the reference's brute-force search, vector/index.rs:258-295).
 
     Compute once (and `.localCheckpoint()`) to share between the linker and
     the dedup scanner — both consume the same candidate structure.
     """
+    # imported here: dataops.ann imports the linker package, which imports
+    # this module
+    from cortex_spark.dataops.ann import ann_topk_bruteforce
+
     cfg = config or LinkerConfig()
     live = linkable(nodes)
     if use_lsh:
         return candidate_topk(live, k=cfg.ann_k, **(lsh_kwargs or {}))
-    return top_k_by_score(symmetrize(brute_force_pairs(live)), "a_id", "b_id", cfg.ann_k)
+    top = ann_topk_bruteforce(live, live, cfg.ann_k, corpus_id="node_id", query_id="node_id")
+    return top.select(F.col("query_id").alias("a_id"), F.col("neighbor_id").alias("b_id"), "score")
 
 
 def link_nodes(
@@ -182,19 +180,18 @@ def link_nodes(
     config: LinkerConfig | None = None,
     run_ts: datetime | None = None,
     existing_edges: DataFrame | None = None,
-    use_lsh: bool = True,
-    lsh_kwargs: dict | None = None,
-    candidates: DataFrame | None = None,
+    *,
+    candidates: DataFrame,
 ) -> DataFrame:
-    """Produce the edge (triple) DataFrame for the given node table.
+    """Produce the edge (triple) DataFrame for the given node table from
+    its per-node candidate pairs (`candidates`: ann_candidates output, or
+    any (a_id, b_id, score) frame), so one candidate structure can serve
+    both the linker and the dedup scanner.
 
     Pass `existing_edges` for incremental runs — proposals already present
     as (src, dst, relation) are dropped (J11, redb_storage.rs:812-827).
-    Pass `candidates` (from ann_candidates) to reuse a precomputed
-    candidate structure across linker + dedup.
     """
     cfg = config or LinkerConfig()
     run_ts = run_ts or datetime(2026, 1, 1, tzinfo=timezone.utc)
-    ordered = candidates if candidates is not None else ann_candidates(nodes, cfg, use_lsh, lsh_kwargs)
-    proposed = apply_link_rules(_attach_attrs(ordered, linkable(nodes), cfg), cfg)
+    proposed = apply_link_rules(_attach_attrs(candidates, linkable(nodes), cfg), cfg)
     return link_tail(proposed, cfg, run_ts, existing_edges)

@@ -128,7 +128,7 @@ def run_pipeline(
     def _canon() -> tuple[DataFrame, DataFrame, DataFrame]:
         # (nodes', edges', canonical map): both canonical stages and the
         # audit log share one canonicalize
-        pairs = dedup_pairs(nodes, cfg.linker.dedup_threshold, candidates=_cands())
+        pairs = dedup_pairs(_cands(), cfg.linker.dedup_threshold)
         actions = dedup_actions(pairs, nodes, edges)
         return canonicalize(nodes, edges, actions, run_ts=cfg.run_dt)
 

@@ -155,7 +155,7 @@ from cortex_spark.canon.merge import canonicalize
 nodes = spark.read.parquet({work!r} + "/nodes")
 edges = spark.read.parquet({work!r} + "/edges")
 cands = spark.read.parquet({work!r} + "/cands")
-pairs = dedup_pairs(nodes, candidates=cands)
+pairs = dedup_pairs(cands)
 actions = dedup_actions(pairs, nodes, edges)
 cnodes, cedges, _ = canonicalize(nodes, edges, actions)
 cedges.write.mode("overwrite").parquet({work!r} + "/cedges")

@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 
 from cortex_spark.dataops.ann import ann_topk_bruteforce, ann_topk_lsh
 from cortex_spark.dataops.dedup import (
-    embedding_neardup_pairs,
     exact_dedup,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
@@ -135,21 +134,29 @@ def test_simhash_native_matches_python_reference(spark, docs):
 
 
 def test_embedding_neardup_bruteforce_vs_lsh(spark):
+    """The dedup scan finds a planted near-duplicate over exact candidates
+    and over candidate_topk's."""
+    from cortex_spark.canon.dedup import dedup_pairs
+    from cortex_spark.linker.lsh import candidate_topk
+
     rng = np.random.default_rng(5)
     base = rng.standard_normal(32)
     rows = []
     for i in range(40):
         v = rng.standard_normal(32)
-        rows.append((i, [float(x) for x in v / np.linalg.norm(v)]))
+        rows.append((str(i), [float(x) for x in v / np.linalg.norm(v)]))
     # plant a near-dup of row 0
     eps = base / np.linalg.norm(base)
     v0 = np.array(rows[0][1])
     near = v0 + 0.05 * rng.standard_normal(32)
-    rows.append((100, [float(x) for x in near / np.linalg.norm(near)]))
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    bf = {(r["a_id"], r["b_id"]) for r in embedding_neardup_pairs(df, threshold=0.95, use_lsh=False).collect()}
+    rows.append(("100", [float(x) for x in near / np.linalg.norm(near)]))
+    df = spark.createDataFrame(rows, "node_id string, embedding array<float>")
+    exact = ann_topk_bruteforce(df, df, k=10, corpus_id="node_id", query_id="node_id").select(
+        F.col("query_id").alias("a_id"), F.col("neighbor_id").alias("b_id"), "score"
+    )
+    bf = {(r["a_id"], r["b_id"]) for r in dedup_pairs(exact, 0.95).collect()}
     assert ("0", "100") in bf
-    lsh = {(r["a_id"], r["b_id"]) for r in embedding_neardup_pairs(df, threshold=0.95, use_lsh=True).collect()}
+    lsh = {(r["a_id"], r["b_id"]) for r in dedup_pairs(candidate_topk(df), 0.95).collect()}
     assert ("0", "100") in lsh
 
 
@@ -220,6 +227,17 @@ def test_ann_bruteforce_topk_matches_numpy(spark, embs):
     assert got == exp
 
 
+def _true_pairs(d, threshold: float) -> set:
+    """Unordered (node_id, node_id) pairs of a planted-cluster fixture with
+    cosine ≥ threshold, from the exact top-8: a cluster has 8 members, so
+    the cut never drops a true partner."""
+    exact = ann_topk_bruteforce(d, d, k=8, corpus_id="node_id", query_id="node_id")
+    return {
+        tuple(sorted((r["query_id"], r["neighbor_id"])))
+        for r in exact.filter(F.col("score") >= threshold).collect()
+    }
+
+
 def test_lsh_candidate_recall_planted_clusters(spark):
     """J1 recall: the per-node top-10 LSH candidates must catch ≥95% of
     true pairs ≥0.75 cosine.
@@ -229,7 +247,7 @@ def test_lsh_candidate_recall_planted_clusters(spark):
     members with controlled perturbation straddling the 0.75 threshold. A
     node has at most 7 true partners, so k=10 never cuts one off.
     """
-    from cortex_spark.linker.lsh import brute_force_pairs, candidate_topk
+    from cortex_spark.linker.lsh import candidate_topk
 
     rng = np.random.default_rng(17)
     rows = []
@@ -243,9 +261,8 @@ def test_lsh_candidate_recall_planted_clusters(spark):
             rows.append((str(rid), [float(x) for x in v]))
             rid += 1
     d = spark.createDataFrame(rows, "node_id string, embedding array<float>").cache()
-    truth = brute_force_pairs(d).filter("score >= 0.75")
     cand = candidate_topk(d, k=10)
-    t = {(r["a_id"], r["b_id"]) for r in truth.collect()}
+    t = _true_pairs(d, 0.75)
     c = {tuple(sorted((r["a_id"], r["b_id"]))) for r in cand.collect()}
     assert len(t) > 100, f"expected many true pairs, got {len(t)}"
     recall = len(t & c) / len(t)
@@ -476,7 +493,7 @@ def test_candidate_topk_band_boost_recall(spark):
     bands) keeps ≥0.95 candidate recall on planted clusters. rows_cap=3 +
     small target_bucket force the boost at test size (240 rows → rows=6,
     bands=44-ish) — same code path a 10⁸-row corpus takes."""
-    from cortex_spark.linker.lsh import brute_force_pairs, candidate_topk, choose_lsh_params
+    from cortex_spark.linker.lsh import candidate_topk, choose_lsh_params
 
     # max_bucket=48 puts the frozen mean bucket (240/2^3 = 30) past the
     # engagement threshold max_bucket/2 = 24 so the boost turns on at test n
@@ -495,16 +512,12 @@ def test_candidate_topk_band_boost_recall(spark):
             data.append((str(rid), [float(x) for x in v]))
             rid += 1
     d = spark.createDataFrame(data, "node_id string, embedding array<float>").cache()
-    truth = {
-        (r["a_id"], r["b_id"])
-        for r in brute_force_pairs(d).filter("score >= 0.75").collect()
-    }
+    truth = _true_pairs(d, 0.75)
     got = {
         tuple(sorted((r["a_id"], r["b_id"])))
         for r in candidate_topk(d, k=10, target_bucket=4, rows_cap=3, n_rows=240, max_bucket=48)
         .filter("score >= 0.75").collect()
     }
-    truth = {tuple(sorted(t)) for t in truth}
     assert len(truth) > 100
     recall = len(truth & got) / len(truth)
     assert recall >= 0.95, f"band-boost recall {recall} below 0.95 ({len(truth)} true pairs)"

@@ -87,7 +87,7 @@ def test_linker_runs_on_onnx_embeddings(spark, tmp_path):
     from cortex_spark.corpus import synth_pages
     from cortex_spark.embed import embed_udf_onnx
     from cortex_spark.extract.fused import pages_to_nodes_fused
-    from cortex_spark.linker.pipeline import link_nodes
+    from cortex_spark.linker.pipeline import ann_candidates, link_nodes
 
     mp = str(tmp_path / "tiny.onnx")
     _build_tiny_model(mp)
@@ -98,7 +98,8 @@ def test_linker_runs_on_onnx_embeddings(spark, tmp_path):
         "embedding", udf(F.concat_ws(" ", F.col("title"), F.col("body")))
     ).localCheckpoint()
     n_nodes = nodes.count()
-    edges = link_nodes(nodes, use_lsh=True, lsh_kwargs={"dim": 64, "n_rows": n_nodes})
+    lsh_kwargs = {"dim": 64, "n_rows": n_nodes}
+    edges = link_nodes(nodes, candidates=ann_candidates(nodes, lsh_kwargs=lsh_kwargs))
     e1 = edges.localCheckpoint()
     sig = e1.select(
         F.sum(F.xxhash64("src", "dst", "relation").cast("decimal(38,0)")).alias("s"),
@@ -106,7 +107,7 @@ def test_linker_runs_on_onnx_embeddings(spark, tmp_path):
     ).first()
     assert sig["n"] > 0, "ONNX-backed linker produced no edges"
     # determinism: a second run over the same input is bit-identical
-    e2 = link_nodes(nodes, use_lsh=True, lsh_kwargs={"dim": 64, "n_rows": n_nodes})
+    e2 = link_nodes(nodes, candidates=ann_candidates(nodes, lsh_kwargs=lsh_kwargs))
     sig2 = e2.select(
         F.sum(F.xxhash64("src", "dst", "relation").cast("decimal(38,0)")).alias("s"),
         F.count(F.lit(1)).alias("n"),

@@ -91,7 +91,7 @@ def _bench_chain(spark, pages):
     cands = ann_candidates(nodes, lsh_kwargs={"dim": 64, "n_rows": n_nodes}).localCheckpoint()
     edges = link_nodes(nodes, candidates=cands).localCheckpoint()
     n_edges = edges.count()
-    pairs = dedup_pairs(nodes, candidates=cands)
+    pairs = dedup_pairs(cands)
     actions = dedup_actions(pairs, nodes, edges)
     cnodes, cedges, _ = canonicalize(nodes, edges, actions)
     return {"nodes": n_nodes, "edges": n_edges, "canonical_edges": cedges.count()}, _checksum(cedges)

@@ -12,7 +12,7 @@ from cortex_spark.corpus import synth_pages
 from cortex_spark.decay import apply_decay, retention_sweep
 from cortex_spark.extract.pipeline import pages_to_nodes
 from cortex_spark.hybrid import hybrid_search, vector_search
-from cortex_spark.linker.pipeline import link_nodes
+from cortex_spark.linker.pipeline import ann_candidates, link_nodes
 from tests.conftest import make_edge, make_node
 
 
@@ -20,7 +20,7 @@ from tests.conftest import make_edge, make_node
 def small_world(spark):
     pages = synth_pages(spark, 80, seed=42)
     nodes = pages_to_nodes(pages, embed_dim=64).cache()
-    edges = link_nodes(nodes, use_lsh=True).cache()
+    edges = link_nodes(nodes, candidates=ann_candidates(nodes)).cache()
     return nodes, edges
 
 
@@ -28,7 +28,7 @@ def test_pipeline_deterministic(spark, small_world):
     nodes, edges = small_world
     pages2 = synth_pages(spark, 80, seed=42)
     nodes2 = pages_to_nodes(pages2, embed_dim=64)
-    edges2 = link_nodes(nodes2, use_lsh=True)
+    edges2 = link_nodes(nodes2, candidates=ann_candidates(nodes2))
     h1 = edges.select(F.sum(F.xxhash64("src", "dst", "relation").cast("decimal(38,0)"))).first()[0]
     h2 = edges2.select(F.sum(F.xxhash64("src", "dst", "relation").cast("decimal(38,0)"))).first()[0]
     assert h1 == h2 and edges.count() == edges2.count()
@@ -41,11 +41,11 @@ def test_lsh_triples_match_bruteforce_triples(spark):
     nodes = pages_to_nodes(pages, embed_dim=64).cache()
     exact = {
         (r["src"], r["dst"], r["relation"])
-        for r in link_nodes(nodes, use_lsh=False).select("src", "dst", "relation").collect()
+        for r in link_nodes(nodes, candidates=ann_candidates(nodes, use_lsh=False)).select("src", "dst", "relation").collect()
     }
     approx = {
         (r["src"], r["dst"], r["relation"])
-        for r in link_nodes(nodes, use_lsh=True).select("src", "dst", "relation").collect()
+        for r in link_nodes(nodes, candidates=ann_candidates(nodes)).select("src", "dst", "relation").collect()
     }
     precision = len(exact & approx) / max(len(approx), 1)
     recall = len(exact & approx) / max(len(exact), 1)
@@ -63,8 +63,9 @@ def test_incremental_anti_join(spark):
     pages = synth_pages(spark, 50, seed=3)
     nodes = pages_to_nodes(pages, embed_dim=64).cache()
     cfg = LinkerConfig(max_edges_per_node=10**9)
-    edges = link_nodes(nodes, cfg, use_lsh=True).cache()
-    again = link_nodes(nodes, cfg, existing_edges=edges, use_lsh=True)
+    cands = ann_candidates(nodes, cfg)
+    edges = link_nodes(nodes, cfg, candidates=cands).cache()
+    again = link_nodes(nodes, cfg, existing_edges=edges, candidates=cands)
     assert again.count() == 0
 
 

@@ -189,6 +189,25 @@ def test_audit_read_raises_on_a_corrupt_log(spark, tmp_path):
         log.read().count()
 
 
+def test_pipeline_audit_rows_raise_on_a_corrupt_log(spark, tmp_path):
+    """summary["audit_rows"] is the log's row count; a corrupt log file
+    fails the summary as it fails AuditLog.read."""
+    import pyarrow as pa
+
+    from cortex_spark.audit import AuditLog
+    from cortex_spark.corpus import synth_pages
+    from cortex_spark.pipeline.run import PipelineConfig, run_pipeline
+
+    out = tmp_path / "kg"
+    pages = synth_pages(spark, 6, seed=1)
+    cfg = PipelineConfig(embed_dim=32)
+    summary = run_pipeline(spark, pages, str(out), cfg)
+    assert summary["audit_rows"] == AuditLog(str(out / "audit"), spark).read().count() > 0
+    (out / "audit" / "part-x.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(pa.ArrowInvalid):
+        run_pipeline(spark, pages, str(out), cfg)  # every stage resumes
+
+
 def test_canonicalization_audit_merge_and_tombstone(spark, nodes_df_factory, edges_df_factory):
     """merge → node.merged + node.deleted (tombstone) + edge.created rows."""
     from cortex_spark.audit import canonicalization_audit
@@ -261,9 +280,16 @@ def _clustered_nodes(n_clusters: int, per_cluster: int, dim: int = 32, noise: fl
     return rows
 
 
-def test_gate_conflict_lsh_matches_bruteforce(spark, nodes_df_factory):
-    from cortex_spark.gate import conflict_verdicts
+def _verdicts(incoming, existing, monkeypatch, lsh: bool) -> set:
+    """conflict_verdicts with its path forced by the incoming-size rule:
+    LSH_ABOVE_INCOMING patched to 0 sends any batch through the LSH probe."""
+    from cortex_spark import gate
 
+    monkeypatch.setattr(gate, "LSH_ABOVE_INCOMING", 0 if lsh else 10**9)
+    return {(r["node_id"], r["gate_reason"]) for r in gate.conflict_verdicts(incoming, existing).collect()}
+
+
+def test_gate_conflict_lsh_matches_bruteforce(spark, nodes_df_factory, monkeypatch):
     rows = _clustered_nodes(12, 4)
     # existing = first 3 of each cluster; incoming = the 4th (a near-dup)
     existing = nodes_df_factory(
@@ -272,8 +298,8 @@ def test_gate_conflict_lsh_matches_bruteforce(spark, nodes_df_factory):
     incoming = nodes_df_factory(
         [make_node(rid, embedding=vec, source_agent=f"agent{c}") for rid, c, vec in rows if rid.endswith("_3")]
     )
-    exact = {(r["node_id"], r["gate_reason"]) for r in conflict_verdicts(incoming, existing, use_lsh=False).collect()}
-    approx = {(r["node_id"], r["gate_reason"]) for r in conflict_verdicts(incoming, existing, use_lsh=True).collect()}
+    exact = _verdicts(incoming, existing, monkeypatch, lsh=False)
+    approx = _verdicts(incoming, existing, monkeypatch, lsh=True)
     assert len(exact) == 12  # every incoming node is a near-duplicate
     recall = len(exact & approx) / len(exact)
     assert recall >= 0.95, f"LSH gate recall {recall}"
@@ -283,7 +309,6 @@ def test_gate_lsh_scores_hot_buckets_past_the_cap(spark, nodes_df_factory, monke
     """The gate's LSH path keeps every bucket whole: with the probe's
     hot-bucket cap patched below the fixture's fullest bucket, its verdicts
     are unchanged and still match brute force."""
-    from cortex_spark.gate import conflict_verdicts
     from cortex_spark.linker import lsh
 
     rows = _clustered_nodes(12, 4)
@@ -299,13 +324,10 @@ def test_gate_lsh_scores_hot_buckets_past_the_cap(spark, nodes_df_factory, monke
     cap = 2
     assert max(sizes.values()) > cap
 
-    def verdicts(use_lsh):
-        return {(r["node_id"], r["gate_reason"]) for r in conflict_verdicts(incoming, existing, use_lsh=use_lsh).collect()}
-
-    uncapped = verdicts(True)
-    exact = verdicts(False)
+    uncapped = _verdicts(incoming, existing, monkeypatch, lsh=True)
+    exact = _verdicts(incoming, existing, monkeypatch, lsh=False)
     monkeypatch.setattr(lsh, "DEFAULT_MAX_BUCKET", cap)
-    approx = verdicts(True)
+    approx = _verdicts(incoming, existing, monkeypatch, lsh=True)
     assert approx == uncapped
     assert len(exact & approx) / len(exact) >= 0.95
 

@@ -17,9 +17,9 @@ mini-transformer (goldens/mini_transformer_w.npz, MiniLM-shaped:
 3. CENTERED signatures (band_sig_udf(center=…)) restore the isotropic
    bucket model (mean ≈ n/2^rows) and the per-pair collision model
    recall(s′) = 1-(1-p^r)^b measured on centered similarities,
-4. the full engine path — candidate_topk(center="auto") and
-   link_nodes(lsh_kwargs={"center": "auto"}) vs the exact all-pairs
-   linker — holds candidate recall and edge P/R ≥ 0.95 (the north-rule
+4. the full engine path — candidate_topk(center="auto") and link_nodes
+   over ann_candidates(lsh_kwargs={"center": "auto"}) vs the exact
+   candidates — holds candidate recall and edge P/R ≥ 0.95 (the north-rule
    bar) on transformer embeddings end-to-end.
 
 The same weights export to ONNX via scripts/export_transformer_onnx.py
@@ -181,7 +181,7 @@ def test_full_linker_lsh_vs_exact_on_transformer_embeddings(spark):
     test_pipeline_e2e pins for hashing geometry)."""
     from cortex_spark.corpus import pages_from_documents
     from cortex_spark.extract.fused import pages_to_nodes_fused
-    from cortex_spark.linker.pipeline import link_nodes
+    from cortex_spark.linker.pipeline import ann_candidates, link_nodes
     from cortex_spark.linker.rules import LinkerConfig
 
     pages = pages_from_documents(spark, SF001).filter(
@@ -194,10 +194,10 @@ def test_full_linker_lsh_vs_exact_on_transformer_embeddings(spark):
     )
     n = nodes.count()
     cfg = LinkerConfig(max_edges_per_node=8)
-    exact = link_nodes(nodes, config=cfg, use_lsh=False)
+    exact = link_nodes(nodes, config=cfg, candidates=ann_candidates(nodes, cfg, use_lsh=False))
     lsh = link_nodes(
-        nodes, config=cfg, use_lsh=True,
-        lsh_kwargs={"dim": 64, "n_rows": n, "center": "auto"},
+        nodes, config=cfg,
+        candidates=ann_candidates(nodes, cfg, lsh_kwargs={"dim": 64, "n_rows": n, "center": "auto"}),
     )
     e = {(r["src"], r["dst"], r["relation"]) for r in exact.collect()}
     l = {(r["src"], r["dst"], r["relation"]) for r in lsh.collect()}
